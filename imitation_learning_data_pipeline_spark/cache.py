@@ -12,9 +12,6 @@ builder invocation EVICTS all pins from prior invocations, so at most
 one plan's pins are ever resident. Evicting a pin is always
 correctness-safe for these frames — unpersist() drops the cache, not the
 lineage; a still-unmaterialized earlier plan simply recomputes.
-(The discover listing snapshot is NOT managed here: its pin carries
-eager-snapshot semantics and has its own bounded registry in
-pipeline/discover.py.)
 """
 
 from __future__ import annotations

@@ -45,11 +45,26 @@ def _spark(app: str) -> SparkSession:
 
 
 def cmd_discover(args: argparse.Namespace) -> int:
+    from .pipeline.compact import (
+        _fs,
+        _recover_staged_swap,
+        _staged_swap_in,
+        _staged_swap_write_journal,
+    )
     from .pipeline.discover import discover, discover_delta
 
     spark = _spark("discover")
+    # Crash-safe manifest swap (discover_refactored.py:23-27 writes tmp +
+    # rename): stage to a sibling dir, land a journal as the commit
+    # point, then swap. A run that crashed mid-swap is finished here
+    # (journal present) or its staging discarded, before the manifest is
+    # read as this run's prior state.
+    fs, _ = _fs(spark, args.manifest)
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    tmp, pending = args.manifest + ".tmp", args.manifest + ".pending"
+    _recover_staged_swap(fs, jpath, args.manifest, tmp, pending)
     prev = None
-    if os.path.exists(args.manifest):
+    if fs.exists(jpath(args.manifest)):
         prev = spark.read.parquet(args.manifest)
 
     manifest = discover(
@@ -64,16 +79,14 @@ def cmd_discover(args: argparse.Namespace) -> int:
         # (discover_refactored.py:86-89, scripts/neura.py:51-53).
         chunks = [c.strip() for c in args.only_chunks.split(",") if c.strip()]
         manifest = manifest.filter(F.col("chunk").isin(chunks))
-    manifest = manifest.orderBy("chunk", "episode_index")
-
-    # Atomic manifest write: tmp dir + rename (discover_refactored.py:23-27).
-    tmp = args.manifest + ".tmp"
+    # Within a key, a DELETED tombstone sorts before its ORPHAN_VIDEO row.
+    manifest = manifest.orderBy(
+        "chunk", "episode_index", F.col("status") == "ORPHAN_VIDEO"
+    )
     manifest.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(args.manifest):
-        import shutil
-
-        shutil.rmtree(args.manifest)
-    os.replace(tmp, args.manifest)
+    _staged_swap_write_journal(fs, jpath, pending)
+    _staged_swap_in(fs, jpath, args.manifest, tmp)
+    fs.delete(jpath(pending), False)
 
     done = spark.read.parquet(args.manifest)
     delta = done if args.print_all else discover_delta(done)
@@ -209,7 +222,11 @@ def cmd_materialize(args: argparse.Namespace) -> int:
     placed_n = 0
     if args.videos_root:
         mode = {"manifest-only": "manifest"}.get(args.link_videos, args.link_videos)
-        placed_n = place_videos(index, args.videos_root, f"{args.out_dir}/data", mode)
+        # Videos go to a sibling tree, so `data` stays a parquet-only
+        # table that a plain spark.read.parquet can open.
+        placed_n = place_videos(
+            index, args.videos_root, f"{args.out_dir}/videos", mode
+        )
     print(
         json.dumps(
             {"out": args.out_dir, "split_counts": counts, "videos_placed": placed_n}

@@ -3,8 +3,13 @@
 Reference: steps/discover_refactored.py:79-170 — a thread-pool loop that
 stats/hashes each file, then Polars joins. Here the listing itself is a
 DataFrame (`binaryFile` source), fingerprinting is a JVM-side sha2 over
-head+tail samples, and the diff/delete/orphan logic is the join / anti
-join / unionByName trio — one declarative plan, no loops.
+head+tail samples, and the diff/delete/orphan logic is two full outer
+joins — one declarative plan, no loops.
+
+Each source is read once per plan: one binaryFile scan of the episode
+parquets (listing snapshot, lengths and fingerprints), one metadata-only
+scan of the videos aggregated per episode, and one join against the
+prior manifest.
 
 Scale notes: `binaryFile` prunes the `content` column when unselected, so
 the video listing never reads bytes; fingerprints sample head+tail 64 KiB
@@ -15,6 +20,7 @@ store (ETag) — the diff plan below is unchanged either way.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,26 +36,7 @@ ACTIONABLE_STATUSES = [
 
 _EP_RE = r"episode_(\d+)\.(parquet|mp4)$"
 _CHUNK_RE = r"(chunk-\d+)"
-
-# The eager listing snapshot below must stay cached until the caller
-# materializes the manifest, so it cannot be unpersisted inside this
-# module synchronously. To keep long-lived sessions (streaming
-# reconciliation loops, contract runs) from accumulating cached
-# relations, each new listing evicts the previous one — at most ONE
-# snapshot is ever pinned.
-_PINNED_LISTINGS: list[DataFrame] = []
-
-
-def _pin_listing(df: DataFrame) -> DataFrame:
-    clear_listing_cache()
-    _PINNED_LISTINGS.append(df.persist())
-    return df
-
-
-def clear_listing_cache() -> None:
-    """Unpersist any listing snapshot still pinned by a prior discover."""
-    while _PINNED_LISTINGS:
-        _PINNED_LISTINGS.pop().unpersist()
+_KEYS = ["episode_index", "chunk"]
 
 
 def _parse_path(df: DataFrame) -> DataFrame:
@@ -59,6 +46,25 @@ def _parse_path(df: DataFrame) -> DataFrame:
             "chunk": F.regexp_extract("path", _CHUNK_RE, 1),
         }
     )
+
+
+def _listed_files(scan: DataFrame) -> tuple[list[str], list[int]]:
+    """Paths and lengths of every file in a file-source scan's index.
+
+    Spark lists a file source when the DataFrame is created, and every
+    execution of that DataFrame reads exactly the listed files — so this
+    is the scan's own listing snapshot, read at plan time with no Spark
+    job. A path is Hadoop's ``Path.toString()``, the string binaryFile
+    puts in its ``path`` column.
+    """
+    files = scan._jdf.queryExecution().analyzed().relation().location().allFiles()
+    it = files.iterator()
+    paths, lengths = [], []
+    while it.hasNext():
+        status = it.next()
+        paths.append(status.getPath().toString())
+        lengths.append(status.getLen())
+    return paths, lengths
 
 
 def list_episode_parquets(
@@ -73,41 +79,41 @@ def list_episode_parquets(
     (discover_refactored.py:92-96) to the source's modifiedAfter option.
 
     ERROR semantics (reference discover_refactored.py:62-76: fingerprint
-    failure → ERROR row, never a crashed run): the metadata LISTING and
-    the content fingerprint are two separate reads. The fingerprint read
-    tolerates files that vanish or turn unreadable between listing and
-    read (ignoreMissingFiles/ignoreCorruptFiles), and a listed file with
-    no surviving fingerprint row comes back with fingerprint NULL — the
-    discover() status CASE maps that to ERROR.
+    failure → ERROR row, never a crashed run): the listing is fixed when
+    this function runs, mirroring the reference's materialized glob
+    before fingerprinting (discover_refactored.py:88-97). The content
+    read tolerates files that vanish or turn unreadable after that
+    (ignoreMissingFiles/ignoreCorruptFiles), and a listed file with no
+    surviving fingerprint row comes back with fingerprint NULL — the
+    discover() status CASE maps that to ERROR. One binaryFile scan
+    gives both: its plan-time file index is the listing, and its rows
+    are the fingerprints.
     """
-    def reader():
-        # Missing/corrupt tolerance is scoped to THESE reads via the
-        # generic file-source options — never set session-wide, which
-        # would silently mask data loss in every later read of the
-        # session (validate/stats/align, other contract queries).
-        r = (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", "episode_*.parquet")
-            .option("ignoreMissingFiles", "true")
-            .option("ignoreCorruptFiles", "true")
-        )
-        return r.option("modifiedAfter", since) if since else r
-
-    # Metadata-only listing: binaryFile prunes `content` when unselected.
-    # Snapshotted EAGERLY (persist + count), mirroring the reference's
-    # materialized glob before fingerprinting (discover_refactored.py:
-    # 88-97): without the pin, a file vanishing mid-job silently drops
-    # from this subtree too and the ERROR classification below can never
-    # fire — lazy re-evaluation would re-list.
-    listing = _pin_listing(
-        _parse_path(reader().load(f"{root}/data/*")).select(
-            "episode_index",
-            "chunk",
-            F.col("path").alias("parquet_uri"),
-            F.col("length").alias("bytes_parquet"),
-        )
+    # Missing/corrupt tolerance is scoped to THIS read via the generic
+    # file-source options — never set session-wide, which would silently
+    # mask data loss in every later read of the session
+    # (validate/stats/align, other contract queries).
+    reader = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "episode_*.parquet")
+        .option("ignoreMissingFiles", "true")
+        .option("ignoreCorruptFiles", "true")
     )
-    listing.count()
+    if since:
+        reader = reader.option("modifiedAfter", since)
+    scan = reader.load(f"{root}/data/*")
+
+    paths, lengths = _listed_files(scan)
+    # An Arrow table becomes a driver-side LocalRelation: no Python
+    # worker, and nothing to recompute when the plan re-reads it.
+    files = pa.table(
+        {"path": pa.array(paths, pa.string()), "length": pa.array(lengths, pa.int64())}
+    )
+    listing = _parse_path(spark.createDataFrame(files)).select(
+        *_KEYS,
+        F.col("path").alias("parquet_uri"),
+        F.col("length").alias("bytes_parquet"),
+    )
 
     if full_hash:
         # --full-hash opt-in (scripts/neura.py:33-34, fingerprint.py:34):
@@ -124,17 +130,13 @@ def list_episode_parquets(
             256,
         )
         algo = "sha256-head-tail"
-    fingerprints = reader().load(f"{root}/data/*").select(
-        F.col("path").alias("parquet_uri"), fp.alias("fingerprint")
+    fingerprints = scan.select(
+        F.col("path").alias("parquet_uri"),
+        fp.alias("fingerprint"),
+        F.lit(algo).alias("fingerprint_algo"),
     )
-
     return listing.join(fingerprints, "parquet_uri", "left").select(
-        "episode_index",
-        "chunk",
-        "parquet_uri",
-        "bytes_parquet",
-        "fingerprint",
-        F.when(F.col("fingerprint").isNotNull(), algo).alias("fingerprint_algo"),
+        *_KEYS, "parquet_uri", "bytes_parquet", "fingerprint", "fingerprint_algo"
     )
 
 
@@ -147,7 +149,25 @@ def list_videos(spark: SparkSession, root: str) -> DataFrame:
     )
     cam = F.regexp_extract("path", r"/(cam_[a-z]+)/", 1)
     return _parse_path(raw).select(
-        "episode_index", "chunk", cam.alias("camera"), F.col("path").alias("video_uri")
+        *_KEYS, cam.alias("camera"), F.col("path").alias("video_uri")
+    )
+
+
+def _videos_per_episode(spark: SparkSession, root: str) -> DataFrame:
+    """One row per (episode_index, chunk) that has any video: its front
+    and wrist URIs, and the least URI over every camera."""
+
+    def camera_uri(camera: str):
+        return F.max(F.when(F.col("camera") == camera, F.col("video_uri")))
+
+    return (
+        list_videos(spark, root)
+        .groupBy(*_KEYS)
+        .agg(
+            camera_uri("cam_front").alias("video_front_uri"),
+            camera_uri("cam_wrist").alias("video_wrist_uri"),
+            F.min("video_uri").alias("any_video_uri"),
+        )
     )
 
 
@@ -167,64 +187,65 @@ def discover(
     (in previous manifest, gone now), ORPHAN_VIDEO (video without
     parquet). The reference's CHANGED enum member was unreachable
     (SURVEY §8.2); here it is real.
+
+    One row per listed parquet, one per video-only key, and one DELETED
+    row per previous row whose key has no listed parquet: a previous
+    ORPHAN_VIDEO key thus yields a DELETED row and a new ORPHAN_VIDEO
+    row.
     """
-    eps = list_episode_parquets(spark, root, since=since, full_hash=full_hash)
-    vids = list_videos(spark, root)
+    episodes = list_episode_parquets(spark, root, since, full_hash)
+    videos = _videos_per_episode(spark, root)
 
-    front = vids.filter(F.col("camera") == "cam_front").select(
-        "episode_index", "chunk", F.col("video_uri").alias("video_front_uri")
+    listed = F.col("parquet_uri").isNotNull()
+    front, wrist = F.col("video_front_uri"), F.col("video_wrist_uri")
+    # An ORPHAN_VIDEO row (a video key with no listed parquet) names its
+    # least video URI and leaves every other column NULL.
+    found = episodes.join(videos, _KEYS, "full").select(
+        *_KEYS,
+        "parquet_uri",
+        "bytes_parquet",
+        "fingerprint",
+        "fingerprint_algo",
+        F.when(listed, front)
+        .otherwise(F.col("any_video_uri"))
+        .alias("video_front_uri"),
+        F.when(listed, wrist).alias("video_wrist_uri"),
+        F.when(listed, front.isNotNull()).alias("exists_front"),
+        F.when(listed, wrist.isNotNull()).alias("exists_wrist"),
+        F.when(listed, F.current_timestamp()).alias("discovered_at"),
+        F.when(~listed, "ORPHAN_VIDEO")
+        # ERROR next: a listed file whose fingerprint read failed
+        # (discover_refactored.py:62-76 → kept by the diff CASE
+        # :117-122) outranks every other classification.
+        .when(F.col("fingerprint").isNull(), "ERROR")
+        .when(front.isNull() | wrist.isNull(), "MISSING_SIDE")
+        .otherwise("NEW")
+        .alias("status"),
     )
-    wrist = vids.filter(F.col("camera") == "cam_wrist").select(
-        "episode_index", "chunk", F.col("video_uri").alias("video_wrist_uri")
-    )
-    keys = ["episode_index", "chunk"]
-    cur = (
-        eps.join(front, keys, "left")
-        .join(wrist, keys, "left")
-        .withColumns(
-            {
-                "exists_front": F.col("video_front_uri").isNotNull(),
-                "exists_wrist": F.col("video_wrist_uri").isNotNull(),
-                "discovered_at": F.current_timestamp(),
-            }
-        )
-        .withColumn(
-            "status",
-            # ERROR first: a listed file whose fingerprint read failed
-            # (discover_refactored.py:62-76 → kept by the diff CASE
-            # :117-122) outranks every other classification.
-            F.when(F.col("fingerprint").isNull(), "ERROR")
-            .when(~F.col("exists_front") | ~F.col("exists_wrist"), "MISSING_SIDE")
-            .otherwise("NEW"),
-        )
-    )
+    if prev_manifest is None:
+        return found
 
-    if prev_manifest is not None:
-        prev_fp = prev_manifest.select(
-            *keys, F.col("fingerprint").alias("prev_fingerprint")
-        )
-        cur = cur.join(prev_fp, keys, "left").withColumn(
-            "status",
-            F.when(F.col("status").isin("ERROR", "MISSING_SIDE"), F.col("status"))
-            .when(F.col("prev_fingerprint").isNull(), "NEW")
-            .when(F.col("fingerprint") == F.col("prev_fingerprint"), "UNCHANGED")
-            .otherwise("CHANGED"),
-        ).drop("prev_fingerprint")
-        deleted = (
-            prev_manifest.select(*keys)
-            .join(cur.select(*keys), keys, "left_anti")
-            .withColumn("status", F.lit("DELETED"))
-        )
-        cur = cur.unionByName(deleted, allowMissingColumns=True)
-
-    orphans = (
-        vids.select(*keys, "video_uri")
-        .join(eps.select(*keys), keys, "left_anti")
-        .groupBy(*keys)
-        .agg(F.min("video_uri").alias("video_front_uri"))
-        .withColumn("status", F.lit("ORPHAN_VIDEO"))
+    # One full outer join gives both the diff of listed keys and the
+    # DELETED tombstones: previous rows matching no listed parquet come
+    # back with every current column NULL. The previous manifest is the
+    # LEFT side, so for a key with both a tombstone and a current orphan
+    # the sort-merge join emits the DELETED row first.
+    prev = prev_manifest.select(
+        *[F.col(k).alias(f"prev_{k}") for k in _KEYS],
+        F.col("fingerprint").alias("prev_fingerprint"),
     )
-    return cur.unionByName(orphans, allowMissingColumns=True)
+    on = [F.col(f"prev_{k}") == found[k] for k in _KEYS] + [listed]
+    status = F.col("status")
+    return prev.join(found, on, "full").select(
+        *[F.coalesce(found[k], F.col(f"prev_{k}")).alias(k) for k in _KEYS],
+        *[c for c in found.columns if c not in (*_KEYS, "status")],
+        F.when(status.isNull(), "DELETED")
+        .when(status != "NEW", status)
+        .when(F.col("prev_fingerprint").isNull(), "NEW")
+        .when(F.col("fingerprint") == F.col("prev_fingerprint"), "UNCHANGED")
+        .otherwise("CHANGED")
+        .alias("status"),
+    )
 
 
 def discover_delta(manifest: DataFrame) -> DataFrame:

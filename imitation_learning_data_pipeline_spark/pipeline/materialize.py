@@ -80,9 +80,13 @@ def materialize(
     # on disk. Returning a read of the written index parquet keeps the
     # returned frame O(episodes) to recompute however often callers
     # aggregate it.
+    # The read-back takes its schema from `assigned`: a partitioned write
+    # of zero rows leaves no data file to infer one from, and an empty
+    # input must still yield an empty index.
     spark = frames.sparkSession
     index = (
-        spark.read.parquet(f"{out_dir}/data")
+        spark.read.schema(assigned.schema)
+        .parquet(f"{out_dir}/data")
         .groupBy("split", "chunk", "episode_index")
         .agg(F.count("*").alias("rows"))
     )

@@ -19,14 +19,20 @@ from .validate import validation_summary
 
 
 def write_validation_outputs(report: DataFrame, out_dir: str) -> dict:
-    """Write all four validate-stage artifacts; return the summary dict."""
+    """Write all four validate-stage artifacts; return the summary dict.
+
+    The per-frame report plan runs once, for ``episodes.parquet``; the
+    other three artifacts read that written report back (one row per
+    episode).
+    """
     os.makedirs(out_dir, exist_ok=True)
 
     report.write.mode("overwrite").parquet(f"{out_dir}/episodes.parquet")
+    written = report.sparkSession.read.parquet(f"{out_dir}/episodes.parquet")
 
     # failures.jsonl — failed episodes with their check flags (K5).
     (
-        report.filter(~F.col("ok"))
+        written.filter(~F.col("ok"))
         .write.mode("overwrite")
         .json(f"{out_dir}/failures.jsonl")
     )
@@ -34,14 +40,14 @@ def write_validation_outputs(report: DataFrame, out_dir: str) -> dict:
     # validated_episodes.jsonl — projected pass list (K5, the projection
     # at validate_from_manifest_refactored.py:101-107).
     (
-        report.filter(F.col("ok"))
+        written.filter(F.col("ok"))
         .select("episode_index", "n_rows")
         .write.mode("overwrite")
         .json(f"{out_dir}/validated_episodes.jsonl")
     )
 
     # summary.yaml — one-row aggregate formatted driver-side (K6).
-    s = validation_summary(report).collect()[0]
+    s = validation_summary(written).collect()[0]
     summary = {"total": s.total, "ok": s.ok, "fail": s.fail}
     with open(f"{out_dir}/summary.yaml", "w") as f:
         for k, v in summary.items():

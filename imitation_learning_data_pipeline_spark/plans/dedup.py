@@ -1904,6 +1904,12 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _label_sum(labels: DataFrame):
+    """Sum of the label column as decimal(38,0): a bigint sum of 64-bit
+    ids (hashed doc ids near 2^63) overflows."""
+    return labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
+
+
 def connected_components(
     pairs: DataFrame, max_iters: int = _CC_MAX_ITERS
 ) -> DataFrame:
@@ -1949,7 +1955,7 @@ def connected_components(
         .withColumn("label", F.col("doc"))
         .localCheckpoint()
     )
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
+    prev_sum = _label_sum(labels)
     converged = False
     for _ in range(max_iters):
         nbr_min = (
@@ -1981,7 +1987,7 @@ def connected_components(
             )
             .localCheckpoint()
         )
-        new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
+        new_sum = _label_sum(new_labels)
         labels = new_labels
         if new_sum == prev_sum:
             converged = True

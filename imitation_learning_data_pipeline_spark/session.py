@@ -12,6 +12,29 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Share of physical memory the driver JVM's heap may take by default.
+DRIVER_HEAP_FRACTION = 0.6
+
+
+def default_driver_memory(meminfo: str) -> str:
+    """Driver heap for a host, from the text of ``/proc/meminfo``:
+    DRIVER_HEAP_FRACTION of MemTotal, in MiB (at least 1 GiB)."""
+    for line in meminfo.splitlines():
+        key, _, value = line.partition(":")
+        if key == "MemTotal":
+            total_kib = int(value.split()[0])
+            return f"{max(1024, int(total_kib * DRIVER_HEAP_FRACTION) // 1024)}m"
+    raise ValueError("no MemTotal line in meminfo")
+
+
+def _driver_memory() -> str:
+    """SPARK_GRAFT_DRIVER_MEM if set, else sized to this host."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    with open("/proc/meminfo") as f:
+        return default_driver_memory(f.read())
+
 
 def get_spark(
     app_name: str = "imitation_learning_data_pipeline_spark",
@@ -39,7 +62,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Spark 4 routes lower()/upper() through ICU for full Unicode case

@@ -185,6 +185,44 @@ def test_full_cli_chain(spark, lerobot_fixture, workdir, capsys):
     assert "split=train" in splits
 
 
+def test_discover_manifest_survives_a_failed_swap(
+    spark, lerobot_fixture, tmp_path, capsys, monkeypatch
+):
+    """A rename that raises while the new manifest is swapped in must not
+    lose the previous manifest: it still reads back, and the next run
+    diffs against it instead of reporting every episode NEW. Both
+    rename routes a swap can take raise here: the Python-level
+    os.replace and the Hadoop FileSystem swap-in."""
+    from imitation_learning_data_pipeline_spark.pipeline import compact
+
+    root = str(lerobot_fixture)
+    manifest = str(tmp_path / "manifest" / "episodes.parquet")
+    argv = ["discover", "--data-root", root, "--manifest", manifest]
+    rc, _ = _run(capsys, argv)
+    assert rc == 0
+    before = sorted(
+        (r.episode_index, r.status) for r in spark.read.parquet(manifest).collect()
+    )
+
+    def failing_rename(*args, **kwargs):
+        raise OSError("injected rename failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", failing_rename)
+        m.setattr(compact, "_staged_swap_in", failing_rename)
+        with pytest.raises(OSError, match="injected rename failure"):
+            _run(capsys, argv)
+
+    after = sorted(
+        (r.episode_index, r.status) for r in spark.read.parquet(manifest).collect()
+    )
+    assert after == before
+    rc, out = _run(capsys, argv)
+    assert rc == 0
+    assert json.loads(out[-1])["delta_counts"].get("NEW", 0) == 0
+    assert sorted(os.listdir(tmp_path / "manifest")) == ["episodes.parquet"]
+
+
 def test_materialize_no_full_index_collect(spark, tmp_path, capsys, monkeypatch):
     """The materialize CLI path must never pull the per-episode index to
     the driver (round-2 verdict "What's wrong #4"): split counts are a
@@ -227,11 +265,14 @@ def test_materialize_no_full_index_collect(spark, tmp_path, capsys, monkeypatch)
         assert sum(res["split_counts"].values()) == 23  # 24 minus 1 orphan
         assert res["videos_placed"] > 0
         assert sizes and max(sizes) <= 3, f"driver-side index collect in {mode}: {sizes}"
-    # symlink mode actually placed links on disk
+    # symlink mode actually placed links on disk, in the videos tree
     links = []
-    for dirpath, _, files in os.walk(str(tmp_path / "final_s" / "data")):
+    for dirpath, _, files in os.walk(str(tmp_path / "final_s" / "videos")):
         links += [os.path.join(dirpath, f) for f in files if f.endswith(".mp4")]
     assert links and all(os.path.islink(p) for p in links)
+    # ...which leaves the data tree a plain parquet table
+    plain = spark.read.parquet(str(tmp_path / "final_s" / "data"))
+    assert plain.count() == spark.read.parquet(f"{norm}/data").count()
 
 
 def test_sidecar_stats_equal_frames_stats_on_synthetic_tree(spark, tmp_path):

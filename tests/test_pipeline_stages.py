@@ -458,3 +458,13 @@ class TestMaterialize:
             .collect()
         )
         assert all(r.n == 1 for r in per_ep)
+
+    def test_empty_frame_gives_empty_index(self, spark, frames, tmp_path):
+        """A zero-row input writes no data file; the index must still
+        come back, empty and with its columns."""
+        from imitation_learning_data_pipeline_spark.pipeline import materialize
+
+        index = materialize(frames.limit(0), str(tmp_path / "out"))
+        assert index.columns == ["split", "chunk", "episode_index", "rows"]
+        assert index.count() == 0
+

@@ -664,6 +664,31 @@ class TestConnectedComponents:
             200: (100, 2),
         }
 
+    def test_ids_near_2_pow_62_do_not_overflow(self, spark):
+        """Hashed doc ids (xxhash64 from ingest-warc) are near the top of
+        the 64-bit range; the convergence check sums labels and must not
+        overflow a bigint."""
+        from imitation_learning_data_pipeline_spark.plans.dedup import (
+            connected_components,
+        )
+
+        base = 2**62
+        pairs = spark.createDataFrame(
+            [(base + 5, base + 9), (base + 9, base + 7), (base + 100, base + 200)],
+            "doc_a long, doc_b long",
+        )
+        got = {
+            r.doc_id - base: (r.cluster_id - base, r.cluster_size)
+            for r in connected_components(pairs).collect()
+        }
+        assert got == {
+            5: (5, 3),
+            7: (5, 3),
+            9: (5, 3),
+            100: (100, 2),
+            200: (100, 2),
+        }
+
     @pytest.mark.parametrize("seed", [7, 42, 1337])
     def test_random_graphs_match_union_find_reference(self, spark, seed):
         """Distributed labels == a trivial sequential union-find on
