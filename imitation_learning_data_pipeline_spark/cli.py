@@ -1546,47 +1546,26 @@ def cmd_ingest_warc(args: argparse.Namespace) -> int:
             "--ranges (cdx-plan fetch manifest)"
         )
     spark = _spark("ingest-warc")
+    kw = dict(
+        content_type=args.content_type or None,
+        max_link_density=args.max_link_density,
+        dedup_url=args.dedup_url,
+        normalize_urls=args.normalize_urls,
+        main_content=args.main_content,
+        main_content_lang=args.main_content_lang,
+        wet=args.wet,
+    )
     if args.ranges:
-        from .plans.web import ingest_warc_records, ingest_wet_records
+        from .plans.web import ingest_records
         from .sources.warc import read_warc_ranges
 
         records = read_warc_ranges(
             spark, spark.read.parquet(args.ranges),
             base_dir=args.ranges_base,
         )
-        if args.wet:
-            out = ingest_wet_records(
-                records,
-                content_type=(
-                    "text/plain"
-                    if args.content_type == "text/html"
-                    else (args.content_type or None)
-                ),
-                dedup_url=args.dedup_url,
-                normalize_urls=args.normalize_urls,
-            )
-        else:
-            out = ingest_warc_records(
-                records,
-                content_type=args.content_type or None,
-                max_link_density=args.max_link_density,
-                dedup_url=args.dedup_url,
-                normalize_urls=args.normalize_urls,
-                main_content=args.main_content,
-                main_content_lang=args.main_content_lang,
-            )
+        out = ingest_records(records, **kw)
     else:
-        out = ingest_warc_plan(
-            spark,
-            args.input,
-            content_type=args.content_type or None,
-            max_link_density=args.max_link_density,
-            dedup_url=args.dedup_url,
-            normalize_urls=args.normalize_urls,
-            main_content=args.main_content,
-            main_content_lang=args.main_content_lang,
-            wet=args.wet,
-        )
+        out = ingest_warc_plan(spark, args.input, **kw)
     out.write.mode("overwrite").parquet(args.out)
     n = spark.read.parquet(args.out).count()
     print(json.dumps({"out": args.out, "docs": n}))

@@ -16,7 +16,9 @@ is pytest's job: tests/test_round12_ops.py::TestHtmlText.)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import re
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import oracle_quantize
@@ -293,7 +295,6 @@ def ingest_warc_plan(
     main_content: bool = False,
     main_content_lang: str | None = None,
     wet: bool = False,
-    decide_first: bool | None = None,
 ) -> DataFrame:
     """The ingest-warc plan, shared verbatim by `cli ingest-warc` and
     the bench row: WARC responses → status/coding/type filters →
@@ -302,28 +303,16 @@ def ingest_warc_plan(
     per-URL window sort). Doc ids are xxhash64(file, offset) — pure
     row functions, zero shuffle, reproducible across runs.
 
-    ``decide_first`` (optimization r15, default auto): when URL dedup
-    is on and no extraction-dependent gate is (``max_link_density``
-    needs link density, which only extraction knows), the plan runs in
-    its decide-first form — URL winners chosen on a metadata-only
-    parse, extraction fused into one winner-only Python pass, zero
-    exchanges (see :func:`ingest_warc_decided`). Row-identical output;
-    ``decide_first=False`` forces the staged shape (the equivalence
-    oracle), ``True`` asserts it (raises if the mode can't apply).
-    When a generator-written capture index covers the glob, auto mode
-    instead builds the fully-lazy INDEX-planned form (r16,
-    :func:`ingest_warc_indexed`: no plan-build jobs, no driver collect,
-    winners fetched by member range — for BOTH html and wet).
-
-    NB (ADVICE r15): the metadata-pass decide-first form runs eager
-    Spark jobs at plan-BUILD time (the full metadata parse plus the
-    winner collect) and freezes the winner set then — merely building
-    or explaining that plan pays a corpus scan, and executing it after
-    files were added/removed under ``input_glob`` can see a DIFFERENT
-    file set in the extraction pass than the decision saw (two-scan
-    TOCTOU; the staged and indexed shapes are single-listing/lazy and
-    have neither property). Callers that need plan text without jobs
-    pass ``decide_first=False``.
+    Two plan shapes, one result, and building either launches no Spark
+    job. When URL dedup is on, no extraction-dependent gate is
+    (``max_link_density``/``main_content`` decide on columns only
+    extraction produces) and a generator-written capture index covers
+    the glob, the plan is INDEX-planned (r16,
+    :func:`ingest_warc_indexed`: winners chosen on index lines, fetched
+    by member range — for BOTH html and wet). Every other input runs
+    the staged plan (:func:`ingest_records` over :func:`read_warc`),
+    which is also the equivalence oracle the indexed shape is pinned
+    against.
     ``normalize_urls`` rewrites the url column through
     `functions/url.py::url_normalize` BEFORE dedup, so trivial variants
     ('HTTP://Example.COM:80/a#x' vs 'http://example.com/a?utm_source=y')
@@ -336,71 +325,81 @@ def ingest_warc_plan(
     HTML-only knobs (max_link_density, main_content) are refused."""
     from ..sources.warc import read_warc
 
-    can_decide = (
-        dedup_url and max_link_density is None and not main_content
-    )
-    if decide_first is True and not can_decide:
-        raise ValueError(
-            "ingest_warc_plan: decide_first needs dedup_url=True and no "
-            "extraction-dependent gate (max_link_density/main_content — "
-            "those decide on columns only extraction produces)"
-        )
-    if wet:
-        if main_content or max_link_density is not None:
-            raise ValueError(
-                "ingest_warc_plan: max_link_density/main_content are "
-                "HTML-extraction gates; a WET payload is already "
-                "extracted text — drop them with wet=True"
-            )
-        # the signature's text/html default is an HTML-mode artifact —
-        # conversion records are text/plain by definition, so the
-        # unchanged default follows the mode; explicit overrides
-        # (None = keep all, or an exotic type) pass through
-        ct = "text/plain" if content_type == "text/html" else content_type
-        # WET stays staged unless decide_first is FORCED: its
-        # "extraction" is a JVM decode, so the metadata pass's second
-        # decompress+parse of every file costs MORE than the text
-        # shuffle it saves (measured at sf0.1: 31.8 vs 18.2 warm
-        # task-s). The HTML path below flips the other way because
-        # per-page extraction dwarfs the parse.
-        if dedup_url and decide_first is not False:
-            indexed = ingest_warc_indexed(
-                spark, input_glob, ct, normalize_urls, wet=True
-            )
-            if indexed is not None:
-                return indexed
-        if decide_first is True:
-            decided = ingest_warc_decided(
-                spark, input_glob, ct, normalize_urls, wet=True
-            )
-            if decided is not None:
-                return decided
-        return ingest_wet_records(
-            read_warc(spark, input_glob, record_types=("conversion",)),
-            content_type=ct,
-            dedup_url=dedup_url,
-            normalize_urls=normalize_urls,
-        )
-    if can_decide and decide_first is not False:
+    if dedup_url and max_link_density is None and not main_content:
         indexed = ingest_warc_indexed(
-            spark, input_glob, content_type, normalize_urls, wet=False
+            spark, input_glob, _mode_content_type(content_type, wet),
+            normalize_urls, wet,
         )
         if indexed is not None:
             return indexed
-        decided = ingest_warc_decided(
-            spark, input_glob, content_type, normalize_urls, wet=False
-        )
-        if decided is not None:
-            return decided
-    return ingest_warc_records(
-        read_warc(spark, input_glob),
+    records = read_warc(
+        spark, input_glob, record_types=("conversion",) if wet else ("response",)
+    )
+    return ingest_records(
+        records,
         content_type=content_type,
         max_link_density=max_link_density,
         dedup_url=dedup_url,
         normalize_urls=normalize_urls,
         main_content=main_content,
         main_content_lang=main_content_lang,
+        wet=wet,
     )
+
+
+def _mode_content_type(content_type: str | None, wet: bool) -> str | None:
+    """The signature's text/html default is an HTML-mode artifact —
+    conversion records are text/plain by definition, so the unchanged
+    default follows the mode; explicit overrides (None = keep all, or
+    an exotic type) pass through."""
+    return "text/plain" if wet and content_type == "text/html" else content_type
+
+
+def ingest_records(
+    records: DataFrame,
+    content_type: str | None = "text/html",
+    max_link_density: float | None = None,
+    dedup_url: bool = False,
+    normalize_urls: bool = False,
+    main_content: bool = False,
+    main_content_lang: str | None = None,
+    wet: bool = False,
+) -> DataFrame:
+    """The staged ingest over any WARC-records frame — the whole-file
+    :func:`read_warc` parse in :func:`ingest_warc_plan`, or the ranged
+    `read_warc_ranges` fetch in `cli ingest-warc --ranges`: WET
+    conversion records through :func:`ingest_wet_records`, HTML
+    responses through :func:`ingest_warc_records`."""
+    if not wet:
+        return ingest_warc_records(
+            records,
+            content_type=content_type,
+            max_link_density=max_link_density,
+            dedup_url=dedup_url,
+            normalize_urls=normalize_urls,
+            main_content=main_content,
+            main_content_lang=main_content_lang,
+        )
+    if main_content or max_link_density is not None:
+        raise ValueError(
+            "ingest_warc_plan: max_link_density/main_content are "
+            "HTML-extraction gates; a WET payload is already "
+            "extracted text — drop them with wet=True"
+        )
+    return ingest_wet_records(
+        records,
+        content_type=_mode_content_type(content_type, wet),
+        dedup_url=dedup_url,
+        normalize_urls=normalize_urls,
+    )
+
+
+def _selfkey(url: Column, doc_id: Column) -> Column:
+    """The URL-dedup group's second key, shared by both plan shapes and
+    always computed on the (possibly normalized) url the group keys on:
+    0 for a real URL, the row's own doc_id for a null or empty one, so
+    pages without a target URI never collapse into one survivor."""
+    return F.when(url.isNull() | (url == ""), doc_id).otherwise(F.lit(0))
 
 
 def _dedup_by_url(out: "DataFrame", cols: tuple) -> "DataFrame":
@@ -408,20 +407,15 @@ def _dedup_by_url(out: "DataFrame", cols: tuple) -> "DataFrame":
     review: the two inline copies could drift): keep ONE page per URL
     via a struct-max agg, not a window (the W2 rule — no per-URL sort,
     one hash exchange). The winner is the max doc_id — hash-arbitrary
-    but DETERMINISTIC across runs. Records WITHOUT a target URI must
-    not collapse into one group: empty-url rows key on their own
-    doc_id, so each survives (content-level dedup downstream is the
-    real gate for those). NULL urls self-key too (ADVICE r13: callers
-    may feed warc_records-shaped frames from other sources where url is
-    null, and ``url == ''`` evaluates to null → otherwise(0) would
-    collapse ALL null-url pages into one survivor). ``cols`` = the
-    non-url payload columns, doc_id first."""
-    key = F.when(
-        F.col("url").isNull() | (F.col("url") == ""), F.col("doc_id")
-    ).otherwise(F.lit(0))
-    keep = F.max(F.struct(*cols)).alias("k")
+    but DETERMINISTIC across runs. Records WITHOUT a target URI (empty
+    or NULL url — ADVICE r13: frames from other sources may carry
+    nulls) key on their own doc_id via :func:`_selfkey`, so each
+    survives (content-level dedup downstream is the real gate for
+    those). ``cols`` = the non-url payload columns, doc_id first."""
+    selfkey = _selfkey(F.col("url"), F.col("doc_id")).alias("__selfkey")
     return (
-        out.groupBy("url", key.alias("__selfkey")).agg(keep)
+        out.groupBy("url", selfkey)
+        .agg(F.max(F.struct(*cols)).alias("k"))
         .select(
             F.col("k.doc_id").alias("doc_id"), "url",
             *[F.col(f"k.{c}").alias(c) for c in cols if c != "doc_id"],
@@ -570,304 +564,27 @@ def ingest_wet_records(
     return out
 
 
-# --- decide-first ingest (optimization r15) ----------------------------------
-#
-# The staged dedup plan moves every page's bytes across the JVM↔Python
-# boundary twice (parse out, extract in) and then shuffles the full
-# extracted text through the URL-dedup aggregate — three traversals of
-# the heavy column to make a decision that depends only on ~40 bytes of
-# metadata per record. Guide §8 shape instead: (A) a METADATA parse
-# (payload never decoded, never crosses to the JVM) feeds the identical
-# filter + URL-dedup winner choice; (B) ONE fused parse+extract pass
-# decodes and extracts ONLY the winners, so page bytes cross the
-# boundary exactly once and the text column is never shuffled at all
-# (the final plan is scan → MapInPandas → project: zero exchanges).
-# Measured at sf0.1: the staged map stage's executorRunTime swung
-# 40-210 s per run (multi-MB Arrow payload batches → G1 humongous-
-# allocation GC storms, 90 s jvmGcTime observed in one run); see
-# OPTIMIZATION_r15.md for before/after evidence.
-#
-# Winner equivalence: the staged keep rule is max(struct(doc_id, ...))
-# per (url, selfkey) group and doc_id = xxhash64(file, offset) is
-# unique per record, so the struct max is decided by its first field —
-# winner == argmax(doc_id), which the metadata pass computes without
-# extraction. (A 2^-64 doc_id collision inside one URL group would
-# fall back to differing tie-breaks — the same negligible-collision
-# trade every hash-keyed plan in plans/dedup.py documents.)
-#
-# The collected winner set is the scale boundary of this shape: it is
-# bounded by the BATCH being ingested (one crawl segment per trigger in
-# the streaming arms, one --input glob here), not the corpus, and
-# `_WINNER_CAP` guards it — past the cap the plan falls back to the
-# staged shuffle form. Index-level selection (cli cdx-plan →
-# read_warc_ranges) remains the answer when even a batch's URL space
-# outgrows memory: there the dedup happens on CDX rows before any WARC
-# byte is read.
-
-_WINNER_CAP = 2_000_000
-
-
-def _winner_offsets(
-    headers: DataFrame,
-    content_type: str | None,
-    normalize_urls: bool,
-    wet: bool,
-) -> dict[str, "object"] | None:
-    """URL-dedup winners from a metadata-pass frame → ``{warc_file:
-    sorted int64 ndarray of record offsets}``, or None when the winner
-    set exceeds `_WINNER_CAP` (caller falls back to the staged plan).
-    Applies the EXACT filter set of the staged plan for the mode, then
-    the `_dedup_by_url` keep rule on metadata only."""
-    import numpy as np
-
-    from ..functions.url import url_normalize
-
-    if wet:
-        recs = headers.filter(
-            (F.col("warc_type") == "conversion")
-            & F.col("undecoded_coding").isNull()
-        )
-    else:
-        recs = headers.filter(
-            (F.col("http_status") == 200)
-            & F.col("undecoded_coding").isNull()
-        )
-    if content_type:
-        recs = recs.filter(
-            F.lower(F.col("content_type")).startswith(content_type.lower())
-        )
-    url_col = (
-        url_normalize(F.col("target_uri"))
-        if normalize_urls
-        else F.col("target_uri")
-    )
-    meta = recs.select(
-        F.xxhash64("warc_file", "record_offset").alias("doc_id"),
-        url_col.alias("url"),
-        "warc_file",
-        "record_offset",
-    )
-    key = F.when(
-        F.col("url").isNull() | (F.col("url") == ""), F.col("doc_id")
-    ).otherwise(F.lit(0))
-    winners = (
-        meta.groupBy("url", key.alias("__selfkey"))
-        .agg(F.max(F.struct("doc_id", "warc_file", "record_offset")).alias("k"))
-        .select(F.col("k.warc_file").alias("f"), F.col("k.record_offset").alias("o"))
-    )
-    # Collect per-file SORTED offset arrays, not 2M Row objects (ADVICE
-    # r15): the grouping and sort happen executor-side, and the driver
-    # materializes one array row per file — an order of magnitude less
-    # heap than the former flat-Row collect at the same cap.
-    rows = (
-        winners.groupBy("f")
-        .agg(F.sort_array(F.collect_list("o")).alias("offs"))
-        .collect()
-    )
-    if sum(len(r["offs"]) for r in rows) > _WINNER_CAP:
-        return None
-    return {r["f"]: np.asarray(r["offs"], dtype=np.int64) for r in rows}
-
-
-def _fused_extract_winners(
-    binary: DataFrame,
-    winners_bc,
-    wet: bool,
-    chunk_bytes: int = 64 * 1024 * 1024,
-) -> DataFrame:
-    """One fused parse+extract pass over the winner records only.
-
-    HTML mode output: (warc_file, record_offset, target_uri, title,
-    text, n_links, link_text_chars, text_chars) — charset decode +
-    extraction happen here, page bytes never reach the JVM. WET mode
-    output: (warc_file, record_offset, target_uri, payload) — the
-    payload crosses for winners only, so the JVM `decode()` downstream
-    stays byte-identical with the staged plan."""
-    import pandas as pd
-
-    from ..operators.html_text import (
-        _charset_from_content_type,
-        decode_html,
-        extract_text,
-    )
-    from ..sources.warc import parse_warc_stream
-
-    if wet:
-        schema = (
-            "warc_file string, record_offset long, target_uri string, "
-            "payload binary"
-        )
-        cols = ["warc_file", "record_offset", "target_uri", "payload"]
-    else:
-        schema = (
-            "warc_file string, record_offset long, target_uri string, "
-            "title string, text string, n_links int, "
-            "link_text_chars int, text_chars int"
-        )
-        cols = [
-            "warc_file", "record_offset", "target_uri", "title", "text",
-            "n_links", "link_text_chars", "text_chars",
-        ]
-    wanted = "conversion" if wet else "response"
-
-    def _run(batches) -> "pd.DataFrame":
-        import gzip
-        import io
-
-        import numpy as np
-
-        winners = winners_bc.value
-        for pdf in batches:
-            rows: list[dict] = []
-            pending = 0
-            for path, content in zip(pdf["path"], pdf["content"]):
-                name = str(path)
-                offs = winners.get(name)
-                if offs is None or len(offs) == 0:
-                    continue
-                raw = io.BytesIO(bytes(content))
-                stream = (
-                    gzip.GzipFile(fileobj=raw)
-                    if name.endswith(".gz")
-                    else raw
-                )
-                for r in parse_warc_stream(stream, name):
-                    if r["warc_type"] != wanted:
-                        continue
-                    off = r["record_offset"]
-                    i = int(np.searchsorted(offs, off))
-                    if i >= len(offs) or int(offs[i]) != off:
-                        continue
-                    if wet:
-                        rows.append(
-                            {
-                                "warc_file": name,
-                                "record_offset": off,
-                                "target_uri": r["target_uri"],
-                                "payload": r["payload"],
-                            }
-                        )
-                        pending += len(r["payload"])
-                    else:
-                        html = decode_html(
-                            r["payload"],
-                            _charset_from_content_type(r["content_type"]),
-                        )
-                        rec = extract_text(html)
-                        rows.append(
-                            {
-                                "warc_file": name,
-                                "record_offset": off,
-                                "target_uri": r["target_uri"],
-                                "title": rec["title"],
-                                "text": rec["text"],
-                                "n_links": rec["n_links"],
-                                "link_text_chars": rec["link_text_chars"],
-                                "text_chars": rec["text_chars"],
-                            }
-                        )
-                        pending += rec["text_chars"]
-                    if pending >= chunk_bytes:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows, pending = [], 0
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return binary.select("path", "content").mapInPandas(_run, schema)
-
-
-def ingest_warc_decided(
-    spark: SparkSession,
-    input_glob: str,
-    content_type: str | None,
-    normalize_urls: bool,
-    wet: bool,
-) -> DataFrame | None:
-    """Decide-first form of ``ingest_warc_plan(..., dedup_url=True)``
-    (see the section comment above): metadata pass → winner choice →
-    fused winner-only parse+extract → JVM projection. Returns None if
-    the winner set exceeds `_WINNER_CAP` (caller falls back to the
-    staged shuffle plan). Output is row-identical to the staged plan —
-    pytest pins equality on generated corpora for every mode."""
-    from ..sources.warc import warc_header_records
-
-    binary = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc*")
-        .load(input_glob)
-    )
-    headers = warc_header_records(
-        binary, record_types=("conversion",) if wet else ("response",)
-    )
-    winners = _winner_offsets(headers, content_type, normalize_urls, wet)
-    if winners is None:
-        return None
-    # Bound the session-lifetime broadcast leak (ADVICE r15): a plan
-    # build per bench repeat / CLI run re-broadcasts the winner set and
-    # nothing ever unpersisted the previous copy. The newest plan is
-    # the only one a caller can still execute coherently (the decision
-    # is frozen at build time either way), so evict the prior broadcast
-    # when a new one is made — at most one winner set stays resident.
-    global _LAST_WINNERS_BC
-    if _LAST_WINNERS_BC is not None:
-        try:
-            _LAST_WINNERS_BC.unpersist()
-        except Exception:
-            pass  # SparkContext may have been stopped/replaced
-    winners_bc = spark.sparkContext.broadcast(winners)
-    _LAST_WINNERS_BC = winners_bc
-    fused = _fused_extract_winners(binary, winners_bc, wet=wet)
-    return _project_ingest_output(fused, normalize_urls, wet)
-
-
-_LAST_WINNERS_BC = None
-
-
-def _project_ingest_output(fused: DataFrame, normalize_urls: bool, wet: bool) -> DataFrame:
-    """Shared JVM tail of the decide-first/indexed ingest shapes:
-    doc_id/url/quality-column projection over a fused-extract frame."""
-    from ..functions.url import url_normalize
-    from ..operators.html_text import link_density_col
-
-    url_col = (
-        url_normalize(F.col("target_uri"))
-        if normalize_urls
-        else F.col("target_uri")
-    )
-    doc_id = F.xxhash64("warc_file", "record_offset").alias("doc_id")
-    if wet:
-        return fused.select(
-            doc_id,
-            url_col.alias("url"),
-            F.decode(F.col("payload"), "UTF-8").alias("text"),
-        ).withColumn("text_chars", F.length("text")).select(
-            "doc_id", "url", "text", "text_chars"
-        )
-    return fused.select(
-        doc_id,
-        url_col.alias("url"),
-        "title",
-        "text",
-        "n_links",
-        link_density_col().alias("link_density"),
-        "text_chars",
-    )
-
-
 # --- index-planned ingest (optimization r16) ----------------------------------
 #
-# The r15 decide-first shape still decompressed every file TWICE (a
-# metadata parse to pick winners, then a full-file pass extracting only
-# winners) and collected the winner set to the driver. With a capture
-# index (CDX — the artifact every real crawl ships) both costs vanish:
-# the DECISION becomes a pure-JVM scan of tiny index lines (no WARC
-# byte touched, no Python), the winner set stays DISTRIBUTED (a
+# The staged dedup plan decompresses and extracts every page, then
+# shuffles the full extracted text through the URL-dedup aggregate to
+# make a decision that depends only on ~40 bytes of metadata per
+# record. With a capture index (CDX — the artifact every real crawl
+# ships) the DECISION becomes a pure-JVM scan of tiny index lines (no
+# WARC byte touched, no Python), the winner set stays DISTRIBUTED (a
 # metadata-only manifest shuffle — guide §8: shuffle keys and metadata,
 # never payloads), and the fetch pass seeks straight to the winning
 # gzip members, so non-winner page bytes are never read, let alone
 # decompressed. The whole plan is LAZY — no plan-build-time jobs, no
-# broadcast, no driver collect (closes ADVICE r15's TOCTOU/leak notes
-# for this path).
+# broadcast, no driver collect.
+#
+# Winner equivalence: the staged keep rule is max(struct(doc_id, ...))
+# per (url, selfkey) group and doc_id = xxhash64(file, offset) is
+# unique per record, so the struct max is decided by its first field —
+# winner == argmax(doc_id), which the index lines determine without
+# extraction (a 2^-64 doc_id collision inside one URL group is the
+# same negligible-collision trade every hash-keyed plan in
+# plans/dedup.py documents).
 #
 # doc-id parity: ids are xxhash64(warc_file, record_offset) where
 # record_offset is the DECOMPRESSED stream offset a whole-file parse
@@ -922,9 +639,12 @@ def _indexed_winner_manifest(
     Trust posture: like `cli cdx-plan` → `read_warc_ranges`, the index
     is trusted for SELECTION (a stale index can only miss records —
     the fetch pass re-checks every gate on the parsed record, so wrong
-    rows cannot be emitted). The index's ``mime`` is the bare media
-    type, so ``content_type`` prefixes beyond it (e.g. charset params)
-    would under-select; the auto path only ever passes media types."""
+    rows cannot be emitted). A winner that fails a fetch-time gate the
+    index cannot see (e.g. an undecodable content-coding) drops its
+    URL, where the staged plan would keep the URL's next capture. The
+    index's ``mime`` is the bare media type, so a ``content_type``
+    carrying parameters (``; charset=...``) would under-select;
+    :func:`ingest_warc_indexed` refuses such types."""
     from ..functions.url import url_normalize
 
     lines = spark.read.text(idx_path).filter(F.length(F.trim("value")) > 0)
@@ -955,12 +675,9 @@ def _indexed_winner_manifest(
         url_normalize(F.col("url")) if normalize_urls else F.col("url")
     )
     doc_id = F.xxhash64("wf", "ro")
-    key = F.when(
-        F.col("url").isNull() | (F.col("url") == ""), doc_id
-    ).otherwise(F.lit(0))
     winners = (
         idx.select(
-            url_col.alias("u"), key.alias("__selfkey"),
+            url_col.alias("u"), _selfkey(url_col, doc_id).alias("__selfkey"),
             F.struct(doc_id.alias("doc_id"), "f", "o", "n", "ro", "wf").alias("m"),
         )
         .groupBy("u", "__selfkey")
@@ -997,9 +714,9 @@ def _fetch_extract_ranges(
     """Ranged winner fetch + parse + extract in ONE Python pass: seek
     to each winning gzip member, decompress just it, parse it with the
     standard incremental parser, re-check the record-level gates, and
-    (HTML mode) extract text — non-winner bytes are never read. Output
-    schema matches `_fused_extract_winners`; ``record_offset`` is the
-    manifest's decompressed ``ro`` (doc-id parity, see section note)."""
+    (HTML mode) extract text — non-winner bytes are never read.
+    ``record_offset`` is the manifest's decompressed ``ro`` (doc-id
+    parity, see section note)."""
     import pandas as pd
 
     from ..operators.html_text import (
@@ -1116,6 +833,37 @@ def _fetch_extract_ranges(
     return manifest.mapInPandas(_run, schema)
 
 
+def _project_ingest_output(fused: DataFrame, normalize_urls: bool, wet: bool) -> DataFrame:
+    """JVM tail of the indexed ingest shape: doc_id/url/quality-column
+    projection over the fetch-extract frame."""
+    from ..functions.url import url_normalize
+    from ..operators.html_text import link_density_col
+
+    url_col = (
+        url_normalize(F.col("target_uri"))
+        if normalize_urls
+        else F.col("target_uri")
+    )
+    doc_id = F.xxhash64("warc_file", "record_offset").alias("doc_id")
+    if wet:
+        return fused.select(
+            doc_id,
+            url_col.alias("url"),
+            F.decode(F.col("payload"), "UTF-8").alias("text"),
+        ).withColumn("text_chars", F.length("text")).select(
+            "doc_id", "url", "text", "text_chars"
+        )
+    return fused.select(
+        doc_id,
+        url_col.alias("url"),
+        "title",
+        "text",
+        "n_links",
+        link_density_col().alias("link_density"),
+        "text_chars",
+    )
+
+
 def ingest_warc_indexed(
     spark: SparkSession,
     input_glob: str,
@@ -1127,10 +875,13 @@ def ingest_warc_indexed(
     (see the section comment above): CDXJ winner manifest → ranged
     winner-only fetch+parse+extract → JVM projection, fully lazy, no
     driver collect, no broadcast, no whole-file decompression. Returns
-    None when no usable index covers ``input_glob`` (caller falls back
-    to the metadata-pass decide-first shape or the staged plan). Output
-    is row-identical to the staged plan — pytest pins equality on
-    generated corpora for both modes."""
+    None (caller runs the staged plan) when no usable index covers
+    ``input_glob``, or when ``content_type`` is not a bare media type
+    — the index's ``mime`` carries no parameters to match against.
+    Output is row-identical to the staged plan — pytest pins equality
+    on generated corpora for both modes."""
+    if content_type and re.search(r"[;\s]", content_type):
+        return None
     idx = _usable_index(input_glob)
     if idx is None:
         return None

@@ -215,26 +215,12 @@ def _decode_http_body(
     return body, None
 
 
-def parse_warc_stream(
-    stream, warc_file: str, with_payload: bool = True
-) -> Iterator[dict]:
+def parse_warc_stream(stream, warc_file: str) -> Iterator[dict]:
     """Incremental WARC/1.0 record iterator over a DECOMPRESSED byte
     stream (pass a ``gzip.GzipFile`` for .warc.gz — stdlib gzip
     consumes concatenated members transparently). Yields one dict per
     record; peak memory is one record (plus the 1 MB read-ahead
-    chunk — see `_ChunkedLineReader`, the r15 hot-loop fix).
-
-    ``with_payload=False`` is the METADATA pass (optimization r15):
-    every header-derived field (offset, type, uri, date, content_type,
-    http_status, undecoded_coding) is produced identically, but the
-    payload is skipped — no HTTP-body content decode, no payload bytes
-    kept (``payload`` is ``b""``). The one case that still touches the
-    body is an HTTP record that DECLARES a content-coding: the
-    ``undecoded_coding`` flag's value depends on whether the outer
-    gzip/deflate layers actually decode (mislabel posture), so the
-    flag is computed by the same `_decode_http_body` call and only the
-    decoded bytes are discarded. Identity-coded records — the
-    overwhelming majority of crawl data — skip all body work."""
+    chunk — see `_ChunkedLineReader`, the r15 hot-loop fix)."""
     stream = _ChunkedLineReader(stream)
     offset = 0
     while True:
@@ -284,7 +270,7 @@ def parse_warc_stream(
         warc_type = headers.get("warc-type", "")
         content_type = headers.get("content-type", "")
         http_status = None
-        payload = block if with_payload else b""
+        payload = block
         undecoded = None
         # unwrap HTTP response/request framing: the WARC block is the
         # full HTTP message; body starts after the first blank line
@@ -300,22 +286,9 @@ def parse_warc_stream(
                         http_status = None
                 http_headers = _parse_headers(block[:sep])
                 content_type = http_headers.get("content-type", content_type)
-                if with_payload:
-                    payload, undecoded = _decode_http_body(
-                        block[sep + 4 :], http_headers
-                    )
-                else:
-                    # metadata pass: the undecoded_coding flag must come
-                    # out identical, and for CODED bodies it depends on
-                    # whether the outer layers decode — run the decoder
-                    # and discard bytes for those; identity bodies (the
-                    # common case) skip body work entirely
-                    ce = http_headers.get("content-encoding", "").strip()
-                    if ce and ce.lower() != "identity":
-                        _, undecoded = _decode_http_body(
-                            block[sep + 4 :], http_headers
-                        )
-                    payload = b""
+                payload, undecoded = _decode_http_body(
+                    block[sep + 4 :], http_headers
+                )
         yield {
             "warc_file": warc_file,
             "record_offset": offset,
@@ -492,65 +465,6 @@ def read_warc_ranges(
                 fh.close()
 
     return plan.mapInPandas(_fetch, WARC_SCHEMA)
-
-
-#: WARC_SCHEMA minus the payload column — the metadata-pass surface.
-WARC_HEADER_SCHEMA = (
-    "warc_file string, record_offset long, warc_type string, "
-    "record_id string, target_uri string, warc_date string, "
-    "content_type string, http_status int, undecoded_coding string"
-)
-
-_HEADER_FLUSH_ROWS = 50_000
-
-
-def warc_header_records(
-    binary: DataFrame,
-    record_types: tuple[str, ...] = ("response",),
-) -> DataFrame:
-    """Metadata-only twin of :func:`warc_records` (optimization r15):
-    every column except ``payload``, from ``parse_warc_stream(...,
-    with_payload=False)`` — record payloads are never decoded, never
-    copied, and never cross the Python→JVM boundary. This is the cheap
-    DECISION pass of the decide-first ingest plan (plans/web.py): URL
-    dedup winners are chosen from these rows, so the expensive
-    extraction pass touches only winners and the multi-KB page bodies
-    are moved exactly once (guide pattern: decide with small rows,
-    move big rows once)."""
-    import pandas as pd
-
-    wanted = frozenset(record_types)
-
-    def _parse(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cols = [f.split()[0] for f in WARC_HEADER_SCHEMA.split(", ")]
-        for pdf in batches:
-            rows: list[dict] = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                import gzip
-                import io
-
-                raw = io.BytesIO(bytes(content))
-                stream = (
-                    gzip.GzipFile(fileobj=raw)
-                    if str(path).endswith(".gz")
-                    else raw
-                )
-                for r in parse_warc_stream(
-                    stream, str(path), with_payload=False
-                ):
-                    if r["warc_type"] not in wanted:
-                        continue
-                    del r["payload"]
-                    rows.append(r)
-                    if len(rows) >= _HEADER_FLUSH_ROWS:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return binary.select("path", "content").mapInPandas(
-        _parse, WARC_HEADER_SCHEMA
-    )
 
 
 def warc_records(

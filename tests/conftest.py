@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import math
 import sys
+import uuid
+from dataclasses import dataclass
 from pathlib import Path
 
 import numpy as np
@@ -106,6 +108,36 @@ def run_cli(args: list[str]) -> CliResult:
             traceback.print_exc(file=err)
             rc = 1
     return CliResult(rc if rc is not None else 0, out.getvalue(), err.getvalue())
+
+
+@dataclass
+class Work:
+    jobs: int
+    input_bytes: int
+
+
+def measured(spark, action) -> Work:
+    """Jobs launched, and stage input bytes read, by ``action()``."""
+    sc = spark.sparkContext
+    group = f"measured-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group)
+    stage_ids = {s for j in job_ids for s in tracker.getJobInfo(j).stageIds}
+    store = sc._jsc.sc().statusStore()
+    empty = sc._gateway.new_array(sc._gateway.jvm.double, 0)
+    stages = store.stageList(None, False, False, empty, None)
+    input_bytes = 0
+    for i in range(stages.size()):
+        st = stages.apply(i)
+        if st.stageId() in stage_ids:
+            input_bytes += st.inputBytes()
+    return Work(len(job_ids), input_bytes)
 
 
 @pytest.fixture(scope="session")

@@ -1,8 +1,8 @@
 """Optimization-round 16 equivalence pins.
 
-Same discipline as tests/test_opt_r15.py: every optimization that
-restructures an operator's internals gets a row-identity test against
-the prior shape — the staged plan IS the oracle. Performance claims
+Every optimization that restructures an operator's internals gets a
+row-identity test against the prior shape — the staged plan IS the
+oracle. Performance claims
 live in OPTIMIZATION_r16.md; this file only proves outputs did not
 move.
 """
@@ -13,6 +13,96 @@ import json
 import os
 
 import pytest
+from conftest import SF_DIR, measured
+
+
+def _corpus(tmp_path, wet: bool, index: bool) -> str:
+    from imitation_learning_data_pipeline_spark.plans.web import (
+        build_warc_corpus,
+    )
+
+    return build_warc_corpus(
+        SF_DIR,
+        out_root=str(tmp_path / "c"),
+        kind="conversion" if wet else "response",
+        index=index,
+    )
+
+
+def _staged(spark, corpus, wet, normalize, content_type="text/html"):
+    """The equivalence oracle: the staged record stages over a
+    whole-file parse, called directly."""
+    from imitation_learning_data_pipeline_spark.plans.web import (
+        ingest_warc_records,
+        ingest_wet_records,
+    )
+    from imitation_learning_data_pipeline_spark.sources.warc import read_warc
+
+    if wet:
+        return ingest_wet_records(
+            read_warc(spark, corpus, record_types=("conversion",)),
+            dedup_url=True,
+            normalize_urls=normalize,
+        )
+    return ingest_warc_records(
+        read_warc(spark, corpus),
+        content_type=content_type,
+        dedup_url=True,
+        normalize_urls=normalize,
+    )
+
+
+def _assert_same_rows(staged, got) -> int:
+    assert staged.columns == got.columns
+    # nullability may tighten (the indexed doc_id is provably
+    # non-null); names+types pin
+    assert [(f.name, f.dataType) for f in staged.schema.fields] == [
+        (f.name, f.dataType) for f in got.schema.fields
+    ]
+    a = sorted(map(tuple, staged.collect()))
+    b = sorted(map(tuple, got.collect()))
+    assert a == b
+    return len(a)
+
+
+def _phys(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _write_crawl(d, urls) -> None:
+    """One .warc.gz of HTML responses, one gzip member per url, plus an
+    ``index.cdxj`` with the generator's ``rec_offset`` field — the
+    hand-written twin of build_warc_corpus(index=True). The WARC parser
+    trims a header value; the index keeps each url as written."""
+    import gzip
+
+    d.mkdir()
+    path = str(d / "seg0000.warc.gz")
+    lines, off, rec_off = [], 0, 0
+    with open(path, "wb") as fh:
+        for i, url in enumerate(urls):
+            block = (
+                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
+                + f"<html><p>page {i}</p></html>".encode()
+            )
+            rec = (
+                "WARC/1.0\r\nWARC-Type: response\r\n"
+                f"WARC-Record-ID: <urn:t:{i}>\r\n"
+                f"WARC-Target-URI: {url}\r\n"
+                "Content-Type: application/http; msgtype=response\r\n"
+                f"Content-Length: {len(block)}\r\n\r\n"
+            ).encode() + block + b"\r\n\r\n"
+            member = gzip.compress(rec)
+            fh.write(member)
+            payload = {
+                "url": url, "mime": "text/html", "status": "200",
+                "length": str(len(member)), "offset": str(off),
+                "filename": path, "rec_offset": str(rec_off),
+            }
+            lines.append(f"t)/{i} 20260101000000 {json.dumps(payload)}")
+            off += len(member)
+            rec_off += len(rec)
+    (d / "index.cdxj").write_text("\n".join(lines) + "\n")
 
 
 class TestIndexedIngest:
@@ -25,49 +115,94 @@ class TestIndexedIngest:
     @pytest.mark.parametrize("normalize", [False, True])
     def test_row_identity_vs_staged(self, spark, tmp_path, wet, normalize):
         from imitation_learning_data_pipeline_spark.plans.web import (
-            build_warc_corpus,
             ingest_warc_plan,
         )
 
-        corpus = build_warc_corpus(
-            "/root/testdata/sf0.001",
-            out_root=str(tmp_path / "c"),
-            kind="conversion" if wet else "response",
-            index=True,
+        corpus = _corpus(tmp_path, wet, index=True)
+        indexed = ingest_warc_plan(
+            spark, corpus, dedup_url=True, normalize_urls=normalize, wet=wet
         )
-        kw = dict(dedup_url=True, normalize_urls=normalize, wet=wet)
-        staged = ingest_warc_plan(spark, corpus, decide_first=False, **kw)
-        indexed = ingest_warc_plan(spark, corpus, **kw)  # auto → indexed
-        # prove auto mode actually took the index plan: the leaf is the
+        # prove the plan actually took the index shape: the leaf is the
         # index TEXT scan (value:string), not the whole-file binaryFile
         # scan (path/content) — plan strings truncate paths, so match
         # on the read schema
-        phys = indexed._jdf.queryExecution().executedPlan().toString()
+        phys = _phys(indexed)
         assert "value:string" in phys
         assert "content:binary" not in phys
-        assert staged.columns == indexed.columns
-        assert [(f.name, f.dataType) for f in staged.schema.fields] == [
-            (f.name, f.dataType) for f in indexed.schema.fields
-        ]
-        a = sorted(map(tuple, staged.collect()))
-        b = sorted(map(tuple, indexed.collect()))
-        assert a == b
+        assert _assert_same_rows(
+            _staged(spark, corpus, wet, normalize), indexed
+        ) > 0
 
-    def test_auto_without_index_keeps_r15_shapes(self, spark, tmp_path):
-        """No index → auto mode behaves exactly as r15 pinned it:
-        HTML decides first (zero exchanges), WET stays staged."""
+    @pytest.mark.parametrize("wet", [False, True], ids=["html", "wet"])
+    @pytest.mark.parametrize("normalize", [False, True])
+    def test_no_index_row_identity_vs_staged(
+        self, spark, tmp_path, wet, normalize
+    ):
         from imitation_learning_data_pipeline_spark.plans.web import (
-            build_warc_corpus,
             ingest_warc_plan,
         )
 
-        html_corpus = build_warc_corpus(
-            "/root/testdata/sf0.001", out_root=str(tmp_path / "h")
+        corpus = _corpus(tmp_path, wet, index=False)
+        got = ingest_warc_plan(
+            spark, corpus, dedup_url=True, normalize_urls=normalize, wet=wet
         )
-        plan = ingest_warc_plan(spark, html_corpus, dedup_url=True)
-        phys = plan._jdf.queryExecution().executedPlan().toString()
-        assert "index.cdxj" not in phys
-        assert "Exchange" not in phys
+        assert _assert_same_rows(
+            _staged(spark, corpus, wet, normalize), got
+        ) > 0
+
+    @pytest.mark.parametrize("wet", [False, True], ids=["html", "wet"])
+    def test_auto_without_index_runs_staged(self, spark, tmp_path, wet):
+        """No index → the staged plan: the whole-file binaryFile scan
+        and the URL-dedup aggregate's exchange."""
+        from imitation_learning_data_pipeline_spark.plans.web import (
+            ingest_warc_plan,
+        )
+
+        corpus = _corpus(tmp_path, wet, index=False)
+        phys = _phys(ingest_warc_plan(spark, corpus, dedup_url=True, wet=wet))
+        assert "Scan binaryFile" in phys
+        assert "Exchange" in phys
+        assert "value:string" not in phys
+
+    def test_parameterized_content_type_matches_staged(self, spark, tmp_path):
+        """The index's mime is the bare media type, so a content type
+        with parameters cannot be matched on it: the plan must run the
+        staged shape, not return an empty indexed result."""
+        from imitation_learning_data_pipeline_spark.plans.web import (
+            ingest_warc_plan,
+        )
+
+        ct = "text/html; charset=utf-8"
+        corpus = _corpus(tmp_path, wet=False, index=True)
+        got = ingest_warc_plan(spark, corpus, content_type=ct, dedup_url=True)
+        staged = _staged(spark, corpus, False, False, content_type=ct)
+        assert _assert_same_rows(staged, got) > 0
+        assert "Scan binaryFile" in _phys(got)
+
+    def test_blank_urls_self_key_on_the_index_path(self, spark, tmp_path):
+        """Under normalize_urls, a whitespace-only index url normalizes
+        to the empty url, and each such page keys on its own doc id —
+        the same rule the staged plan applies to the parsed (already
+        trimmed) target URI. Keying on the raw index url collapsed them
+        into one survivor."""
+        from imitation_learning_data_pipeline_spark.plans.web import (
+            ingest_warc_plan,
+            ingest_warc_records,
+        )
+        from imitation_learning_data_pipeline_spark.sources.warc import (
+            read_warc,
+        )
+
+        d = tmp_path / "crawl"
+        _write_crawl(d, ["   "] * 3 + ["http://t.example/a"] * 2)
+        got = ingest_warc_plan(
+            spark, str(d), dedup_url=True, normalize_urls=True
+        )
+        assert "value:string" in _phys(got)
+        staged = ingest_warc_records(
+            read_warc(spark, str(d)), dedup_url=True, normalize_urls=True
+        )
+        assert _assert_same_rows(staged, got) == 4
 
     def test_usable_index_requires_rec_offset(self, tmp_path):
         from imitation_learning_data_pipeline_spark.plans.web import (
@@ -159,22 +294,21 @@ class TestIndexedIngest:
         finally:
             sigs.unpersist()
 
-    def test_index_plan_is_lazy(self, spark, tmp_path):
-        """Building (not executing) the indexed plan must run ZERO
-        Spark jobs — the ADVICE r15 build-time-action complaint does
-        not apply to this shape."""
+    @pytest.mark.parametrize("index", [True, False], ids=["index", "no-index"])
+    @pytest.mark.parametrize("wet", [False, True], ids=["html", "wet"])
+    def test_index_plan_is_lazy(self, spark, tmp_path, wet, index):
+        """Building (not executing) the ingest plan runs ZERO Spark
+        jobs, with or without an index. Jobs are counted per job group:
+        the status store's job list stops growing once it holds
+        spark.ui.retainedJobs jobs, so a before/after size diff would
+        pass late in a long session whatever ran."""
         from imitation_learning_data_pipeline_spark.plans.web import (
-            build_warc_corpus,
             ingest_warc_plan,
         )
 
-        corpus = build_warc_corpus(
-            "/root/testdata/sf0.001", out_root=str(tmp_path / "c"),
-            index=True,
+        corpus = _corpus(tmp_path, wet, index)
+        work = measured(
+            spark,
+            lambda: ingest_warc_plan(spark, corpus, dedup_url=True, wet=wet),
         )
-        sc = spark.sparkContext
-        store = sc._jsc.sc().statusStore()
-        before = store.jobsList(None).size()
-        ingest_warc_plan(spark, corpus, dedup_url=True)
-        after = store.jobsList(None).size()
-        assert after == before
+        assert work.jobs == 0

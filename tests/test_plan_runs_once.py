@@ -10,40 +10,8 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import uuid
-from dataclasses import dataclass
 
-from conftest import run_cli
-
-
-@dataclass
-class Work:
-    jobs: int
-    input_bytes: int
-
-
-def _measured(spark, action) -> Work:
-    """Jobs launched, and stage input bytes read, by ``action()``."""
-    sc = spark.sparkContext
-    group = f"plan-runs-once-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    tracker = sc.statusTracker()
-    job_ids = tracker.getJobIdsForGroup(group)
-    stage_ids = {s for j in job_ids for s in tracker.getJobInfo(j).stageIds}
-    store = sc._jsc.sc().statusStore()
-    empty = sc._gateway.new_array(sc._gateway.jvm.double, 0)
-    stages = store.stageList(None, False, False, empty, None)
-    input_bytes = 0
-    for i in range(stages.size()):
-        st = stages.apply(i)
-        if st.stageId() in stage_ids:
-            input_bytes += st.inputBytes()
-    return Work(len(job_ids), input_bytes)
+from conftest import measured, run_cli
 
 
 def _cli(argv):
@@ -79,8 +47,8 @@ def test_validate_reads_the_frames_once(spark, lerobot_fixture, tmp_path):
         meta = spark.read.json(f"{root}/meta/episodes.jsonl")
         validate_episodes(frames, meta).write.format("noop").mode("overwrite").save()
 
-    once = _measured(spark, one_pass)
-    verb = _measured(
+    once = measured(spark, one_pass)
+    verb = measured(
         spark,
         _cli(["validate", "--data-root", root, "--meta-dir", f"{root}/meta",
               "--out", str(tmp_path / "v"), "--skip-video"]),
@@ -105,15 +73,15 @@ def test_discover_reads_each_source_once(spark, lerobot_fixture, tmp_path):
 
         return action
 
-    assert _measured(spark, plan()).input_bytes == parquet_bytes
+    assert measured(spark, plan()).input_bytes == parquet_bytes
 
     argv = ["discover", "--data-root", root, "--manifest", manifest]
     _cli(argv)()
     prior = spark.read.parquet(manifest)
-    with_prior = _measured(spark, plan(prior))
+    with_prior = measured(spark, plan(prior))
     assert parquet_bytes < with_prior.input_bytes
     assert with_prior.input_bytes <= parquet_bytes + _bytes(f"{manifest}/*.parquet")
 
     # A plan that reads the parquets twice, the videos three times and
     # the manifest twice runs 23 jobs here; this one runs 12.
-    assert _measured(spark, _cli(argv)).jobs <= 12
+    assert measured(spark, _cli(argv)).jobs <= 12

@@ -4,11 +4,8 @@ Usage: python tools/capture_plans.py <suffix> [query ...]
 
 Writes plans/<round>/<query>_<suffix>.txt for each named query
 (default: the bench HEADLINE list). Uses a small local session — plan
-shape does not depend on core count. NB (ADVICE r15): explain() itself
-runs no jobs, but BUILDING some plans does — web_ingest_warc's
-metadata-pass decide-first form runs its winner-decision jobs at plan
-construction (the indexed form and everything else stays lazy) — so
-keep captures strictly sequential with timed runs.
+shape does not depend on core count. Keep captures strictly sequential
+with timed runs.
 """
 
 from __future__ import annotations

@@ -251,12 +251,6 @@ AUDIT = {
     # immutable-buffer rule — which still partial-aggregates map-side;
     # a window or join-back would sort/shuffle the full page set
     # twice). No join anywhere in the ingest path.
-    # optimization r15: decide-first ingest — URL winners are chosen on
-    # a metadata-only parse during plan BUILD, extraction fuses into one
-    # winner-only MapInPandas, and the final plan is scan → python →
-    # project with ZERO exchanges: the extracted text is never shuffled
-    # (the former struct-max dedup aggregate and its full-text exchange
-    # are gone from the executed plan).
     # round-16: the bench corpus now ships a capture index, so the row
     # runs the INDEX-planned ingest — the leaf is the index TEXT scan
     # (never the whole-file binaryFile content), one winner-choice
