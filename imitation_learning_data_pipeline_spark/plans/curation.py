@@ -338,7 +338,11 @@ def curation_funnel(
             # and joining it back: a self-join references `cur` twice, and
             # under report=False (one lazy plan, nothing persisted) each
             # reference re-scans the whole upstream chain — measured 2.2×
-            # on the composed 8-stage funnel (SCALING.md round-11).
+            # on the composed 8-stage funnel (SCALING.md round-11). The
+            # inline filter is pushed below the stage's projections and
+            # every feature alias is inlined into it; lambdas get no
+            # subexpression elimination there, so a stage's word-level
+            # features must be scalar expressions (see gopher_rules).
             if stage == "gopher":
                 cur = (
                     gopher_rules(cur, min_required_stopwords, passthrough=("text",))

@@ -592,8 +592,9 @@ def text_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "Scaling Language Models", table A1) — the de-facto standard cheap
 # quality gate run before LLM pretraining. Each rule is a named boolean
 # over per-document features; `keep` is their conjunction. All features
-# are map-side built-in expressions over ONE projection of the word /
-# line arrays (HOFs are CodegenFallback with no CSE — see langid_scores).
+# are map-side built-in expressions: the word-level ones are scalar
+# functions of the text, only the two per-line ones are lambdas (HOFs
+# are CodegenFallback with no CSE — see langid_scores and gopher_rules).
 #
 # Thresholds are the published ones: 50 ≤ words ≤ 100k, 3 ≤ mean word
 # length ≤ 10, symbol-to-word ratio (# and ...) ≤ 0.1, ≤ 90% bullet
@@ -685,23 +686,48 @@ def gopher_rules(
     """Gopher quality-rule features + per-rule booleans for ANY
     ``(doc_id, text)`` frame.
 
-    Scale shape: a pure per-row projection — no shuffle, no UDF; the
-    word/line arrays are projected ONCE and every feature reads the
-    materialized columns. Scan-bound at any corpus size; composes with
-    the curation cascade as the cheapest first gate. ``passthrough``
-    carries input columns (e.g. the text itself) into the output so a
-    cascade can ``filter("keep")`` in ONE plan branch instead of
-    deriving a keep-set and joining it back (two scans of the
-    upstream chain).
+    Scale shape: a pure per-row projection — no shuffle, no UDF. The
+    word-level features are SCALAR expressions of ``text`` (regex
+    counts, one whitespace-stripped length, one stopword
+    ``array_intersect``), not lambdas over a projected word array:
+    a caller's ``filter("keep")`` is pushed below these projections and
+    Catalyst inlines every alias into the predicate, and higher-order
+    lambdas are excluded from subexpression elimination — so an array
+    feature is re-evaluated once per reference (the word-array form
+    re-split each page ~9 times and re-ran ``clean_words`` once per
+    required stopword inside the curation funnel's Filter). Only the two
+    per-LINE features stay lambdas. Keep them: removing them too lets
+    the Filter be whole-stage-codegen'd, and the codegen'd Filter
+    re-runs every inlined feature where the interpreted one shares
+    them — measured slower. Scan-bound at any corpus size; composes
+    with the curation cascade as the cheapest first gate.
+    ``passthrough`` carries input columns (e.g. the text itself) into
+    the output so a cascade can ``filter("keep")`` in ONE plan branch
+    instead of deriving a keep-set and joining it back (two scans of
+    the upstream chain).
     """
+    text = F.col("text")
     arr = docs.select(
         "doc_id",
         *passthrough,
-        F.filter(
-            F.split(F.col("text"), "[ \t\n\r]+"), lambda x: x != ""
-        ).alias("w"),
-        clean_words("text").alias("cw"),
-        F.split(F.col("text"), "\n").alias("lines"),
+        # a word is a maximal run outside the [ \t\n\r] class
+        F.regexp_count(text, F.lit("[^ \t\n\r]+")).alias("nw_raw"),
+        F.coalesce(
+            F.length(F.regexp_replace(text, "[ \t\n\r]", "")), F.lit(0)
+        ).alias("word_chars"),
+        F.regexp_count(
+            text, F.lit("[^ \t\n\r]*[A-Za-z][^ \t\n\r]*")
+        ).alias("n_alpha"),
+        F.coalesce(
+            F.size(
+                F.array_intersect(
+                    F.array(*[F.lit(s) for s in _GOPHER_REQ_STOPWORDS]),
+                    clean_words(text),
+                )
+            ),
+            F.lit(0),
+        ).alias("n_req"),
+        F.split(text, "\n").alias("lines"),
         (
             (F.length("text") - F.length(F.expr("replace(text, '#', '')")))
             .cast("long")
@@ -711,21 +737,13 @@ def gopher_rules(
             ).cast("long")
         ).alias("n_sym"),
     )
-    nw = F.greatest(F.size("w"), F.lit(1))
+    nw = F.greatest(F.col("nw_raw"), F.lit(1))
     nl = F.greatest(F.size("lines"), F.lit(1))
     feats = arr.select(
         "doc_id",
         *passthrough,
-        F.size("w").cast("long").alias("n_words"),
-        (
-            F.coalesce(
-                F.aggregate(
-                    "w", F.lit(0).cast("long"), lambda a, x: a + F.length(x)
-                ),
-                F.lit(0),
-            ).cast("double")
-            / nw
-        ).alias("mean_word_len_raw"),
+        F.col("nw_raw").cast("long").alias("n_words"),
+        (F.col("word_chars").cast("double") / nw).alias("mean_word_len_raw"),
         (F.col("n_sym").cast("double") / nw).alias("symbol_ratio_raw"),
         (
             F.size(F.filter("lines", lambda l: F.trim(l).rlike("^[-*]")))
@@ -737,19 +755,8 @@ def gopher_rules(
             .cast("double")
             / nl
         ).alias("ellipsis_frac_raw"),
-        (
-            F.size(F.filter("w", lambda x: x.rlike("[A-Za-z]")))
-            .cast("double")
-            / nw
-        ).alias("alpha_frac_raw"),
-        F.size(
-            F.filter(
-                F.array(*[F.lit(s) for s in _GOPHER_REQ_STOPWORDS]),
-                lambda s: F.array_contains(F.col("cw"), s),
-            )
-        )
-        .cast("long")
-        .alias("n_req_stopwords"),
+        (F.col("n_alpha").cast("double") / nw).alias("alpha_frac_raw"),
+        F.col("n_req").cast("long").alias("n_req_stopwords"),
     )
     r_wc = F.col("n_words").between(50, 100000)
     r_mwl = (F.col("mean_word_len_raw") >= 3) & (F.col("mean_word_len_raw") <= 10)

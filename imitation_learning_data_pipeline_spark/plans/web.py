@@ -17,6 +17,7 @@ is pytest's job: tests/test_round12_ops.py::TestHtmlText.)
 from __future__ import annotations
 
 import re
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -297,34 +298,40 @@ def ingest_warc_plan(
     wet: bool = False,
 ) -> DataFrame:
     """The ingest-warc plan, shared verbatim by `cli ingest-warc` and
-    the bench row: WARC responses → status/coding/type filters →
-    extraction (URL rides the Arrow batch — no join-back double parse)
-    → optional URL-level struct-max dedup (one hash exchange, no
-    per-URL window sort). Doc ids are xxhash64(file, offset) — pure
-    row functions, zero shuffle, reproducible across runs.
+    the bench row: WARC records → record gate → extraction → JVM tail
+    (doc_id/url projection, optional link-density gate, optional
+    URL-level struct-max dedup: one hash exchange, no per-URL window
+    sort). Doc ids are xxhash64(file, offset) — pure row functions,
+    reproducible across runs.
 
-    Two plan shapes, one result, and building either launches no Spark
-    job. When URL dedup is on, no extraction-dependent gate is
-    (``max_link_density``/``main_content`` decide on columns only
-    extraction produces) and a generator-written capture index covers
-    the glob, the plan is INDEX-planned (r16,
-    :func:`ingest_warc_indexed`: winners chosen on index lines, fetched
-    by member range — for BOTH html and wet). Every other input runs
-    the staged plan (:func:`ingest_records` over :func:`read_warc`),
-    which is also the equivalence oracle the indexed shape is pinned
-    against.
+    Two plan shapes, one result. Each crosses into Python ONCE per
+    record (parse, gate and extract in one pass), and building either
+    launches no Spark job:
+
+    - index-planned (r16, :func:`ingest_warc_indexed`): URL dedup is
+      on, no extraction-dependent gate is (``max_link_density``/
+      ``main_content`` decide on columns only extraction produces), the
+      content type is a bare media type, and a generator-written
+      capture index covers the glob. Winners are chosen on index lines
+      and fetched by member range, for BOTH html and wet.
+    - whole-file (:func:`ingest_warc_files`): every other input — one
+      ``mapInPandas`` over the ``binaryFile`` frame.
+
+    Both are row-identical to the staged records-frame plan
+    (:func:`ingest_records` over `sources/warc.py::read_warc`), which
+    is kept as their pytest equivalence oracle.
     ``normalize_urls`` rewrites the url column through
     `functions/url.py::url_normalize` BEFORE dedup, so trivial variants
     ('HTTP://Example.COM:80/a#x' vs 'http://example.com/a?utm_source=y')
-    collapse to one page — all JVM string expressions, same stage as
-    the extraction filter. ``wet=True`` (r14, VERDICT r13 #4) ingests
-    WET conversion records instead: the payload is ALREADY extracted
-    text, so the plan maps payload→text directly (JVM decode, no HTML
-    extractor stage at all) via :func:`ingest_wet_records` —
-    ``content_type`` defaults to ``text/plain`` there, and the
-    HTML-only knobs (max_link_density, main_content) are refused."""
-    from ..sources.warc import read_warc
+    collapse to one page — all JVM string expressions. ``wet=True``
+    (r14, VERDICT r13 #4) ingests WET conversion records instead: the
+    payload is ALREADY extracted text, so the pass runs no extractor
+    and the JVM decodes the payload to text — ``content_type`` defaults
+    to ``text/plain`` there, and the HTML-only knobs
+    (max_link_density, main_content) are refused."""
+    from ..sources.warc import warc_files
 
+    _check_ingest_gates(wet, max_link_density, main_content, main_content_lang)
     if dedup_url and max_link_density is None and not main_content:
         indexed = ingest_warc_indexed(
             spark, input_glob, _mode_content_type(content_type, wet),
@@ -332,11 +339,8 @@ def ingest_warc_plan(
         )
         if indexed is not None:
             return indexed
-    records = read_warc(
-        spark, input_glob, record_types=("conversion",) if wet else ("response",)
-    )
-    return ingest_records(
-        records,
+    return ingest_warc_files(
+        warc_files(spark, input_glob),
         content_type=content_type,
         max_link_density=max_link_density,
         dedup_url=dedup_url,
@@ -345,6 +349,160 @@ def ingest_warc_plan(
         main_content_lang=main_content_lang,
         wet=wet,
     )
+
+
+def ingest_warc_files(
+    files: DataFrame,
+    content_type: str | None = "text/html",
+    max_link_density: float | None = None,
+    dedup_url: bool = False,
+    normalize_urls: bool = False,
+    main_content: bool = False,
+    main_content_lang: str | None = None,
+    wet: bool = False,
+) -> DataFrame:
+    """The whole-file ingest over any ``(path, content)`` frame — the
+    ``binaryFile`` scan in :func:`ingest_warc_plan`, or a streaming
+    micro-batch in `streaming/warc_stream.py`. ONE Arrow-batched
+    ``mapInPandas`` parses each file and runs :func:`_gate_extract`
+    (record gate + extractor) on every record, so a task holds one
+    Python worker; then the JVM tail: :func:`_project_ingest_output`,
+    the ``max_link_density`` gate and :func:`_dedup_by_url`. Output
+    frames are bounded by record payload bytes, so a task never holds a
+    whole file's decompressed records (the `read_warc` bound)."""
+    from ..sources.warc import warc_file_records
+
+    _check_ingest_gates(wet, max_link_density, main_content, main_content_lang)
+    schema, frames = _gate_extract(
+        wet, _mode_content_type(content_type, wet), main_content,
+        main_content_lang,
+    )
+
+    def _run(batches):
+        for pdf in batches:
+            yield from frames(
+                r
+                for path, content in zip(pdf["path"], pdf["content"])
+                for r in warc_file_records(str(path), bytes(content))
+            )
+
+    out = _project_ingest_output(
+        files.select("path", "content").mapInPandas(_run, schema),
+        normalize_urls, wet, main_content,
+    )
+    if max_link_density is not None:
+        out = out.filter(F.col("link_density") <= max_link_density)
+    if dedup_url:
+        out = _dedup_by_url(out, tuple(c for c in out.columns if c != "url"))
+    return out
+
+
+def _check_ingest_gates(
+    wet: bool,
+    max_link_density: float | None,
+    main_content: bool,
+    main_content_lang: str | None,
+) -> None:
+    """Refuse, at plan build, the gate combinations no mode honours."""
+    if wet and (main_content or max_link_density is not None):
+        raise ValueError(
+            "ingest: max_link_density/main_content are HTML-extraction "
+            "gates; a WET payload is already extracted text — drop them "
+            "with wet=True"
+        )
+    if main_content_lang is not None and not main_content:
+        raise ValueError(
+            "ingest: main_content_lang only applies with main_content=True"
+        )
+    if main_content and max_link_density is not None:
+        raise ValueError(
+            "ingest: max_link_density is a page-level gate; with "
+            "main_content=True the block classifier already removes linky "
+            "blocks — pass one or the other"
+        )
+
+
+def _gate_extract(
+    wet: bool,
+    content_type: str | None,
+    main_content: bool = False,
+    main_content_lang: str | None = None,
+    chunk_bytes: int = 64 * 1024 * 1024,
+):
+    """The per-record Python work of both ingest shapes, defined once.
+    The gate is the staged plan's: ``warc_type`` (conversion for WET,
+    response otherwise), HTTP status 200 (not for WET — conversion
+    records carry none), no undecodable content-coding, and the
+    case-insensitive ``content_type`` prefix. The extractor is
+    `extract_text`, the main-content classifier, or none (WET: the JVM
+    decodes the payload). Returns ``(schema, frames)``:
+    ``frames(records)`` yields the kept records' output rows as pandas
+    frames, one every ``chunk_bytes`` of record payload."""
+    from ..operators.html_text import (
+        _MAIN_FIELDS,
+        _OUT_FIELDS,
+        JUSTEXT_STOPWORDS,
+        _charset_from_content_type,
+        decode_html,
+        extract_main_text,
+        extract_text,
+    )
+
+    wanted = "conversion" if wet else "response"
+    ct = content_type.lower() if content_type else None
+    if wet:
+        fields, extract = "payload binary", None
+    elif main_content:
+        if (
+            main_content_lang is not None
+            and main_content_lang not in JUSTEXT_STOPWORDS
+        ):
+            raise ValueError(
+                f"ingest: no stopword list for {main_content_lang!r} "
+                f"(have {sorted(JUSTEXT_STOPWORDS)})"
+            )
+        fields = _MAIN_FIELDS
+        extract = partial(extract_main_text, lang=main_content_lang)
+    else:
+        fields, extract = _OUT_FIELDS, extract_text
+    schema = (
+        "warc_file string, record_offset long, target_uri string, " + fields
+    )
+    cols = [f.split()[0] for f in schema.split(", ")]
+
+    def frames(records):
+        import pandas as pd
+
+        rows: list[dict] = []
+        pending = 0
+        for r in records:
+            if r["warc_type"] != wanted or r["undecoded_coding"] is not None:
+                continue
+            if not wet and r["http_status"] != 200:
+                continue
+            if ct and not (r["content_type"] or "").lower().startswith(ct):
+                continue
+            row = {
+                "warc_file": r["warc_file"],
+                "record_offset": r["record_offset"],
+                "target_uri": r["target_uri"],
+            }
+            if extract is None:
+                row["payload"] = r["payload"]
+            else:
+                html = decode_html(
+                    r["payload"], _charset_from_content_type(r["content_type"])
+                )
+                row.update(extract(html))
+            rows.append(row)
+            pending += len(r["payload"])
+            if pending >= chunk_bytes:
+                yield pd.DataFrame(rows, columns=cols)
+                rows, pending = [], 0
+        if rows:
+            yield pd.DataFrame(rows, columns=cols)
+
+    return schema, frames
 
 
 def _mode_content_type(content_type: str | None, wet: bool) -> str | None:
@@ -365,11 +523,13 @@ def ingest_records(
     main_content_lang: str | None = None,
     wet: bool = False,
 ) -> DataFrame:
-    """The staged ingest over any WARC-records frame — the whole-file
-    :func:`read_warc` parse in :func:`ingest_warc_plan`, or the ranged
-    `read_warc_ranges` fetch in `cli ingest-warc --ranges`: WET
-    conversion records through :func:`ingest_wet_records`, HTML
-    responses through :func:`ingest_warc_records`."""
+    """The staged ingest over any WARC-records frame — the ranged
+    `read_warc_ranges` fetch of `cli ingest-warc --ranges` and
+    `streaming/cdx_stream.py`, and, over `read_warc`, the equivalence
+    oracle of :func:`ingest_warc_plan`: WET conversion records through
+    :func:`ingest_wet_records`, HTML responses through
+    :func:`ingest_warc_records`."""
+    _check_ingest_gates(wet, max_link_density, main_content, main_content_lang)
     if not wet:
         return ingest_warc_records(
             records,
@@ -379,12 +539,6 @@ def ingest_records(
             normalize_urls=normalize_urls,
             main_content=main_content,
             main_content_lang=main_content_lang,
-        )
-    if main_content or max_link_density is not None:
-        raise ValueError(
-            "ingest_warc_plan: max_link_density/main_content are "
-            "HTML-extraction gates; a WET payload is already "
-            "extracted text — drop them with wet=True"
         )
     return ingest_wet_records(
         records,
@@ -448,6 +602,7 @@ def ingest_warc_records(
     from ..functions.url import url_normalize
     from ..operators.html_text import extract_main_content
 
+    _check_ingest_gates(False, max_link_density, main_content, main_content_lang)
     recs = records.filter(
         (F.col("http_status") == 200) & F.col("undecoded_coding").isNull()
     )
@@ -466,18 +621,7 @@ def ingest_warc_records(
         F.col("payload").alias("html"),
         "content_type",
     )
-    if main_content_lang is not None and not main_content:
-        raise ValueError(
-            "ingest_warc_records: main_content_lang only applies with "
-            "main_content=True"
-        )
     if main_content:
-        if max_link_density is not None:
-            raise ValueError(
-                "ingest_warc_records: max_link_density is a page-level "
-                "gate; with main_content=True the block classifier "
-                "already removes linky blocks — pass one or the other"
-            )
         out = extract_main_content(
             pages,
             html_col="html",
@@ -566,7 +710,7 @@ def ingest_wet_records(
 
 # --- index-planned ingest (optimization r16) ----------------------------------
 #
-# The staged dedup plan decompresses and extracts every page, then
+# The whole-file dedup plan decompresses and extracts every page, then
 # shuffles the full extracted text through the URL-dedup aggregate to
 # make a decision that depends only on ~40 bytes of metadata per
 # record. With a capture index (CDX — the artifact every real crawl
@@ -709,133 +853,65 @@ def _fetch_extract_ranges(
     manifest: DataFrame,
     wet: bool,
     content_type: str | None,
-    chunk_bytes: int = 64 * 1024 * 1024,
 ) -> DataFrame:
     """Ranged winner fetch + parse + extract in ONE Python pass: seek
     to each winning gzip member, decompress just it, parse it with the
-    standard incremental parser, re-check the record-level gates, and
-    (HTML mode) extract text — non-winner bytes are never read.
+    standard incremental parser, and run :func:`_gate_extract` — the
+    whole-file shape's gate and extractor, re-checked on the PARSED
+    record, so a stale/lying index can only MISS rows here, never emit
+    a row the staged plan would not. Non-winner bytes are never read.
     ``record_offset`` is the manifest's decompressed ``ro`` (doc-id
     parity, see section note)."""
-    import pandas as pd
-
-    from ..operators.html_text import (
-        _charset_from_content_type,
-        decode_html,
-        extract_text,
-    )
     from ..sources.warc import WarcFormatError, parse_warc_stream
 
-    if wet:
-        schema = (
-            "warc_file string, record_offset long, target_uri string, "
-            "payload binary"
-        )
-        cols = ["warc_file", "record_offset", "target_uri", "payload"]
-    else:
-        schema = (
-            "warc_file string, record_offset long, target_uri string, "
-            "title string, text string, n_links int, "
-            "link_text_chars int, text_chars int"
-        )
-        cols = [
-            "warc_file", "record_offset", "target_uri", "title", "text",
-            "n_links", "link_text_chars", "text_chars",
-        ]
-    wanted = "conversion" if wet else "response"
-    ct = content_type.lower() if content_type else None
+    schema, frames = _gate_extract(wet, content_type)
 
-    def _run(batches) -> "pd.DataFrame":
+    def _run(batches):
         import gzip
         import io
 
-        fh = None
-        fh_name = None
+        opened: dict = {}  # the one open file of a consecutive run
+
+        def members(pdf):
+            for f, o, n, ro, wf in zip(
+                pdf["f"], pdf["o"], pdf["n"], pdf["ro"], pdf["wf"]
+            ):
+                name = str(f)
+                path = name[5:] if name.startswith("file:") else name
+                if path not in opened:
+                    for fh in opened.values():
+                        fh.close()
+                    opened.clear()
+                    opened[path] = open(path, "rb")
+                fh = opened[path]
+                fh.seek(int(o))
+                blob = fh.read(int(n))
+                if len(blob) != int(n):
+                    raise WarcFormatError(
+                        f"{name}: ranged read at {o} wanted {n} "
+                        f"bytes, got {len(blob)} (stale index?)"
+                    )
+                data = gzip.decompress(blob) if path.endswith(".gz") else blob
+                for r in parse_warc_stream(io.BytesIO(data), str(wf)):
+                    r["record_offset"] = int(ro)
+                    yield r
+
         try:
             for pdf in batches:
-                rows: list[dict] = []
-                pending = 0
-                for f, o, n, ro, wf in zip(
-                    pdf["f"], pdf["o"], pdf["n"], pdf["ro"], pdf["wf"]
-                ):
-                    name = str(f)
-                    path = name[5:] if name.startswith("file:") else name
-                    if fh is None or fh_name != path:
-                        if fh is not None:
-                            fh.close()
-                        fh = open(path, "rb")
-                        fh_name = path
-                    fh.seek(int(o))
-                    blob = fh.read(int(n))
-                    if len(blob) != int(n):
-                        raise WarcFormatError(
-                            f"{name}: ranged read at {o} wanted {n} "
-                            f"bytes, got {len(blob)} (stale index?)"
-                        )
-                    data = (
-                        gzip.decompress(blob)
-                        if path.endswith(".gz")
-                        else blob
-                    )
-                    for r in parse_warc_stream(io.BytesIO(data), str(wf)):
-                        # identical record-level gate to the staged
-                        # plan, re-checked on the PARSED record: a
-                        # stale/lying index can only MISS rows here,
-                        # never emit a row the staged plan would not
-                        if r["warc_type"] != wanted:
-                            continue
-                        if not wet and r["http_status"] != 200:
-                            continue
-                        if r["undecoded_coding"] is not None:
-                            continue
-                        if ct and not (
-                            (r["content_type"] or "").lower().startswith(ct)
-                        ):
-                            continue
-                        if wet:
-                            rows.append(
-                                {
-                                    "warc_file": str(wf),
-                                    "record_offset": int(ro),
-                                    "target_uri": r["target_uri"],
-                                    "payload": r["payload"],
-                                }
-                            )
-                            pending += len(r["payload"])
-                        else:
-                            html = decode_html(
-                                r["payload"],
-                                _charset_from_content_type(r["content_type"]),
-                            )
-                            rec = extract_text(html)
-                            rows.append(
-                                {
-                                    "warc_file": str(wf),
-                                    "record_offset": int(ro),
-                                    "target_uri": r["target_uri"],
-                                    "title": rec["title"],
-                                    "text": rec["text"],
-                                    "n_links": rec["n_links"],
-                                    "link_text_chars": rec["link_text_chars"],
-                                    "text_chars": rec["text_chars"],
-                                }
-                            )
-                            pending += rec["text_chars"]
-                        if pending >= chunk_bytes:
-                            yield pd.DataFrame(rows, columns=cols)
-                            rows, pending = [], 0
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
+                yield from frames(members(pdf))
         finally:
-            if fh is not None:
+            for fh in opened.values():
                 fh.close()
 
     return manifest.mapInPandas(_run, schema)
 
 
-def _project_ingest_output(fused: DataFrame, normalize_urls: bool, wet: bool) -> DataFrame:
-    """JVM tail of the indexed ingest shape: doc_id/url/quality-column
-    projection over the fetch-extract frame."""
+def _project_ingest_output(
+    fused: DataFrame, normalize_urls: bool, wet: bool, main_content: bool = False
+) -> DataFrame:
+    """JVM tail of both ingest shapes: doc_id/url/quality-column
+    projection over the :func:`_gate_extract` frame, in the staged
+    plan's column order."""
     from ..functions.url import url_normalize
     from ..operators.html_text import link_density_col
 
@@ -850,8 +926,13 @@ def _project_ingest_output(fused: DataFrame, normalize_urls: bool, wet: bool) ->
             doc_id,
             url_col.alias("url"),
             F.decode(F.col("payload"), "UTF-8").alias("text"),
-        ).withColumn("text_chars", F.length("text")).select(
-            "doc_id", "url", "text", "text_chars"
+        ).withColumn("text_chars", F.length("text"))
+    if main_content:
+        return fused.select(
+            doc_id, url_col.alias("url"), "title",
+            F.col("main_text").alias("text"),
+            "n_blocks", "n_good_blocks", "removed_chars",
+            "stopword_lang", "no_stopword_signal",
         )
     return fused.select(
         doc_id,
@@ -875,7 +956,7 @@ def ingest_warc_indexed(
     (see the section comment above): CDXJ winner manifest → ranged
     winner-only fetch+parse+extract → JVM projection, fully lazy, no
     driver collect, no broadcast, no whole-file decompression. Returns
-    None (caller runs the staged plan) when no usable index covers
+    None (caller runs the whole-file plan) when no usable index covers
     ``input_glob``, or when ``content_type`` is not a bare media type
     — the index's ``mime`` carries no parameters to match against.
     Output is row-identical to the staged plan — pytest pins equality

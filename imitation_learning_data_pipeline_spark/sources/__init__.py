@@ -6,6 +6,6 @@ __all__ = [
     "register_views",
     # web-ingestion sources live in submodules and import Spark-heavy
     # deps lazily — exported by name for API discoverability:
-    # sources.warc: read_warc, warc_records, read_warc_ranges
+    # sources.warc: read_warc, warc_files, read_warc_ranges
     # sources.cdx: read_cdxj, cdxj_columns, surt_host
 ]

@@ -12,7 +12,8 @@ ingests ONLY the captures each new shard names:
 - foreachBatch: parse lines with the SAME `sources/cdx.py` expressions
   as the batch reader → status/mime filters → fetch manifest →
   `read_warc_ranges` (seek/read/gunzip just those members) →
-  `ingest_warc_records` — every stage the batch verbs use, no fork,
+  `plans/web.py::ingest_records`, the records-frame ingest `cli
+  ingest-warc --ranges` runs — every stage the batch verbs use, no fork,
 - sink: documents parquet partitioned by ``ingest_batch`` with dynamic
   partition overwrite (an at-least-once replay REPLACES its own
   partition) — the repo's standard effectively-exactly-once story.
@@ -66,7 +67,7 @@ def run_incremental_cdx_ingest(
     pluggable ``path -> binary file-like`` seam for object-store
     deployments. Runs with Trigger.availableNow and blocks
     until drained."""
-    from ..plans.web import ingest_warc_records
+    from ..plans.web import ingest_records
     from ..sources.cdx import cdxj_columns
     from ..sources.warc import read_warc_ranges
 
@@ -89,7 +90,7 @@ def run_incremental_cdx_ingest(
             spark, idx.select("filename", "offset", "length"),
             base_dir=base_dir, opener=opener,
         )
-        docs = ingest_warc_records(
+        docs = ingest_records(
             records,
             content_type=content_type,
             dedup_url=dedup_url,

@@ -8,9 +8,10 @@ anti-pattern this module exists to avoid. Shape:
 
 - ``binaryFile`` readStream over the landing dir (checkpointed file
   offsets — each .warc.gz is parsed EXACTLY once across restarts),
-- foreachBatch: the SAME parse + extract + filter stages as the batch
-  plan (`sources/warc.py::warc_records` →
-  `plans/web.py::ingest_warc_records` — one code path, not a fork),
+- foreachBatch: the SAME whole-file ingest as the batch plan
+  (`plans/web.py::ingest_warc_files` over the micro-batch's
+  ``(path, content)`` frame — one code path, not a fork: one Python
+  pass per record parses, gates and extracts),
 - sink: documents-shaped parquet partitioned by ``ingest_batch`` with
   dynamic partition overwrite, so an at-least-once REPLAY of a
   micro-batch REPLACES its own partition instead of appending
@@ -78,14 +79,13 @@ def run_incremental_warc_ingest(
     VERDICT r13 #2 — the streaming arm previously lacked the mode);
     NOTE the two modes emit different document schemas, so one
     ``docs_path`` must stick to one mode across arrivals."""
-    from ..plans.web import ingest_warc_records
-    from ..sources.warc import warc_records
+    from ..plans.web import ingest_warc_files
 
     stream = warc_landing_stream(spark, landing_dir, max_files_per_trigger)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        docs = ingest_warc_records(
-            warc_records(batch_df),
+        docs = ingest_warc_files(
+            batch_df,
             content_type=content_type,
             max_link_density=max_link_density,
             dedup_url=dedup_url,

@@ -295,10 +295,14 @@ class TestIndexedIngest:
             sigs.unpersist()
 
     @pytest.mark.parametrize("index", [True, False], ids=["index", "no-index"])
-    @pytest.mark.parametrize("wet", [False, True], ids=["html", "wet"])
-    def test_index_plan_is_lazy(self, spark, tmp_path, wet, index):
+    @pytest.mark.parametrize(
+        "mode", [{}, {"wet": True}, {"main_content": True}],
+        ids=["html", "wet", "main_content"],
+    )
+    def test_index_plan_is_lazy(self, spark, tmp_path, mode, index):
         """Building (not executing) the ingest plan runs ZERO Spark
-        jobs, with or without an index. Jobs are counted per job group:
+        jobs, with or without an index, in every mode (main_content
+        never takes the index shape). Jobs are counted per job group:
         the status store's job list stops growing once it holds
         spark.ui.retainedJobs jobs, so a before/after size diff would
         pass late in a long session whatever ran."""
@@ -306,9 +310,12 @@ class TestIndexedIngest:
             ingest_warc_plan,
         )
 
-        corpus = _corpus(tmp_path, wet, index)
-        work = measured(
-            spark,
-            lambda: ingest_warc_plan(spark, corpus, dedup_url=True, wet=wet),
-        )
-        assert work.jobs == 0
+        corpus = _corpus(tmp_path, mode.get("wet", False), index)
+        for dedup in (True, False):
+            work = measured(
+                spark,
+                lambda: ingest_warc_plan(
+                    spark, corpus, dedup_url=dedup, **mode
+                ),
+            )
+            assert work.jobs == 0

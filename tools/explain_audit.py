@@ -6,6 +6,8 @@ For each audited query, prints the formatted plan and greps for:
 - number of Exchange nodes (shuffle count — window chains sharing a key
   should reuse one exchange)
 - WholeStageCodegen coverage (hot path stays JVM-side)
+- expressions forbidden inside a Filter condition (``forbid_in_filter``:
+  regexes over the optimized plan's predicates, aliases inlined)
 
 Usage: python tools/explain_audit.py [query ...]
 """
@@ -240,9 +242,18 @@ AUDIT = {
     },
     # round-13: same pin for the 8-stage funnel without decontam —
     # measured baseline 217 exchanges (sf0.01).
+    # The gopher stage's keep predicate is pushed below its feature
+    # projections and Catalyst inlines every alias into the Filter;
+    # lambdas get no subexpression elimination, so a raw word array
+    # (split on [ \t\n\r]+, then x != '') there is re-split once per
+    # reference. The word features must stay scalar expressions.
     "pipeline_curation_full": {
         "max_exchanges": 250,
         "forbid": ["CartesianProduct", "BroadcastNestedLoopJoin"],
+        "forbid_in_filter": [
+            r"filter\(split\(text#\d+, \[ \t\n\r\]\+, -1\), "
+            r"lambdafunction\(NOT \(lambda x_\d+#\d+ = \)",
+        ],
     },
     # round-13: the WARC ingest bench row — binaryFile scan → two
     # Arrow-batched MapInPandas stages (parse, extract) in ONE
@@ -327,6 +338,26 @@ AUDIT = {
 }
 
 
+def _filter_conditions(df) -> list[str]:
+    """The condition of every Filter node of the optimized plan — the
+    predicate as Catalyst will evaluate it, aliases inlined — including
+    the plans of cached (pinned) relations: their inner children, whose
+    adaptive plans and query stages hold the physical tree as fields."""
+    out, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "Filter":
+            out.append(node.condition().toString())
+        elif name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        for kids in (node.children(), node.innerChildren()):
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
 def main() -> int:
     from imitation_learning_data_pipeline_spark.plans import QUERIES
     from imitation_learning_data_pipeline_spark.session import get_spark
@@ -361,6 +392,9 @@ def main() -> int:
         for bad in spec.get("forbid", []):
             if bad in plan:
                 problems.append(f"forbidden node {bad} in plan")
+        for pat in spec.get("forbid_in_filter", []):
+            if any(re.search(pat, c) for c in _filter_conditions(df)):
+                problems.append(f"forbidden {pat!r} in a Filter condition")
         for first, second in spec.get("before", []):
             # parent-above-child ordering in the executed-plan tree text
             tree_str = df._jdf.queryExecution().executedPlan().toString()
