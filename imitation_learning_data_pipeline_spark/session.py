@@ -3,7 +3,10 @@
 Local test profile targets local[N] single-JVM mode; the settings that
 matter at cluster scale (AQE, skew-join handling, shuffle partitions,
 broadcast threshold) are the same knobs a 1000-executor deployment would
-set — nothing here is local-only except master/driver memory.
+set. Three settings are sized for the process, not the cluster: the
+master, the driver heap (a share of this host's memory) and the driver
+JIT policy (:data:`DRIVER_JIT_OPTIONS`), which suits a short-lived driver
+— every CLI verb is one — and, in local mode, the tasks it runs.
 """
 
 from __future__ import annotations
@@ -14,6 +17,23 @@ from pyspark.sql import SparkSession
 
 # Share of physical memory the driver JVM's heap may take by default.
 DRIVER_HEAP_FRACTION = 0.6
+
+# HotSpot's Tier-4 (C2) thresholds at 10x their defaults (5000, 600,
+# 15000, 40000). A verb's JVM lives 10-40 s; with the defaults C2 keeps
+# both its threads busy for the whole run compiling Catalyst and
+# Scala-collection code that runs for seconds and then exits (40-48% of
+# a benchmark chain's CPU). At 10x only hot code (per-row loops,
+# generated stage code) reaches C2 and planning code stays in C1.
+# C1 alone (TieredStopAtLevel=1) loses at steady state: warm task time
+# +36% over six sf0.1 bench queries; 30x keeps code profiling in tier 3
+# too long (+25% executor task CPU). Driver only: in local mode the
+# driver runs the tasks, on a cluster it is the short-lived process.
+DRIVER_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000",
+    "-XX:Tier4MinInvocationThreshold=6000",
+    "-XX:Tier4CompileThreshold=150000",
+    "-XX:Tier4BackEdgeThreshold=400000",
+)
 
 
 def default_driver_memory(meminfo: str) -> str:
@@ -75,7 +95,12 @@ def get_spark(
         # Unicode-correct and matches DuckDB on this corpus.
         .config("spark.sql.icu.caseMappings.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    # The caller's own options go last: HotSpot takes the last value of a
+    # repeated flag, so they override the policy's.
+    java_options = (*DRIVER_JIT_OPTIONS, extra_conf.pop("spark.driver.extraJavaOptions", ""))
+    builder = builder.config("spark.driver.extraJavaOptions", " ".join(java_options).strip())
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -69,20 +69,13 @@ def main() -> int:
     args = ap.parse_args()
     sizes = [int(s) for s in args.sizes.split(",")]
 
-    from pyspark.sql import SparkSession
-
     from imitation_learning_data_pipeline_spark.pipeline.manifest import (
         read_via_manifest,
         write_manifest,
     )
+    from imitation_learning_data_pipeline_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = get_spark("bench-manifest-readpath")
     spark.sparkContext.setLogLevel("ERROR")
     seed = _make_seed(spark)
 

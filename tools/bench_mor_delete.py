@@ -21,8 +21,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from imitation_learning_data_pipeline_spark.session import get_spark
 
 
 def _du(path: str) -> int:
@@ -63,15 +64,7 @@ def _bytes_written(before: dict[str, float], path: str) -> int:
 def main() -> None:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
     n_files = int(sys.argv[2]) if len(sys.argv) > 2 else 64
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = get_spark("bench-mor-delete")
     from imitation_learning_data_pipeline_spark.pipeline.bloom import write_blooms
     from imitation_learning_data_pipeline_spark.pipeline.deletes import (
         delete_from_mor,
