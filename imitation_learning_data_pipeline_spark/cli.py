@@ -45,13 +45,8 @@ def _spark(app: str) -> SparkSession:
 
 
 def cmd_discover(args: argparse.Namespace) -> int:
-    from .pipeline.compact import (
-        _fs,
-        _recover_staged_swap,
-        _staged_swap_in,
-        _staged_swap_write_journal,
-    )
     from .pipeline.discover import discover, discover_delta
+    from .pipeline.fsio import _fs, _recover_staged_swap, _staged_swap
 
     spark = _spark("discover")
     # Crash-safe manifest swap (discover_refactored.py:23-27 writes tmp +
@@ -59,12 +54,11 @@ def cmd_discover(args: argparse.Namespace) -> int:
     # point, then swap. A run that crashed mid-swap is finished here
     # (journal present) or its staging discarded, before the manifest is
     # read as this run's prior state.
-    fs, _ = _fs(spark, args.manifest)
-    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs, jmanifest = _fs(spark, args.manifest)
     tmp, pending = args.manifest + ".tmp", args.manifest + ".pending"
-    _recover_staged_swap(fs, jpath, args.manifest, tmp, pending)
+    _recover_staged_swap(spark, fs, args.manifest, tmp, pending)
     prev = None
-    if fs.exists(jpath(args.manifest)):
+    if fs.exists(jmanifest):
         prev = spark.read.parquet(args.manifest)
 
     manifest = discover(
@@ -84,9 +78,7 @@ def cmd_discover(args: argparse.Namespace) -> int:
         "chunk", "episode_index", F.col("status") == "ORPHAN_VIDEO"
     )
     manifest.write.mode("overwrite").parquet(tmp)
-    _staged_swap_write_journal(fs, jpath, pending)
-    _staged_swap_in(fs, jpath, args.manifest, tmp)
-    fs.delete(jpath(pending), False)
+    _staged_swap(spark, fs, args.manifest, tmp, pending)
 
     done = spark.read.parquet(args.manifest)
     delta = done if args.print_all else discover_delta(done)
@@ -286,7 +278,7 @@ def cmd_dedup(args: argparse.Namespace) -> int:
         import hashlib
 
         from . import cache
-        from .pipeline.compact import _fs
+        from .pipeline.fsio import _fs
         from .plans.dedup import dedup_against_store, minhash_signatures
 
         # Hadoop FileSystem existence check — os.path would declare any

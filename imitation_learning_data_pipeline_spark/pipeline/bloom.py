@@ -54,17 +54,12 @@ import base64
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .compact import _fs
-from .snapshot import _read_json, _write_json
+from .fsio import _fs, _jvm_path, _read_json, _write_json
 
 BLOOM_REL = "_manifest/blooms.json"
 
 _DEFAULT_NBYTES = 4096
 _DEFAULT_K = 7
-
-
-def _jvm_path(spark):
-    return spark.sparkContext._jvm.org.apache.hadoop.fs.Path
 
 
 def _bloom_path(path: str) -> str:
@@ -76,53 +71,9 @@ def has_blooms(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(_jvm_path(spark)(_bloom_path(path))))
 
 
-def _local_form(fs, p: str) -> str | None:
-    """The plain-OS path when ``fs`` is the local filesystem, else
-    None. The sidecar is megabytes (unlike the manifest's file list),
-    and py4j ships byte arrays at ~1 MB/s — measured 6-10 s per probe
-    through the generic JVM stream read vs milliseconds through
-    ``open()``. Non-local schemes keep the JVM path."""
-    if fs.getUri().getScheme() != "file":
-        return None
-    return p[len("file:"):] if p.startswith("file:") else p
-
-
-def _read_sidecar(spark, fs, jvm_path, p: str) -> dict:
-    import json as _json
-
-    local = _local_form(fs, p)
-    if local is not None:
-        with open(local, "rb") as f:
-            return _json.loads(f.read())
-    return _read_json(spark, fs, jvm_path, p)
-
-
-def _write_sidecar(fs, jvm_path, p: str, payload: dict) -> None:
-    """Atomic sidecar write: local fast path (tmp + os.replace) or the
-    generic JVM stream for remote schemes. Also drops any stale local
-    CRC so Hadoop's checksummed LocalFileSystem never rejects a
-    Python-written file."""
-    import json as _json
-    import os as _os
-
-    local = _local_form(fs, p)
-    if local is not None:
-        _os.makedirs(_os.path.dirname(local), exist_ok=True)
-        tmp = local + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(payload, f, sort_keys=True)
-        _os.replace(tmp, local)
-        d, b = _os.path.split(local)
-        crc = _os.path.join(d, f".{b}.crc")
-        if _os.path.exists(crc):
-            _os.remove(crc)
-        return
-    _write_json(fs, jvm_path, p, payload)
-
-
 def read_bloom_sidecar(spark: SparkSession, path: str) -> dict:
     fs, _ = _fs(spark, path)
-    return _read_sidecar(spark, fs, _jvm_path(spark), _bloom_path(path))
+    return _read_json(spark, fs, _bloom_path(path))
 
 
 def _hash_col(c: str):
@@ -302,7 +253,7 @@ def write_blooms(
             },
             "timezone": spark.conf.get("spark.sql.session.timeZone"),
         }
-        _write_sidecar(fs, jvm_path, _bloom_path(path), payload)
+        _write_json(spark, fs, _bloom_path(path), payload)
         return payload
     finally:
         _release_table_lock(fs, jvm_path, path)
@@ -324,8 +275,7 @@ def apply_bloom_deltas(
     if not has_blooms(spark, path):
         return False
     fs, _ = _fs(spark, path)
-    jvm_path = _jvm_path(spark)
-    cur = _read_sidecar(spark, fs, jvm_path, _bloom_path(path))
+    cur = _read_json(spark, fs, _bloom_path(path))
     dead = set(delete)
     blooms = {r: b for r, b in cur["blooms"].items() if r not in dead}
     if add:
@@ -345,7 +295,7 @@ def apply_bloom_deltas(
         except Exception:
             pass  # added files stay bloom-less → always kept
     payload = dict(cur, blooms=blooms)
-    _write_sidecar(fs, jvm_path, _bloom_path(path), payload)
+    _write_json(spark, fs, _bloom_path(path), payload)
     return True
 
 
@@ -357,8 +307,7 @@ def refresh_blooms_if_present(spark: SparkSession, path: str) -> bool:
     if not has_blooms(spark, path):
         return False
     fs, _ = _fs(spark, path)
-    jvm_path = _jvm_path(spark)
-    cur = _read_sidecar(spark, fs, jvm_path, _bloom_path(path))
+    cur = _read_json(spark, fs, _bloom_path(path))
     blooms = build_file_blooms(spark, path, cur["cols"], cur["nbytes"], cur["k"])
     from .manifest import read_manifest_entries
 
@@ -368,7 +317,7 @@ def refresh_blooms_if_present(spark: SparkSession, path: str) -> bool:
             blooms.setdefault(rel, {c: empty for c in cur["cols"]})
     except Exception:
         pass
-    _write_sidecar(fs, jvm_path, _bloom_path(path), dict(cur, blooms=blooms))
+    _write_json(spark, fs, _bloom_path(path), dict(cur, blooms=blooms))
     return True
 
 

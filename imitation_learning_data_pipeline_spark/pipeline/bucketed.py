@@ -54,10 +54,10 @@ def _keys(by) -> list[str]:
 
 
 def is_bucketed_path(spark: SparkSession, path: str) -> bool:
-    from .compact import _fs
+    from .fsio import _fs, _jvm_path
 
     fs, _ = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     return fs.exists(jvm_path(f"{path.rstrip('/')}/{MARKER}"))
 
 
@@ -120,10 +120,10 @@ def bucket_write(
     # marker: the repo's DML/maintenance ops refuse this path (their
     # file rewrites would break the catalog's bucket spec — see
     # guard_not_bucketed)
-    from .compact import _fs
+    from .fsio import _fs, _jvm_path
 
     fs, _ = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     out = fs.create(jvm_path(f"{path.rstrip('/')}/{MARKER}"), True)
     out.write(
         bytearray(

@@ -17,12 +17,11 @@ assembled with no scan at all (the stores ARE the card's aggregates).
 
 from __future__ import annotations
 
-import json as _json
-
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .compact import _fs, _list_parquet
+from .compact import _list_parquet
+from .fsio import _fs, _write_json
 
 
 def data_card(
@@ -146,18 +145,9 @@ def data_card(
 
 
 def write_data_card(spark: SparkSession, path: str, out: str, **kwargs) -> dict:
-    """Write the card next to the data (or wherever ``out`` points) via
-    the repo's atomic tmp+rename convention."""
+    """Write the card next to the data (or wherever ``out`` points)
+    through the atomic JSON write."""
     card = data_card(spark, path, **kwargs)
     fs, _ = _fs(spark, out)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    payload = _json.dumps(card, indent=2, sort_keys=True, default=str).encode()
-    tmp = jvm_path(out + ".tmp")
-    stream = fs.create(tmp, True)
-    stream.write(bytearray(payload))
-    stream.close()
-    dst = jvm_path(out)
-    fs.delete(dst, False)
-    if not fs.rename(tmp, dst):
-        raise IOError(f"data_card: could not write {out}")
+    _write_json(spark, fs, out, card)
     return card

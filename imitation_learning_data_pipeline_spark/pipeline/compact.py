@@ -20,7 +20,11 @@ every partition through ONE task into ONE file).
 The swap is two directory renames (write tmp → move old aside → move
 tmp in). That window is small but NOT atomic; leftovers from a crashed
 run are cleaned up at the start of the next, and a failure between the
-renames restores the original directory. An object-store deployment
+renames restores the original directory. Compaction keeps this
+rename-aside swap rather than the journaled staged swap every other
+whole-store rewrite uses (``pipeline/fsio.py``): the old tree must
+survive the swap, because snapshots, history and the manifest are
+carried back from it. An object-store deployment
 would write to a new prefix and flip a table/manifest pointer instead
 (same plan, different commit protocol — see SCALING.md on the
 Delta/Iceberg mapping).
@@ -34,13 +38,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _fs(spark: SparkSession, path: str):
-    """(Hadoop FileSystem, qualified Path) for ``path`` — any scheme."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(conf), jpath
+from .fsio import _fs, _jvm_path, _rm
 
 
 def _list_parquet(
@@ -73,85 +71,6 @@ def _list_parquet(
             b, n_f = by_dir.get(top, (0, 0))
             by_dir[top] = (b + sz, n_f + 1)
     return total, files, by_dir
-
-
-def _rm(fs, jvm_path_cls, path_str: str) -> None:
-    p = jvm_path_cls(path_str)
-    if fs.exists(p):
-        fs.delete(p, True)
-
-
-def _read_small_bytes(spark, fs, jvm_path_cls, path_str: str) -> bytes:
-    """Whole-small-file read through the JVM (py4j byte[] args are
-    copies, so a chunked read loop cannot work) — the ONE definition
-    the delta-log/HLL/PSI readers share."""
-    stream = fs.open(jvm_path_cls(path_str))
-    try:
-        jvm = spark.sparkContext._jvm
-        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-
-
-def _read_json_meta_if_exists(spark, path: str, name: str) -> dict:
-    """``{path}/{name}`` parsed as JSON; ``{}`` when absent — the
-    store-fence metadata shape (HLL registers, PSI baseline)."""
-    import json as _json
-
-    fs, _ = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    p = f"{path}/{name}"
-    if not fs.exists(jvm_path(p)):
-        return {}
-    return _json.loads(_read_small_bytes(spark, fs, jvm_path, p).decode())
-
-
-# --- staged-swap commit: the shared small-store discipline ------------------
-#
-# Several tiny persisted stores (HLL registers, the PSI drift baseline)
-# are rewritten WHOLE on every fold. The crash-safe commit for that
-# shape: stage the new store to a sibling tmp dir, land a sibling
-# journal file atomically (the commit point), drop the old dir, rename
-# the staged dir in, clear the journal. Callers run the sequence under
-# the table maintenance lock.
-
-
-def _staged_swap_write_journal(fs, jvm_path_cls, pending: str) -> None:
-    """Atomically land the commit-point journal (tmp + rename)."""
-    jtmp = jvm_path_cls(f"{pending}.tmp")
-    stream = fs.create(jtmp, True)
-    stream.write(bytearray(b"{}"))
-    stream.close()
-    if not fs.rename(jtmp, jvm_path_cls(pending)):
-        raise IOError(f"staged swap: could not commit journal at {pending}")
-
-
-def _staged_swap_in(fs, jvm_path_cls, path: str, tmp: str) -> None:
-    """Swap the staged store in: drop the old dir, rename staged in."""
-    _rm(fs, jvm_path_cls, path)
-    if not fs.rename(jvm_path_cls(tmp), jvm_path_cls(path)):
-        raise IOError(f"staged swap: could not swap staged store into {path}")
-
-
-def _recover_staged_swap(fs, jvm_path_cls, path: str, tmp: str, pending: str) -> bool:
-    """Complete (or discard) a crashed staged-swap commit. Journal
-    present → the staged dir is the truth, finish the swap; journal
-    absent → pre-journal staging is safe to discard. Idempotent; call
-    under the maintenance lock. Returns True if a journaled commit was
-    finished."""
-    jpend = jvm_path_cls(pending)
-    if not fs.exists(jpend):
-        _rm(fs, jvm_path_cls, tmp)
-        return False
-    if fs.exists(jvm_path_cls(tmp)):
-        _staged_swap_in(fs, jvm_path_cls, path, tmp)
-    elif not fs.exists(jvm_path_cls(path)):
-        raise IOError(
-            f"staged swap: journal {pending} present but neither the "
-            "store nor the staged dir exists — manual inspection required"
-        )
-    fs.delete(jpend, False)
-    return True
 
 
 class ConcurrentMaintenanceError(RuntimeError):
@@ -253,7 +172,7 @@ def release_lock(spark: SparkSession, path: str) -> bool:
     """Force-release a table's maintenance lock (e.g. after a crashed
     holder). Returns True if a lock was removed."""
     fs, _ = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     return _release_table_lock(fs, jvm_path, path)
 
 
@@ -294,7 +213,7 @@ def compact(
         raise ValueError("compact: pass cluster_by OR zorder_by, not both")
     path = path.rstrip("/")
     fs, jpath = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     from .deletes import guard_no_pending_deletes
 
     guard_no_pending_deletes(spark, path, "compact")
@@ -330,7 +249,7 @@ def _compact_locked(
     zorder_by: list[str] | None = None,
 ) -> dict:
     fs, jpath = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     # stage-aside dirs are DOT-prefixed siblings: for a partition-subtree
     # compact (compact_sprawling) they live INSIDE the table directory,
     # where a crash-stranded `split=train__compact_old` would otherwise
@@ -535,7 +454,7 @@ def compact_sprawling(
         [partition_col] if isinstance(partition_col, str) else list(partition_col or [])
     )
     fs, jpath = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     from .deletes import guard_no_pending_deletes
 
     guard_no_pending_deletes(spark, path, "compact_sprawling")

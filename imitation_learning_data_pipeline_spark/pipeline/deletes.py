@@ -60,17 +60,13 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .compact import _fs
+from .fsio import _fs, _jvm_path, _rm
 
 DV_DIR = "_manifest/deletes"
 
 
 class PendingDeletesError(RuntimeError):
     """A file-rewriting op ran while deletion vectors are live."""
-
-
-def _jvm_path(spark):
-    return spark.sparkContext._jvm.org.apache.hadoop.fs.Path
 
 
 def _dv_root(path: str) -> str:
@@ -221,7 +217,7 @@ def delete_from_mor(
     change. Returns {rows_deleted, dv_files}.
     """
     from .compact import _acquire_lock, _lock_path, _release_table_lock
-    from .merge import _find_phase_source, _rm
+    from .merge import _find_phase_source
 
     from .bucketed import guard_not_bucketed
 
@@ -304,7 +300,6 @@ def delete_keys_mor(
     delete nothing.
     """
     from .compact import _acquire_lock, _lock_path, _release_table_lock
-    from .merge import _rm
 
     from .bucketed import guard_not_bucketed
 
@@ -392,7 +387,7 @@ def purge_deletes(
     {files_touched, files_added, rows_purged}.
     """
     from .compact import _acquire_lock, _lock_path, _release_table_lock
-    from .merge import _commit_staged, _recover_pending, _rm
+    from .merge import _commit_staged, _recover_pending
 
     from .bucketed import guard_not_bucketed
 

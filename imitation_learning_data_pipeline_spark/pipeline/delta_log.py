@@ -37,11 +37,7 @@ from urllib.parse import quote, unquote
 
 from pyspark.sql import SparkSession
 
-from .compact import _fs
-
-
-def _jvm_path(spark):
-    return spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+from .fsio import _fs, _jvm_path, _read_bytes, _rm
 
 
 def _log_dir(path: str) -> str:
@@ -54,14 +50,6 @@ def has_delta_log(spark: SparkSession, path: str) -> bool:
     installed."""
     fs, _ = _fs(spark, path)
     return bool(fs.exists(_jvm_path(spark)(_log_dir(path))))
-
-
-def _read_small_file(spark, fs, jpath) -> bytes:
-    """Whole-file read — delegates to the shared compact helper (one
-    definition for the delta-log/HLL/PSI small-file reads)."""
-    from .compact import _read_small_bytes
-
-    return _read_small_bytes(spark, fs, _jvm_path(spark), jpath.toString())
 
 
 def read_delta_snapshot(spark: SparkSession, path: str) -> dict:
@@ -98,7 +86,7 @@ def read_delta_snapshot(spark: SparkSession, path: str) -> dict:
     v = parts = None
     if "_last_checkpoint" in names:
         meta = json.loads(
-            _read_small_file(spark, fs, jpath(f"{log}/_last_checkpoint")).decode("utf-8")
+            _read_bytes(spark, fs, f"{log}/_last_checkpoint").decode("utf-8")
         )
         v = int(meta["version"])
         parts = int(meta.get("parts") or 1)
@@ -195,7 +183,7 @@ def read_delta_snapshot(spark: SparkSession, path: str) -> dict:
                 f"snapshot of {path}"
             )
         expected = ver + 1
-        payload = _read_small_file(spark, fs, jpath(f"{log}/{n}")).decode("utf-8")
+        payload = _read_bytes(spark, fs, f"{log}/{n}").decode("utf-8")
         for line in payload.splitlines():
             line = line.strip()
             if not line:
@@ -720,8 +708,6 @@ def _write_delta_checkpoint(
         if int(ts) > now_ms - _TOMBSTONE_RETENTION_MS and rel not in live
     ]
     tmp = f"{log}/.checkpoint_tmp"
-    from .compact import _rm
-
     _rm(fs, jpath, tmp)
     spark.createDataFrame(rows, schema).coalesce(1).write.mode(
         "overwrite"

@@ -20,12 +20,11 @@ log write warns rather than failing a committed operation.
 
 from __future__ import annotations
 
-import json as _json
 import uuid as _uuid
 
 from pyspark.sql import SparkSession
 
-from .compact import _fs
+from .fsio import _fs, _read_json, _write_json
 
 _HISTORY = "_history"
 
@@ -38,15 +37,10 @@ def log_event(spark: SparkSession, path: str, op: str, stats: dict) -> None:
     path = path.rstrip("/")
     try:
         fs, _ = _fs(spark, path)
-        jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
         ts = _dt.datetime.now(_dt.timezone.utc)
         name = ts.strftime("%Y%m%dT%H%M%S.%f") + "-" + _uuid.uuid4().hex[:8]
         event = {"op": op, "ts_utc": ts.isoformat(), **stats}
-        fs.mkdirs(jvm_path(f"{path}/{_HISTORY}"))
-        payload = _json.dumps(event, sort_keys=True, default=str).encode()
-        stream = fs.create(jvm_path(f"{path}/{_HISTORY}/{name}.json"), True)
-        stream.write(bytearray(payload))
-        stream.close()
+        _write_json(spark, fs, f"{path}/{_HISTORY}/{name}.json", event)
     except Exception as e:  # pragma: no cover - depends on FS failures
         import sys
 
@@ -57,19 +51,13 @@ def history(spark: SparkSession, path: str) -> list[dict]:
     """Parsed maintenance events, oldest-first (filename order — the
     names embed the UTC timestamp)."""
     path = path.rstrip("/")
-    fs, _ = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    d = jvm_path(f"{path}/{_HISTORY}")
+    fs, d = _fs(spark, f"{path}/{_HISTORY}")
     if not fs.exists(d):
         return []
-    jvm = spark.sparkContext._jvm
-    out = []
-    for st in sorted(
-        (s for s in fs.listStatus(d) if s.getPath().getName().endswith(".json")),
-        key=lambda s: s.getPath().getName(),
-    ):
-        stream = fs.open(st.getPath())
-        raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        stream.close()
-        out.append(_json.loads(raw.decode()))
-    return out
+    return [
+        _read_json(spark, fs, st.getPath().toString())
+        for st in sorted(
+            (s for s in fs.listStatus(d) if s.getPath().getName().endswith(".json")),
+            key=lambda s: s.getPath().getName(),
+        )
+    ]

@@ -49,6 +49,8 @@ import os
 import time
 import uuid
 
+from .fsio import _read_bytes
+
 
 class LockConflict(RuntimeError):
     """Internal: another writer holds (or won) the lock. Translated to
@@ -149,10 +151,7 @@ class ElectionBackend(CreateExclusiveBackend):
         leaves the file in place, since deleting a rival's lock is the
         one unrecoverable move)."""
         try:
-            jvm = spark.sparkContext._jvm
-            stream = fs.open(lp)
-            raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-            stream.close()
+            raw = _read_bytes(spark, fs, lp.toString())
             return json.loads(raw.decode() or "{}").get("token")
         except Exception:
             return None

@@ -50,19 +50,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .compact import _fs
-from .snapshot import _live_rels, _read_json, _write_json
+from .fsio import MERGE_JOURNAL, _fs, _jvm_path, _read_json, _write_json
+from .snapshot import _live_rels
 
 MANIFEST_DIR = "_manifest"
 MANIFEST_REL = f"{MANIFEST_DIR}/current.json"
-
-#: merge.py's journal name (duplicated to avoid a circular import; the
-#: value is pinned by tests/test_round7d_ops.py).
-_PENDING = "__merge_pending.json"
-
-
-def _jvm_path(spark):
-    return spark.sparkContext._jvm.org.apache.hadoop.fs.Path
 
 
 def _manifest_path(path: str) -> str:
@@ -77,7 +69,7 @@ def has_manifest(spark: SparkSession, path: str) -> bool:
 def read_manifest_entries(spark: SparkSession, path: str) -> dict:
     """The raw manifest payload: {"files": [[rel, bytes], ...], "op": …}."""
     fs, _ = _fs(spark, path)
-    return _read_json(spark, fs, _jvm_path(spark), _manifest_path(path))
+    return _read_json(spark, fs, _manifest_path(path))
 
 
 #: per-file stat value serialization: JSON-native passthrough for
@@ -156,9 +148,7 @@ def _refresh_unlocked(
     jvm_path = _jvm_path(spark)
     if stats_cols is None and has_manifest(spark, path):
         stats_cols = (
-            _read_json(spark, fs, jvm_path, _manifest_path(path)).get(
-                "stats_cols"
-            )
+            _read_json(spark, fs, _manifest_path(path)).get("stats_cols")
             or []
         )
     stats_cols = list(stats_cols or [])
@@ -176,7 +166,7 @@ def _refresh_unlocked(
                 rel, {"rows": 0, **{c: [None, None] for c in stats_cols}}
             )
         payload["stats"] = stats
-    _write_json(fs, jvm_path, _manifest_path(path), payload)
+    _write_json(spark, fs, _manifest_path(path), payload)
     return payload
 
 
@@ -239,8 +229,7 @@ def apply_deltas(
     if not has_manifest(spark, path):
         return False
     fs, _ = _fs(spark, path)
-    jvm_path = _jvm_path(spark)
-    cur = _read_json(spark, fs, jvm_path, _manifest_path(path))
+    cur = _read_json(spark, fs, _manifest_path(path))
     dead = set(delete)
     files = [[r, b] for r, b in cur["files"] if r not in dead]
     files += [[r, int(b)] for r, b in add]
@@ -284,7 +273,7 @@ def apply_deltas(
                 # honestly return None until the next refresh
                 pass
         payload["stats"] = stats
-    _write_json(fs, jvm_path, _manifest_path(path), payload)
+    _write_json(spark, fs, _manifest_path(path), payload)
     return True
 
 
@@ -309,7 +298,7 @@ def read_via_manifest(spark: SparkSession, path: str) -> DataFrame:
     jvm_path = _jvm_path(spark)
     from .deletes import apply_deletes
 
-    if fs.exists(jvm_path(f"{path}/{_PENDING}")):
+    if fs.exists(jvm_path(f"{path}/{MERGE_JOURNAL}")):
         return apply_deletes(spark, path, spark.read.parquet(path))
     cur = read_manifest_entries(spark, path)
     if not cur["files"]:
@@ -438,7 +427,7 @@ def read_pruned(
     fs, _ = _fs(spark, path)
     jvm_path = _jvm_path(spark)
     if not has_manifest(spark, path) or fs.exists(
-        jvm_path(f"{path}/{_PENDING}")
+        jvm_path(f"{path}/{MERGE_JOURNAL}")
     ):
         return _residual(_mor(spark.read.parquet(path)))
     try:
@@ -757,7 +746,7 @@ def read_where(spark: SparkSession, path: str, where: str) -> DataFrame:
         return _plain()
     fs, _ = _fs(spark, path)
     jvm_path = _jvm_path(spark)
-    if fs.exists(jvm_path(f"{path}/{_PENDING}")):
+    if fs.exists(jvm_path(f"{path}/{MERGE_JOURNAL}")):
         return _plain()
     try:
         pruned = prune_files_combined(spark, path, bounds, points)
@@ -782,7 +771,7 @@ def manifest_row_count(spark: SparkSession, path: str) -> int | None:
     if not has_manifest(spark, path):
         return None
     fs, _ = _fs(spark, path)
-    if fs.exists(_jvm_path(spark)(f"{path}/{_PENDING}")):
+    if fs.exists(_jvm_path(spark)(f"{path}/{MERGE_JOURNAL}")):
         return None  # manifest may trail the journaled commit
     cur = read_manifest_entries(spark, path)
     stats = cur.get("stats") or {}
@@ -816,7 +805,7 @@ def manifest_col_bounds(
     if not has_manifest(spark, path):
         return None
     fs, _ = _fs(spark, path)
-    if fs.exists(_jvm_path(spark)(f"{path}/{_PENDING}")):
+    if fs.exists(_jvm_path(spark)(f"{path}/{MERGE_JOURNAL}")):
         return None
     from .deletes import has_live_deletes
 
@@ -872,7 +861,7 @@ def vacuum_orphans(
         )
     fs, _ = _fs(spark, path)
     jvm_path = _jvm_path(spark)
-    if fs.exists(jvm_path(f"{path}/{_PENDING}")):
+    if fs.exists(jvm_path(f"{path}/{MERGE_JOURNAL}")):
         raise ValueError(
             f"vacuum_orphans: {path} has a pending commit journal — "
             "recover it first (pipeline.merge.recover); the manifest may "

@@ -62,11 +62,17 @@ state is the snapshot id the last refresh read.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 
-from .compact import _acquire_lock, _fs, _lock_path, _release_table_lock
+from .compact import _acquire_lock, _lock_path, _release_table_lock
+from .fsio import (
+    _fs,
+    _jvm_path,
+    _read_json,
+    _recover_staged_swap,
+    _staged_swap,
+    _write_json,
+)
 
 _STATE = "_mv_state.json"  # legacy single-file form (read fallback, seq −1)
 _STATE_PREFIX = "_mv_state."  # versioned: _mv_state.<seq>.json
@@ -74,10 +80,6 @@ _STATE_PREFIX = "_mv_state."  # versioned: _mv_state.<seq>.json
 
 class BaseMutatedError(RuntimeError):
     """The base table was rewritten (not appended) under a matview."""
-
-
-def _jvm_path(spark):
-    return spark.sparkContext._jvm.org.apache.hadoop.fs.Path
 
 
 def _list_base_files(spark: SparkSession, base: str) -> dict[str, int]:
@@ -151,31 +153,21 @@ def _read_state(spark: SparkSession, mv_path: str) -> dict:
     versions = _state_versions(fs, jvm_path, mv_path)
     if not versions:
         raise FileNotFoundError(f"matview state missing under {mv_path}")
-    jvm = spark.sparkContext._jvm
-    stream = fs.open(jvm_path(f"{mv_path}/{versions[-1][1]}"))
-    raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    stream.close()
-    return json.loads(raw.decode())
+    return _read_json(spark, fs, f"{mv_path}/{versions[-1][1]}")
 
 
 def _write_state(spark: SparkSession, mv_path: str, state: dict) -> None:
-    """Commit state as ``_mv_state.<seq+1>.json``: tmp-write, then
-    rename to a name that DOESN'T exist yet (atomic on HDFS/local; no
-    delete-first window — a crash at any point leaves the previous
-    version readable). Older versions are deleted only after the new
-    one is durably in place; a crash mid-cleanup just leaves extras
-    that max-seq resolution ignores and the next commit re-collects."""
+    """Commit state as ``_mv_state.<seq+1>.json``, a name that DOESN'T
+    exist yet, through the atomic JSON write — a crash at any point
+    leaves the previous version readable. Older versions are deleted
+    only after the new one is durably in place; a crash mid-cleanup
+    just leaves extras that max-seq resolution ignores and the next
+    commit re-collects."""
     fs, _ = _fs(spark, mv_path)
     jvm_path = _jvm_path(spark)
     versions = _state_versions(fs, jvm_path, mv_path)
     seq = (versions[-1][0] + 1) if versions else 0
-    tmp = jvm_path(f"{mv_path}/.{_STATE}.tmp")
-    stream = fs.create(tmp, True)
-    stream.write(bytearray(json.dumps(state).encode()))
-    stream.close()
-    dst = jvm_path(f"{mv_path}/{_STATE_PREFIX}{seq}.json")
-    if not fs.rename(tmp, dst):
-        raise IOError(f"matview: could not commit state under {mv_path}")
+    _write_json(spark, fs, f"{mv_path}/{_STATE_PREFIX}{seq}.json", state)
     for _, name in versions:
         fs.delete(jvm_path(f"{mv_path}/{name}"), False)
 
@@ -192,28 +184,18 @@ def _rebuild_tmp(mv_path: str) -> str:
     return f"{mv_path}__mv_rebuild_tmp"
 
 
-def _rebuild_old(mv_path: str) -> str:
-    return f"{mv_path}__mv_old"
+def _rebuild_pending(mv_path: str) -> str:
+    # SIBLING of the view dir: the whole dir is swapped
+    return f"{mv_path}__mv_rebuild_pending.json"
 
 
-def _restore_stranded_rebuild(spark: SparkSession, mv_path: str) -> None:
-    """Crash-window repair for rebuild's whole-directory swap
-    (compact.py's restore-before-list discipline): view dir missing +
-    ``__mv_old`` present means the crash hit between the two renames —
-    restore the old store; both present means the swap completed and
-    the old dir is garbage. Caller must hold the refresh lock (or have
+def _recover_rebuild(spark: SparkSession, fs, mv_path: str) -> bool:
+    """Finish (journal present) or discard (journal absent) a crashed
+    rebuild/alter swap. Caller must hold the refresh lock (or have
     verified no writer is live) so an in-flight swap isn't 'repaired'."""
-    fs, _ = _fs(spark, mv_path)
-    jvm_path = _jvm_path(spark)
-    old = jvm_path(_rebuild_old(mv_path))
-    if not fs.exists(old):
-        return
-    if fs.exists(jvm_path(mv_path)):
-        fs.delete(old, True)
-    elif not fs.rename(old, jvm_path(mv_path)):
-        raise IOError(
-            f"matview: could not restore crashed rebuild under {mv_path}"
-        )
+    return _recover_staged_swap(
+        spark, fs, mv_path, _rebuild_tmp(mv_path), _rebuild_pending(mv_path)
+    )
 
 
 def _guard_no_base_dvs(spark: SparkSession, base: str, op: str) -> None:
@@ -378,7 +360,7 @@ def refresh_matview(
         spark, fs, jvm_path, lock_base, "refresh_matview", stale_lock_s
     )
     try:
-        _restore_stranded_rebuild(spark, mv_path)
+        _recover_rebuild(spark, fs, mv_path)
         state = _read_state(spark, mv_path)
         spec = state["spec"]
         _guard_no_base_dvs(spark, spec["base"], "refresh_matview")
@@ -492,7 +474,7 @@ def rebuild_matview(
         spark, fs, jvm_path, lock_base, "rebuild_matview", stale_lock_s
     )
     try:
-        _restore_stranded_rebuild(spark, mv_path)
+        _recover_rebuild(spark, fs, mv_path)
         state = _read_state(spark, mv_path)
         return _rebuild_locked(spark, mv_path, state)
     finally:
@@ -506,16 +488,15 @@ def _swap_in_new_store(
     new_state: dict,
     op: str,
 ) -> None:
-    """Write ``parts`` + ``new_state`` as a fresh staged store and swap
-    it in with two WHOLE-DIRECTORY renames (stage → ``__mv_old`` →
-    live), mirroring ``_compact_locked``'s crash discipline: the staged
-    directory already contains its own committed state file, so there
-    is no window in which the live path exists without readable state,
-    and :func:`_restore_stranded_rebuild` repairs the single
-    between-the-renames window at every entry point. Caller holds the
-    refresh lock; this takes the STORE lock for the swap (guards a
-    concurrent direct fold; both locks are siblings of mv_path so
-    neither moves with the renames)."""
+    """Write ``parts`` + ``new_state`` as a fresh staged store and commit
+    it with the journaled whole-directory swap (``pipeline/fsio.py``):
+    the staged directory already contains its own committed state file,
+    so the live path never exists without readable state, and
+    :func:`_recover_rebuild` finishes a swap that crashed after its
+    journal at every entry point. Caller holds the refresh lock; this
+    takes the STORE lock for the swap (guards a concurrent direct fold;
+    both locks are siblings of mv_path so neither moves with the
+    swap)."""
     from ..plans.rollup import _read_meta, write_rollup_store
 
     fs, _ = _fs(spark, mv_path)
@@ -528,17 +509,9 @@ def _swap_in_new_store(
     _acquire_lock(spark, fs, jvm_path, mv_path, op)
     try:
         tmp = _rebuild_tmp(mv_path)
-        old = _rebuild_old(mv_path)
-        fs.delete(jvm_path(tmp), True)  # stranded pre-swap stage, if any
         write_rollup_store(parts, tmp, n_buckets=n_buckets)
         _write_state(spark, tmp, new_state)
-        fs.delete(jvm_path(old), True)
-        if not fs.rename(jvm_path(mv_path), jvm_path(old)):
-            raise IOError(f"{op}: could not stage {mv_path} aside")
-        if not fs.rename(jvm_path(tmp), jvm_path(mv_path)):
-            fs.rename(jvm_path(old), jvm_path(mv_path))  # roll back
-            raise IOError(f"{op}: could not swap in {tmp}")
-        fs.delete(jvm_path(old), True)
+        _staged_swap(spark, fs, mv_path, tmp, _rebuild_pending(mv_path))
     finally:
         _release_table_lock(fs, jvm_path, mv_path)
 
@@ -623,7 +596,7 @@ def alter_matview(
         spark, fs, jvm_path, lock_base, "alter_matview", stale_lock_s
     )
     try:
-        _restore_stranded_rebuild(spark, mv_path)
+        _recover_rebuild(spark, fs, mv_path)
         state = _read_state(spark, mv_path)
         spec = state["spec"]
         pending = state.get("pending")
@@ -772,15 +745,14 @@ def read_matview(spark: SparkSession, mv_path: str) -> DataFrame:
     mv_path = mv_path.rstrip("/")
     fs, _ = _fs(spark, mv_path)
     jvm_path = _jvm_path(spark)
-    # lock-free read repair: only when the view dir is MISSING, the old
-    # dir exists, and no writer holds either lock — i.e. a rebuild
-    # crashed between its two renames. An in-flight rebuild holds both
-    # locks, so this can't race a live swap.
+    # lock-free read repair: only when a rebuild's swap journal exists
+    # and no writer holds either lock — i.e. the rebuild crashed after
+    # its commit point. An in-flight rebuild holds both locks, so this
+    # can't race a live swap.
     if (
-        not fs.exists(jvm_path(mv_path))
-        and fs.exists(jvm_path(_rebuild_old(mv_path)))
+        fs.exists(jvm_path(_rebuild_pending(mv_path)))
         and not fs.exists(jvm_path(_lock_path(mv_path)))
         and not fs.exists(jvm_path(_lock_path(_refresh_lock_base(mv_path))))
     ):
-        _restore_stranded_rebuild(spark, mv_path)
+        _recover_rebuild(spark, fs, mv_path)
     return read_rollup(spark, mv_path)

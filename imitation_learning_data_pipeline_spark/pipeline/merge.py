@@ -45,19 +45,23 @@ from pyspark.sql import functions as F
 from .compact import (  # noqa: F401  (re-exported API)
     ConcurrentMaintenanceError,
     _acquire_lock,
-    _fs,
     _lock_path,
     _release_table_lock,
-    _rm,
     release_lock,
+)
+from .fsio import (
+    MERGE_JOURNAL,
+    _clear_journal,
+    _fs,
+    _journaled_move_in,
+    _jvm_path,
+    _recover_journal,
+    _rm,
 )
 
 
 def _key_cols(key: str | list[str]) -> list[str]:
     return [key] if isinstance(key, str) else list(key)
-
-
-_PENDING = "__merge_pending.json"
 
 
 def _norm_key(p: str) -> str:
@@ -101,51 +105,23 @@ def _list_data_files(fs, jvm_path, path: str) -> dict:
     return out
 
 
-def _write_pending(spark, fs, jvm_path, path: str, add: list, delete: list) -> None:
-    """Atomically journal the commit (tmp file + rename): ``add`` =
-    staged rel paths to move in, ``delete`` = live file strings to drop.
-    Recovery completes this journal, making the commit crash-safe."""
-    import json as _json
-
-    payload = _json.dumps({"add": add, "delete": delete}).encode()
-    tmp_j = jvm_path(f"{path}/.{_PENDING}.tmp")
-    stream = fs.create(tmp_j, True)
-    stream.write(bytearray(payload))
-    stream.close()
-    if not fs.rename(tmp_j, jvm_path(f"{path}/{_PENDING}")):
-        raise IOError(f"merge_into: could not commit journal under {path}")
-
-
 def _recover_pending(spark, fs, jvm_path, path: str, tmp: str) -> None:
-    """Complete a crashed commit: finish the journaled moves and
-    deletes, then clear the journal. Idempotent; no-op without one."""
-    jp = jvm_path(f"{path}/{_PENDING}")
-    if not fs.exists(jp):
-        _rm(fs, jvm_path, tmp)  # pre-journal staging is safe to discard
+    """Complete a crashed commit: finish the journaled moves, retire or
+    delete the journaled replaced files, then clear the journal.
+    Idempotent; no-op without one."""
+    journal = f"{path}/{MERGE_JOURNAL}"
+    pending = _recover_journal(spark, fs, path, tmp, journal)
+    if pending is None:
         return
-    import json as _json
-
-    jvm = spark.sparkContext._jvm
-    stream = fs.open(jp)
-    raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    stream.close()
-    journal = _json.loads(raw.decode())
-    for rel in journal["add"]:
-        src, dst = jvm_path(f"{tmp}/{rel}"), jvm_path(f"{path}/{rel}")
-        if fs.exists(src) and not fs.exists(dst):
-            fs.mkdirs(dst.getParent())
-            if not fs.rename(src, dst):
-                raise IOError(f"merge_into recovery: could not move {rel}")
     live = _list_data_files(fs, jvm_path, path)
     from .snapshot import referenced_rels, retire_or_delete
 
     refs = referenced_rels(spark, fs, jvm_path, path)
-    for f in journal["delete"]:
+    for f in pending["delete"]:
         hit = live.get(_norm_key(f))
         if hit is not None:
             retire_or_delete(spark, fs, jvm_path, path, hit[0], hit[1], refs)
-    fs.delete(jp, False)
-    _rm(fs, jvm_path, tmp)
+    _clear_journal(spark, fs, journal, tmp)
     # the crash may have landed between the original commit and its
     # manifest delta — recovery can't tell, so refresh wholesale
     from .bloom import refresh_blooms_if_present
@@ -164,10 +140,10 @@ def recover(spark: SparkSession, path: str) -> bool:
     Returns True if a pending journal was found and completed."""
     path = path.rstrip("/")
     fs, _ = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     _acquire_lock(spark, fs, jvm_path, path, "recover")
     try:
-        had_journal = bool(fs.exists(jvm_path(f"{path}/{_PENDING}")))
+        had_journal = bool(fs.exists(jvm_path(f"{path}/{MERGE_JOURNAL}")))
         _recover_pending(spark, fs, jvm_path, path, f"{path}__merge_tmp")
         return had_journal
     finally:
@@ -220,7 +196,7 @@ def merge_into(
     path = path.rstrip("/")
     keys = _key_cols(key)
     fs, jpath = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     tmp = f"{path}__merge_tmp"
     from .deletes import guard_no_pending_deletes
 
@@ -243,13 +219,15 @@ def merge_into(
 
 
 def _commit_staged(spark, fs, jvm_path, path, tmp, touched) -> int:
-    """Journaled commit shared by merge_into/delete_from: record (staged
-    rel paths, files to drop) atomically, move staged files in
-    (fresh-UUID names — no collisions), retire-or-delete the replaced
-    files (snapshot-aware, pipeline/snapshot.py), clear the journal. A
+    """Journaled commit shared by merge_into/delete_from/update/insert:
+    the shared file-move commit (``pipeline/fsio.py``) records (staged
+    rel paths, files to drop) atomically and moves the staged files in
+    (fresh-UUID names — no collisions); this caller then retires or
+    deletes the replaced files (snapshot-aware, pipeline/snapshot.py),
+    folds the manifest and bloom deltas, and clears the journal. A
     crash anywhere after the journal lands is COMPLETED by the next
-    maintenance op on the path; before it, staging is simply discarded.
-    Returns the number of files moved in."""
+    maintenance op on the path (:func:`_recover_pending`); before it,
+    staging is simply discarded. Returns the number of files moved in."""
     root = fs.makeQualified(jvm_path(tmp)).toString().rstrip("/")
     staged_rel, staged_bytes = [], {}
     if fs.exists(jvm_path(tmp)):
@@ -263,16 +241,11 @@ def _commit_staged(spark, fs, jvm_path, path, tmp, touched) -> int:
             rel = p[len(root) + 1 :]
             staged_rel.append(rel)
             staged_bytes[rel] = int(st.getLen())
-    _write_pending(
-        spark, fs, jvm_path, path, staged_rel, [t[0] for t in touched]
+    journal = f"{path}/{MERGE_JOURNAL}"
+    moved = _journaled_move_in(
+        spark, fs, path, tmp, journal,
+        {"add": staged_rel, "delete": [t[0] for t in touched]},
     )
-    moved = 0
-    for rel in staged_rel:
-        dest = jvm_path(f"{path}/{rel}")
-        fs.mkdirs(dest.getParent())
-        if not fs.rename(jvm_path(f"{tmp}/{rel}"), dest):
-            raise IOError(f"commit: could not move {rel} into {path}")
-        moved += 1
     from .snapshot import referenced_rels, retire_or_delete
 
     refs = referenced_rels(spark, fs, jvm_path, path)
@@ -300,8 +273,7 @@ def _commit_staged(spark, fs, jvm_path, path, tmp, touched) -> int:
     apply_bloom_deltas(
         spark, path, [(r, staged_bytes[r]) for r in staged_rel], dropped
     )
-    fs.delete(jvm_path(f"{path}/{_PENDING}"), False)
-    _rm(fs, jvm_path, tmp)
+    _clear_journal(spark, fs, journal, tmp)
     return moved
 
 
@@ -512,7 +484,7 @@ def delete_from(
     """
     path = path.rstrip("/")
     fs, jpath = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     tmp = f"{path}__merge_tmp"
     from .deletes import guard_no_pending_deletes
 
@@ -637,7 +609,7 @@ def update_where(
     """
     path = path.rstrip("/")
     fs, jpath = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     tmp = f"{path}__merge_tmp"
     from .deletes import guard_no_pending_deletes
 
@@ -836,7 +808,7 @@ def _preserve_history(spark, path: str, mode: str):
         yield
         return
     fs, _ = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     _dir, _base = path.rsplit("/", 1)
     stage = f"{_dir}/.{_base}__history_stage"
     src = jvm_path(f"{path}/_history")
@@ -873,7 +845,7 @@ def _guard_snapshot_overwrite(spark, path: str, mode: str, op: str) -> None:
     if mode != "overwrite":
         return
     fs, _ = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     from .snapshot import _SNAP, _manifest_paths
 
     if fs.exists(jvm_path(f"{path.rstrip('/')}/{_SNAP}")) and _manifest_paths(
@@ -1014,7 +986,7 @@ def insert_into(
 
     guard_not_bucketed(spark, path, "insert_into")
     fs, jpath = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     tmp = f"{path}__merge_tmp"
     _acquire_lock(spark, fs, jvm_path, path, "insert_into", stale_lock_s)
     try:

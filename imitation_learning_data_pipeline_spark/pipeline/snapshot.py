@@ -44,44 +44,20 @@ commit.
 
 from __future__ import annotations
 
-import json as _json
 import re as _re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .compact import _acquire_lock, _fs, _lock_path, _release_table_lock, _rm
+from .compact import _acquire_lock, _release_table_lock
+from .fsio import MERGE_JOURNAL, _fs, _jvm_path, _read_json, _rm, _write_json
 
 _SNAP = "_snapshots"
 _RETAINED = f"{_SNAP}/retained"
 _TAG_RE = _re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,127}$")
 
 
-def _jvm_path(spark):
-    return spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-
-
 def _qual(fs, jvm_path, path: str) -> str:
     return fs.makeQualified(jvm_path(path)).toString().rstrip("/")
-
-
-def _read_json(spark, fs, jvm_path, p: str) -> dict:
-    jvm = spark.sparkContext._jvm
-    stream = fs.open(jvm_path(p))
-    raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    stream.close()
-    return _json.loads(raw.decode())
-
-
-def _write_json(fs, jvm_path, p: str, payload: dict) -> None:
-    data = _json.dumps(payload, sort_keys=True).encode()
-    tmp = jvm_path(p + ".tmp")
-    stream = fs.create(tmp, True)
-    stream.write(bytearray(data))
-    stream.close()
-    dst = jvm_path(p)
-    fs.delete(dst, False)
-    if not fs.rename(tmp, dst):
-        raise IOError(f"snapshot: could not commit manifest {p}")
 
 
 def _hidden(rel: str) -> bool:
@@ -127,7 +103,7 @@ def referenced_rels(spark, fs, jvm_path, path: str, prefix: str = "") -> set[str
     before deleting a replaced file. Driver-side, manifest-sized."""
     refs: set[str] = set()
     for mp in _manifest_paths(fs, jvm_path, path):
-        m = _read_json(spark, fs, jvm_path, mp)
+        m = _read_json(spark, fs, mp)
         for rel, _sz in m["files"]:
             if not prefix or rel.startswith(prefix):
                 refs.add(rel)
@@ -158,9 +134,9 @@ def create_snapshot(spark: SparkSession, path: str, tag: str) -> dict:
         # torn, duplicate-key file set and the snapshot would pin it
         # forever. Complete the journal first (same recovery every other
         # consumer runs), under the lock we already hold.
-        from .merge import _PENDING, _recover_pending
+        from .merge import _recover_pending
 
-        if fs.exists(jvm_path(f"{path}/{_PENDING}")):
+        if fs.exists(jvm_path(f"{path}/{MERGE_JOURNAL}")):
             _recover_pending(spark, fs, jvm_path, path, f"{path}__merge_tmp")
         mp = f"{path}/{_SNAP}/{tag}.json"
         if fs.exists(jvm_path(mp)):
@@ -178,7 +154,7 @@ def create_snapshot(spark: SparkSession, path: str, tag: str) -> dict:
             "files": files,
         }
         fs.mkdirs(jvm_path(f"{path}/{_SNAP}"))
-        _write_json(fs, jvm_path, mp, manifest)
+        _write_json(spark, fs, mp, manifest)
         out = {k: manifest[k] for k in ("tag", "created_utc", "n_files", "bytes")}
     finally:
         _release_table_lock(fs, jvm_path, path)
@@ -195,7 +171,7 @@ def list_snapshots(spark: SparkSession, path: str) -> list[dict]:
     jvm_path = _jvm_path(spark)
     out = []
     for mp in _manifest_paths(fs, jvm_path, path):
-        m = _read_json(spark, fs, jvm_path, mp)
+        m = _read_json(spark, fs, mp)
         out.append(
             {k: m[k] for k in ("tag", "created_utc", "n_files", "bytes")}
         )
@@ -216,7 +192,7 @@ def read_snapshot(spark: SparkSession, path: str, tag: str) -> DataFrame:
         raise FileNotFoundError(
             f"snapshot: no tag {tag!r} on {path}; have {known}"
         )
-    m = _read_json(spark, fs, jvm_path, mp)
+    m = _read_json(spark, fs, mp)
     live, retained, missing = [], [], []
     for rel, _sz in m["files"]:
         if fs.exists(jvm_path(f"{path}/{rel}")):

@@ -2194,7 +2194,7 @@ def fold_components_into_store(
     Returns {n_pair_docs, n_touched_clusters, n_rewritten, plus
     merge_into's file stats}.
     """
-    from ..pipeline.compact import _fs
+    from ..pipeline.fsio import _fs
     from ..pipeline.merge import merge_into
 
     edges = pairs.select(
@@ -2298,7 +2298,7 @@ def write_probe_store(
     runs never rehash the probe) and Bloom bits at
     ``{path}/_bloom.bin``. Returns {n_shingles, bloom_bytes}."""
     from ..functions.bloom import Bloom64
-    from ..pipeline.compact import _fs
+    from ..pipeline.fsio import _fs, _jvm_path
 
     path = path.rstrip("/")
     spark = probe.sparkSession
@@ -2313,7 +2313,7 @@ def write_probe_store(
     hashes = [r["h"] for r in sh_back.select("h").collect()]
     bloom = Bloom64.build(hashes, fpp=fpp)
     fs, _ = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     stream = fs.create(jvm_path(f"{path}/_bloom.bin"), True)
     stream.write(bytearray(bloom.to_bytes()))
     stream.close()
@@ -2331,17 +2331,12 @@ def decontam_overlap_against_store(
     import pandas as pd
 
     from ..functions.bloom import Bloom64
-    from ..pipeline.compact import _fs
+    from ..pipeline.fsio import _fs, _read_bytes
 
     path = path.rstrip("/")
     spark = docs.sparkSession
     fs, _ = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    jvm = spark.sparkContext._jvm
-    stream = fs.open(jvm_path(f"{path}/_bloom.bin"))
-    raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    stream.close()
-    bloom = Bloom64.from_bytes(raw)
+    bloom = Bloom64.from_bytes(_read_bytes(spark, fs, f"{path}/_bloom.bin"))
     b_bloom = spark.sparkContext.broadcast(bloom)
 
     @F.pandas_udf("boolean")

@@ -47,6 +47,16 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import clean_words
+from ..pipeline.compact import _acquire_lock, _release_table_lock
+from ..pipeline.fsio import (
+    _fs,
+    _jvm_path,
+    _read_json,
+    _recover_staged_swap,
+    _rm,
+    _staged_swap,
+    _write_json,
+)
 from ..session import ensure_utc
 from ..sources import load_table
 from .registry import register
@@ -175,25 +185,24 @@ _HLL_META = "__hll_meta.json"  # inside the store dir — travels with the swap
 _HLL_PENDING = "__hll_pending.json"  # SIBLING of the store dir (dir is swapped)
 
 
-def _hll_meta(spark: SparkSession, path: str) -> dict:
+def _hll_meta(spark: SparkSession, fs, path: str) -> dict:
     """Fence metadata from inside the store dir; {} if absent (stores
     written before the fence existed, or first-batch paths)."""
-    from ..pipeline.compact import _read_json_meta_if_exists
+    try:
+        return _read_json(spark, fs, f"{path}/{_HLL_META}")
+    except FileNotFoundError:
+        return {}
 
-    return _read_json_meta_if_exists(spark, path, _HLL_META)
 
-
-def _hll_recover(spark: SparkSession, fs, jvm_path, path: str) -> bool:
+def _hll_recover(spark: SparkSession, fs, path: str) -> bool:
     """Complete (or discard) a crashed fold commit. The journal sibling
     is the commit point: journal present → the staged store under
     ``<path>__hll_tmp`` is the truth, finish the swap; journal absent →
     pre-journal staging is safe to discard. Idempotent; call under the
     maintenance lock. Returns True if a journaled commit was finished."""
-    from ..pipeline.compact import _recover_staged_swap
-
     # staged dir holds the FULL merged store (fence meta included)
     return _recover_staged_swap(
-        fs, jvm_path, path, f"{path}__hll_tmp", f"{path}{_HLL_PENDING}"
+        spark, fs, path, f"{path}__hll_tmp", f"{path}{_HLL_PENDING}"
     )
 
 
@@ -205,14 +214,12 @@ def recover_hll_store(
     maintenance lock; ``stale_lock_s`` enables takeover of a crashed
     holder's stranded lock by age. Returns True if a journaled commit
     was completed."""
-    from ..pipeline.compact import _acquire_lock, _fs, _release_table_lock
-
     path = path.rstrip("/")
     fs, _ = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     _acquire_lock(spark, fs, jvm_path, path, "hll-recover", stale_lock_s)
     try:
-        return _hll_recover(spark, fs, jvm_path, path)
+        return _hll_recover(spark, fs, path)
     finally:
         _release_table_lock(fs, jvm_path, path)
 
@@ -223,15 +230,13 @@ def write_hll_store(registers: DataFrame, path: str) -> None:
     fold would silently drop the fold's batch (VERDICT r11 #1), so the
     first/replace write takes the same single-writer lock the fold
     does."""
-    from ..pipeline.compact import _acquire_lock, _fs, _release_table_lock
-
     spark = registers.sparkSession
     path = path.rstrip("/")
     fs, _ = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     _acquire_lock(spark, fs, jvm_path, path, "hll-write")
     try:
-        _hll_recover(spark, fs, jvm_path, path)
+        _hll_recover(spark, fs, path)
         registers.coalesce(1).write.mode("overwrite").parquet(path)
     finally:
         _release_table_lock(fs, jvm_path, path)
@@ -264,31 +269,31 @@ def fold_into_hll_store(
     rollup store and makes retries observable).
 
     Crash safety: the merged store is staged to ``<path>__hll_tmp``
-    (fence meta inside, so it travels with the swap), then a SIBLING
-    journal ``<path>__hll_pending.json`` lands atomically (the commit
-    point), then old dir drops, staged dir renames in, journal clears.
+    (fence meta inside, so it travels with the swap) and committed by
+    the journaled staged swap (``pipeline/fsio.py``, shared with the
+    PSI baseline, matview rebuilds and the discover manifests): a
+    SIBLING journal ``<path>__hll_pending.json`` lands atomically (the
+    commit point), then old dir drops, staged dir renames in, journal
+    clears.
     A crash before the journal discards staging and the replay folds
     normally; a crash after it is completed by the next fold/write on
     the path or by :func:`recover_hll_store`.
 
     Returns ``{"folded": bool}``.
     """
-    import json as _json
-
     from pyspark.errors import AnalysisException
 
-    from ..pipeline.compact import _acquire_lock, _fs, _release_table_lock, _rm
 
     path = path.rstrip("/")
     fs, _ = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    tmp, pending = f"{path}__hll_tmp", f"{path}{_HLL_PENDING}"
+    jvm_path = _jvm_path(spark)
+    tmp = f"{path}__hll_tmp"
     _acquire_lock(spark, fs, jvm_path, path, "hll-fold", stale_lock_s)
     try:
         # complete any crashed prior commit first — it may advance the
         # fence, correctly turning THIS call into a replay
-        _hll_recover(spark, fs, jvm_path, path)
-        meta = _hll_meta(spark, path)
+        _hll_recover(spark, fs, path)
+        meta = _hll_meta(spark, fs, path)
         last = meta.get("last_batch")
         if batch_id is not None and last is not None and int(batch_id) <= int(last):
             return {"folded": False}
@@ -322,31 +327,11 @@ def fold_into_hll_store(
         new_last = last
         if batch_id is not None:
             new_last = int(batch_id) if last is None else max(int(batch_id), int(last))
-        payload = _json.dumps({"last_batch": new_last}).encode()
-        stream = fs.create(jvm_path(f"{tmp}/{_HLL_META}"), True)
-        stream.write(bytearray(payload))
-        stream.close()
-        _hll_write_journal(fs, jvm_path, pending)  # the commit point
-        _hll_swap_in(fs, jvm_path, path, tmp)
-        fs.delete(jvm_path(pending), False)
+        _write_json(spark, fs, f"{tmp}/{_HLL_META}", {"last_batch": new_last})
+        _staged_swap(spark, fs, path, tmp, f"{path}{_HLL_PENDING}")
         return {"folded": True}
     finally:
         _release_table_lock(fs, jvm_path, path)
-
-
-# Module-level seams (crash-injection tests monkeypatch these by name);
-# the discipline itself lives in pipeline.compact's staged-swap helpers
-# and is shared with the PSI drift-baseline fold (plans/monitor.py).
-def _hll_write_journal(fs, jvm_path, pending: str) -> None:
-    from ..pipeline.compact import _staged_swap_write_journal
-
-    _staged_swap_write_journal(fs, jvm_path, pending)
-
-
-def _hll_swap_in(fs, jvm_path, path: str, tmp: str) -> None:
-    from ..pipeline.compact import _staged_swap_in
-
-    _staged_swap_in(fs, jvm_path, path, tmp)
 
 
 def hll_union_datasketches(frames: list[DataFrame], col: str) -> DataFrame:

@@ -564,7 +564,7 @@ def _probe_vectors(
     listed the whole index in ``inputFiles()`` — inverting the scan
     receipt in exactly the degenerate case — and crashed outright on a
     fully-empty vectors root (no footer to infer from)."""
-    from ..pipeline.compact import _fs
+    from ..pipeline.fsio import _fs, _jvm_path
 
     centers = spark.read.parquet(f"{path}/centroids")
     probe = _nearest_cells(
@@ -573,7 +573,7 @@ def _probe_vectors(
     cells = sorted({r["cell_id"] for r in probe.select("cell_id").distinct().collect()})
     vec_root = f"{path.rstrip('/')}/vectors"
     fs, _ = _fs(spark, vec_root)
-    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jpath = _jvm_path(spark)
     dirs = [
         f"{vec_root}/cell_id={c}"
         for c in cells

@@ -23,6 +23,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.compact import _acquire_lock, _release_table_lock
+from ..pipeline.fsio import (
+    _fs,
+    _jvm_path,
+    _read_json,
+    _recover_staged_swap,
+    _rm,
+    _staged_swap,
+    _write_json,
+)
 from ..session import ensure_utc
 from ..sources import load_table
 from .registry import register
@@ -196,21 +206,14 @@ def write_drift_baseline(
     batch. A crashed fold's journaled swap is completed FIRST, then the
     rebuild overwrites — which legitimately resets the batch-id fence
     (a rebuild founds a new baseline epoch)."""
-    from ..pipeline.compact import (
-        _acquire_lock,
-        _fs,
-        _recover_staged_swap,
-        _release_table_lock,
-    )
-
     spark = ref.sparkSession
     path = path.rstrip("/")
     fs, _ = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     tmp, pending = f"{path}__psi_tmp", f"{path}{_PSI_PENDING}"
     _acquire_lock(spark, fs, jvm_path, path, "psi-write")
     try:
-        _recover_staged_swap(fs, jvm_path, path, tmp, pending)
+        _recover_staged_swap(spark, fs, path, tmp, pending)
         drift_bucket_counts(ref, score_col, n_buckets).coalesce(
             1
         ).write.mode("overwrite").parquet(path)
@@ -262,10 +265,11 @@ _PSI_META = "__psi_meta.json"  # inside the baseline dir — travels with the sw
 _PSI_PENDING = "__psi_pending.json"  # SIBLING of the baseline dir
 
 
-def _psi_meta(spark: SparkSession, path: str) -> dict:
-    from ..pipeline.compact import _read_json_meta_if_exists
-
-    return _read_json_meta_if_exists(spark, path, _PSI_META)
+def _psi_meta(spark: SparkSession, fs, path: str) -> dict:
+    try:
+        return _read_json(spark, fs, f"{path}/{_PSI_META}")
+    except FileNotFoundError:
+        return {}
 
 
 def fold_drift_baseline(
@@ -281,40 +285,28 @@ def fold_drift_baseline(
     contract made concrete; r11 verdict item 9).
 
     Same single-writer discipline as the HLL register fold (the shared
-    ``pipeline.compact`` staged-swap helpers): maintenance lock around
+    ``pipeline/fsio.py`` staged swap): maintenance lock around
     read→sum→write, a monotonic ``batch_id`` fence in ``__psi_meta.json``
     (a replayed fold is a NO-OP — counts are sums, so an unfenced
     orchestrator retry would double-count the batch, unlike the
     max-merge registers), and a journaled staged-dir swap so a crash
     anywhere converges. Returns ``{"folded": bool}``.
     """
-    import json as _json
-
-    from ..pipeline.compact import (
-        _acquire_lock,
-        _fs,
-        _recover_staged_swap,
-        _release_table_lock,
-        _rm,
-        _staged_swap_in,
-        _staged_swap_write_journal,
-    )
-
     spark = batch.sparkSession
     path = path.rstrip("/")
     fs, _ = _fs(spark, path)
-    jvm_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    jvm_path = _jvm_path(spark)
     tmp, pending = f"{path}__psi_tmp", f"{path}{_PSI_PENDING}"
     _acquire_lock(spark, fs, jvm_path, path, "psi-fold", stale_lock_s)
     try:
-        _recover_staged_swap(fs, jvm_path, path, tmp, pending)
+        _recover_staged_swap(spark, fs, path, tmp, pending)
         if not fs.exists(jvm_path(path)):
             raise ValueError(
                 f"fold_drift_baseline: no baseline at {path} — bootstrap "
                 "with write_drift_baseline first (growing an absent "
                 "store would silently found the baseline on one batch)"
             )
-        meta = _psi_meta(spark, path)
+        meta = _psi_meta(spark, fs, path)
         last = meta.get("last_batch")
         if batch_id is not None and last is not None and int(batch_id) <= int(last):
             return {"folded": False}
@@ -338,12 +330,8 @@ def fold_drift_baseline(
         new_last = last
         if batch_id is not None:
             new_last = int(batch_id) if last is None else max(int(batch_id), int(last))
-        stream = fs.create(jvm_path(f"{tmp}/{_PSI_META}"), True)
-        stream.write(bytearray(_json.dumps({"last_batch": new_last}).encode()))
-        stream.close()
-        _staged_swap_write_journal(fs, jvm_path, pending)  # the commit point
-        _staged_swap_in(fs, jvm_path, path, tmp)
-        fs.delete(jvm_path(pending), False)
+        _write_json(spark, fs, f"{tmp}/{_PSI_META}", {"last_batch": new_last})
+        _staged_swap(spark, fs, path, tmp, pending)
         return {"folded": True}
     finally:
         _release_table_lock(fs, jvm_path, path)

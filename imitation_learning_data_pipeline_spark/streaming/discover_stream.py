@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline.discover import SAMPLE_BYTES, _parse_path
+from ..pipeline.fsio import _fs, _recover_staged_swap, _staged_swap
 
 
 def episode_file_stream(spark: SparkSession, root: str) -> DataFrame:
@@ -78,15 +79,18 @@ def run_discover_stream(
     tests/test_discover_stream.py).
     """
     keys = ["chunk", "episode_index"]
+    # The crash-safe manifest swap `cli discover` uses. A batch that
+    # crashed mid-swap ended its run, so finishing it (journal present)
+    # or discarding its staging here comes before any batch reads the
+    # prior manifest.
+    fs, jmanifest = _fs(spark, manifest_dir)
+    tmp, pending = manifest_dir + ".tmp", manifest_dir + ".pending"
+    _recover_staged_swap(spark, fs, manifest_dir, tmp, pending)
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
-        import os
-
         new = batch.withColumn("status", F.lit("NEW"))
-        if os.path.isdir(manifest_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(manifest_dir)
-        ):
+        if fs.exists(jmanifest):
             prev = s.read.parquet(manifest_dir)
             prev_fp = prev.select(*keys, F.col("fingerprint").alias("prev_fp"))
             merged_new = (
@@ -101,14 +105,8 @@ def run_discover_stream(
             out = keep_prev.unionByName(merged_new)
         else:
             out = new
-        # Write-then-swap keeps the manifest readable mid-merge.
-        tmp = manifest_dir + ".tmp"
         out.write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        if os.path.isdir(manifest_dir):
-            shutil.rmtree(manifest_dir)
-        os.replace(tmp, manifest_dir)
+        _staged_swap(s, fs, manifest_dir, tmp, pending)
 
     q = (
         episode_file_stream(spark, root)

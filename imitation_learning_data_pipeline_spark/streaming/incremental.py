@@ -233,7 +233,7 @@ def run_incremental_dedup_stream(
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         from .. import cache
-        from ..pipeline.compact import _fs
+        from ..pipeline.fsio import _fs
         from ..plans.dedup import minhash_signatures
 
         batch_df = batch_df.persist()
@@ -347,7 +347,7 @@ def run_streaming_merge_stream(
     keys = [key] if isinstance(key, str) else list(key)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        from ..pipeline.compact import _fs
+        from ..pipeline.fsio import _fs
         from ..pipeline.merge import merge_into
 
         src = batch_df.persist()

@@ -188,12 +188,11 @@ def test_full_cli_chain(spark, lerobot_fixture, workdir, capsys):
 def test_discover_manifest_survives_a_failed_swap(
     spark, lerobot_fixture, tmp_path, capsys, monkeypatch
 ):
-    """A rename that raises while the new manifest is swapped in must not
-    lose the previous manifest: it still reads back, and the next run
-    diffs against it instead of reporting every episode NEW. Both
-    rename routes a swap can take raise here: the Python-level
-    os.replace and the Hadoop FileSystem swap-in."""
-    from imitation_learning_data_pipeline_spark.pipeline import compact
+    """A rename that raises while the new manifest is swapped in (after
+    the swap's journal landed) must not lose the previous manifest: it
+    still reads back, and the next run finishes the journaled swap and
+    diffs against it instead of reporting every episode NEW."""
+    from imitation_learning_data_pipeline_spark.pipeline import fsio
 
     root = str(lerobot_fixture)
     manifest = str(tmp_path / "manifest" / "episodes.parquet")
@@ -208,8 +207,7 @@ def test_discover_manifest_survives_a_failed_swap(
         raise OSError("injected rename failure")
 
     with monkeypatch.context() as m:
-        m.setattr(os, "replace", failing_rename)
-        m.setattr(compact, "_staged_swap_in", failing_rename)
+        m.setattr(fsio, "_swap_in", failing_rename)
         with pytest.raises(OSError, match="injected rename failure"):
             _run(capsys, argv)
 

@@ -85,3 +85,37 @@ def test_streaming_discover_incremental(spark, tree, tmp_path):
     assert statuses[1] == "CHANGED"
     assert statuses[0] == "UNCHANGED"
     assert statuses[42] == "MISSING_SIDE"  # streamed-in ep has no videos
+
+
+def test_streaming_manifest_survives_a_crashed_swap(spark, tree, tmp_path):
+    """A micro-batch that crashes mid-swap — the previous manifest
+    already dropped, the new one not yet moved in — must not lose the
+    manifest: the swap's journal landed first, so the next run finishes
+    the swap before any batch reads the prior manifest, and every
+    episode seen before the crash keeps its row."""
+    from imitation_learning_data_pipeline_spark.pipeline import fsio
+    from imitation_learning_data_pipeline_spark.streaming.discover_stream import (
+        run_discover_stream,
+    )
+
+    manifest = str(tmp_path / "manifest.parquet")
+    ckpt = str(tmp_path / "ckpt")
+    m1 = run_discover_stream(spark, str(tree), manifest, ckpt)
+    seen = {r.episode_index for r in m1.collect()}
+    assert len(seen) == 19
+
+    _write_episode(tree / "data" / "chunk-000" / "episode_000042.parquet", 42)
+
+    def drop_then_crash(fs, jvm_path, live, tmp):
+        fsio._rm(fs, jvm_path, live)
+        raise RuntimeError("injected crash")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(fsio, "_swap_in", drop_then_crash)
+        with pytest.raises(Exception, match="injected crash"):
+            run_discover_stream(spark, str(tree), manifest, ckpt)
+
+    m2 = run_discover_stream(spark, str(tree), manifest, ckpt)
+    rows = {r.episode_index: r.status for r in m2.collect()}
+    assert set(rows) == seen | {42}
+    assert {rows[ep] for ep in seen} == {"NEW"}

@@ -12,7 +12,7 @@ import os
 
 import pytest
 
-import imitation_learning_data_pipeline_spark.plans.hll as H
+import imitation_learning_data_pipeline_spark.pipeline.fsio as fsio
 from imitation_learning_data_pipeline_spark.pipeline.compact import (
     ConcurrentMaintenanceError,
 )
@@ -122,14 +122,16 @@ class TestHllFoldLockAndFence:
 
 class TestHllFoldCrashRecovery:
     def _crash_fold(self, spark, p, regs, where: str, batch_id=None):
-        """Run a fold that dies at the named commit step (lock released
-        — the fold's finally ran, as for any soft failure)."""
+        """Run a fold that dies at the named step of the shared staged
+        swap (``_write_journal``: before the commit point; ``_swap_in``:
+        after it). The lock is released — the fold's finally ran, as for
+        any soft failure."""
         with pytest.MonkeyPatch.context() as mp:
 
             def boom(*a, **k):
                 raise RuntimeError("injected crash")
 
-            mp.setattr(H, where, boom)
+            mp.setattr(fsio, where, boom)
             with pytest.raises(RuntimeError, match="injected crash"):
                 fold_into_hll_store(spark, regs, p, batch_id=batch_id)
 
@@ -138,7 +140,7 @@ class TestHllFoldCrashRecovery:
         replay folds normally — exactly once, via the retry."""
         p = str(tmp_path / "hc1")
         fold_into_hll_store(spark, _regs(spark, 0, 50), p, batch_id=1)
-        self._crash_fold(spark, p, _regs(spark, 50, 100), "_hll_write_journal", 2)
+        self._crash_fold(spark, p, _regs(spark, 50, 100), "_write_journal", 2)
         assert not os.path.exists(p + PENDING)
         out = fold_into_hll_store(spark, _regs(spark, 50, 100), p, batch_id=2)
         assert out == {"folded": True}
@@ -152,7 +154,7 @@ class TestHllFoldCrashRecovery:
         once."""
         p = str(tmp_path / "hc2")
         fold_into_hll_store(spark, _regs(spark, 0, 50), p, batch_id=1)
-        self._crash_fold(spark, p, _regs(spark, 50, 100), "_hll_swap_in", 2)
+        self._crash_fold(spark, p, _regs(spark, 50, 100), "_swap_in", 2)
         assert os.path.exists(p + PENDING)
         out = fold_into_hll_store(spark, _regs(spark, 50, 100), p, batch_id=2)
         assert out == {"folded": False}
@@ -178,7 +180,7 @@ class TestHllFoldCrashRecovery:
         finds nothing to do."""
         p = str(tmp_path / "hc4")
         fold_into_hll_store(spark, _regs(spark, 0, 50), p, batch_id=1)
-        self._crash_fold(spark, p, _regs(spark, 50, 100), "_hll_swap_in", 2)
+        self._crash_fold(spark, p, _regs(spark, 50, 100), "_swap_in", 2)
         lock = p + "__maintenance_lock"
         with open(lock, "w") as fh:
             fh.write('{"op": "hll-fold", "pid": 1}')
@@ -194,7 +196,7 @@ class TestHllFoldCrashRecovery:
         first, then overwrites — no torn state is ever observable."""
         p = str(tmp_path / "hc5")
         fold_into_hll_store(spark, _regs(spark, 0, 50), p, batch_id=1)
-        self._crash_fold(spark, p, _regs(spark, 50, 100), "_hll_swap_in", 2)
+        self._crash_fold(spark, p, _regs(spark, 50, 100), "_swap_in", 2)
         write_hll_store(_regs(spark, 0, 10), p)
         assert not os.path.exists(p + PENDING)
         assert not os.path.exists(p + "__hll_tmp")
@@ -684,7 +686,7 @@ class TestPsiBaselineGrowthGate:
         """Crash after the journal lands: the next fold completes the
         staged commit (fence included), so the replayed batch folds
         exactly once — sums would double-count otherwise."""
-        import imitation_learning_data_pipeline_spark.pipeline.compact as C
+        import imitation_learning_data_pipeline_spark.pipeline.fsio as fsio
         from imitation_learning_data_pipeline_spark.plans.monitor import (
             fold_drift_baseline,
             read_drift_baseline,
@@ -704,7 +706,7 @@ class TestPsiBaselineGrowthGate:
             def boom(*a, **k):
                 raise RuntimeError("injected crash")
 
-            mp.setattr(C, "_staged_swap_in", boom)
+            mp.setattr(fsio, "_swap_in", boom)
             with pytest.raises(RuntimeError, match="injected crash"):
                 fold_drift_baseline(batch, base, batch_id=1)
         assert os.path.exists(base + "__psi_pending.json")

@@ -229,7 +229,7 @@ class TestDriftBaselineWriteLock:
         """A rebuild on a crashed-fold path completes the journaled
         staged swap BEFORE overwriting — no torn store, no stranded
         __psi_tmp/pending artifacts."""
-        import imitation_learning_data_pipeline_spark.pipeline.compact as C
+        import imitation_learning_data_pipeline_spark.pipeline.fsio as fsio
         from imitation_learning_data_pipeline_spark.plans.monitor import (
             fold_drift_baseline,
             read_drift_baseline,
@@ -245,7 +245,7 @@ class TestDriftBaselineWriteLock:
             def boom(*a, **k):
                 raise RuntimeError("injected crash")
 
-            mp.setattr(C, "_staged_swap_in", boom)
+            mp.setattr(fsio, "_swap_in", boom)
             with pytest.raises(RuntimeError, match="injected crash"):
                 fold_drift_baseline(batch, base, batch_id=1)
         assert os.path.exists(base + "__psi_pending.json")

@@ -2,6 +2,7 @@
 stopword pick + the no-signal guard), the streaming main-content arm,
 null-URL dedup self-keying, and the stale-corpus rebuild sweep."""
 
+import importlib.util
 import json
 import os
 
@@ -1433,28 +1434,26 @@ class TestDeltaCheckpointInterop:
         assert hint == {"version": 10, "size": 13, "parts": 1}
 
     @pytest.mark.skipif(
-        not __import__(
-            "imitation_learning_data_pipeline_spark.pipeline.table_format",
-            fromlist=["delta_available"],
-        ).delta_available(),
+        importlib.util.find_spec("delta") is None,
         reason="delta-spark not installed — the real-engine read of our "
-        "checkpoint runs in deployments that pip-install it (same seam "
-        "as TestDeltaRouting)",
+        "checkpoint runs in deployments that pip-install it",
     )
     def test_real_delta_reads_checkpointed_table(self, tmp_path):
         from pyspark.sql import SparkSession
-
-        from imitation_learning_data_pipeline_spark.pipeline.table_format import (
-            delta_session_configs,
-        )
 
         b = (
             SparkSession.builder.master("local[4]")
             .appName("delta-checkpoint-interop")
             .config("spark.sql.shuffle.partitions", "4")
+            # the two session-build configs delta-spark requires
+            .config(
+                "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
+            )
+            .config(
+                "spark.sql.catalog.spark_catalog",
+                "org.apache.spark.sql.delta.catalog.DeltaCatalog",
+            )
         )
-        for k, v in delta_session_configs().items():
-            b = b.config(k, v)
         dspark = b.getOrCreate()
         p = str(tmp_path / "t")
         self._build_to_v10(dspark, p)

@@ -14,6 +14,7 @@ import shutil
 
 import pytest
 
+import imitation_learning_data_pipeline_spark.pipeline.fsio as fsio
 import imitation_learning_data_pipeline_spark.plans.rollup as R
 from imitation_learning_data_pipeline_spark.pipeline.compact import (
     ConcurrentMaintenanceError,
@@ -64,13 +65,27 @@ EXPECT_ONCE = {
 def _crash_fold(spark, p, partials, where: str, batch_id=1):
     """Run a fold that dies at the named commit step, leaving the
     journaled crash state on disk (lock released — the fold's finally
-    ran, as it does for any soft failure)."""
+    ran, as it does for any soft failure). ``before_moves``: the journal
+    landed, nothing moved in; ``after_moves``: staged files moved in,
+    replaced files not yet dropped; ``_advance_fence``: moves and drops
+    done, fence not yet advanced."""
     with pytest.MonkeyPatch.context() as mp:
 
         def boom(*a, **k):
             raise RuntimeError("injected crash")
 
-        mp.setattr(R, where, boom)
+        move = fsio._move_staged_in
+
+        def move_then_boom(*a, **k):
+            move(*a, **k)
+            boom()
+
+        if where == "before_moves":
+            mp.setattr(fsio, "_move_staged_in", boom)
+        elif where == "after_moves":
+            mp.setattr(fsio, "_move_staged_in", move_then_boom)
+        else:
+            mp.setattr(R, where, boom)
         with pytest.raises(RuntimeError, match="injected crash"):
             fold_rollup_into_store(spark, p, partials, batch_id=batch_id)
     assert os.path.exists(os.path.join(p, PENDING))
@@ -85,7 +100,7 @@ class TestRollupFoldCrashRecovery:
         p = str(tmp_path / "s1")
         _mk_store(spark, p)
         parts = _batch_partials(spark)
-        _crash_fold(spark, p, parts, "_move_staged_in", batch_id=1)
+        _crash_fold(spark, p, parts, "before_moves", batch_id=1)
         out = fold_rollup_into_store(spark, p, parts, batch_id=1)
         assert out == {"folded": False, "touched_buckets": 0}
         assert not os.path.exists(os.path.join(p, PENDING))
@@ -111,7 +126,7 @@ class TestRollupFoldCrashRecovery:
         no torn duplicate-partial state is ever observable."""
         p = str(tmp_path / "s3")
         _mk_store(spark, p)
-        _crash_fold(spark, p, _batch_partials(spark), "_move_staged_in")
+        _crash_fold(spark, p, _batch_partials(spark), "before_moves")
         assert _state(spark, p) == EXPECT_ONCE
         assert not os.path.exists(os.path.join(p, PENDING))
 
@@ -124,7 +139,7 @@ class TestRollupFoldCrashRecovery:
 
         p = str(tmp_path / "s4")
         _mk_store(spark, p)
-        _crash_fold(spark, p, _batch_partials(spark), "_delete_replaced")
+        _crash_fold(spark, p, _batch_partials(spark), "after_moves")
         out = compact_rollup_store(spark, p)
         assert out["n_groups"] == 3
         assert _state(spark, p) == EXPECT_ONCE
@@ -157,7 +172,7 @@ class TestRollupFoldCrashRecovery:
         lock-conflict error (ADVICE r8 item 1)."""
         p = str(tmp_path / "s6")
         _mk_store(spark, p)
-        _crash_fold(spark, p, _batch_partials(spark), "_move_staged_in")
+        _crash_fold(spark, p, _batch_partials(spark), "before_moves")
         with open(p + "__maintenance_lock", "w") as fh:
             fh.write('{"op": "rollup-fold", "pid": 1}')  # fresh mtime
         with pytest.raises(ConcurrentMaintenanceError, match="pending fold"):
@@ -165,6 +180,89 @@ class TestRollupFoldCrashRecovery:
         # stale takeover path clears it
         os.utime(p + "__maintenance_lock", (1_000_000, 1_000_000))
         assert _state_with_stale(spark, p) == EXPECT_ONCE
+
+    def test_meta_replace_crash_keeps_a_readable_meta(self, spark, tmp_path):
+        """A fenced fold rewrites ``_rollup_meta.json`` to advance the
+        fence. A crash at the step that swaps the new meta in must leave
+        the old meta or the new one, never neither: with the meta gone,
+        neither the store read nor the journal recovery (which advances
+        the fence again) could run. The crash is injected at both
+        routes the swap can take — the Hadoop rename and ``os.replace``
+        — and only for the meta file."""
+        from imitation_learning_data_pipeline_spark.pipeline import compact as C
+
+        p = str(tmp_path / "s_meta")
+        _mk_store(spark, p)
+        real_fs, real_replace = fsio._fs, os.replace
+
+        def is_meta(name):
+            return str(name).rstrip("/").endswith("/" + R._META)
+
+        class _CrashOnMetaRename:
+            def __init__(self, fs):
+                self._fs = fs
+
+            def __getattr__(self, n):
+                return getattr(self._fs, n)
+
+            def rename(self, src, dst):
+                if is_meta(dst.toString()):
+                    raise OSError("injected crash")
+                return self._fs.rename(src, dst)
+
+        def fake_fs(spark_, path_):
+            fs, jp = real_fs(spark_, path_)
+            return _CrashOnMetaRename(fs), jp
+
+        def crash_replace(src, dst):
+            if is_meta(dst):
+                raise OSError("injected crash")
+            return real_replace(src, dst)
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(R, "_fs", fake_fs, raising=False)
+            mp.setattr(C, "_fs", fake_fs)
+            mp.setattr(os, "replace", crash_replace)
+            with pytest.raises(OSError, match="injected crash"):
+                fold_rollup_into_store(
+                    spark, p, _batch_partials(spark), batch_id=1
+                )
+        assert os.path.exists(os.path.join(p, R._META))
+        assert os.path.exists(os.path.join(p, PENDING))
+        # the read completes the journaled fold, fence included
+        assert _state(spark, p) == EXPECT_ONCE
+        assert R._read_meta(spark, p)["last_batch"] == 1
+        assert not os.path.exists(os.path.join(p, PENDING))
+
+    def test_compact_swap_crash_is_finished_by_the_next_read(
+        self, spark, tmp_path
+    ):
+        """compact_rollup_store commits through the journaled staged
+        swap: a crash after the old store is dropped and before the
+        compacted one is renamed in leaves no store at the path, and the
+        next read finishes the swap — fence included — instead of
+        failing on a missing store."""
+        from imitation_learning_data_pipeline_spark.plans.rollup import (
+            compact_rollup_store,
+        )
+
+        p = str(tmp_path / "s_cswap")
+        _mk_store(spark, p)
+        fold_rollup_into_store(spark, p, _batch_partials(spark), batch_id=1)
+
+        def drop_then_crash(fs, jvm_path, live, tmp):
+            fsio._rm(fs, jvm_path, live)
+            raise RuntimeError("injected crash")
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(fsio, "_swap_in", drop_then_crash)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                compact_rollup_store(spark, p)
+        assert not os.path.exists(p)
+        assert _state(spark, p) == EXPECT_ONCE
+        assert R._read_meta(spark, p)["last_batch"] == 1
+        assert not os.path.exists(p + "__rollup_compact_pending.json")
+        assert not os.path.exists(p + "__rollup_tmp")
 
     def test_read_with_stale_lock_s_takes_over(self, spark, tmp_path):
         p = str(tmp_path / "s7")
@@ -583,7 +681,7 @@ class TestDmlCrashSweep:
             raise RuntimeError("injected crash")
 
         if point == "before_journal":
-            mp.setattr(M, "_write_pending", boom)
+            mp.setattr(fsio, "_write_journal", boom)
         elif point == "during_delete":
             # after the journal + moves, while replaced files retire
             from imitation_learning_data_pipeline_spark.pipeline import (

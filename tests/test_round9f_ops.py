@@ -11,6 +11,7 @@ from imitation_learning_data_pipeline_spark.pipeline.matview import (
     BaseMutatedError,
     create_matview,
     read_matview,
+    rebuild_matview,
     refresh_matview,
 )
 from imitation_learning_data_pipeline_spark.pipeline.merge import insert_into
@@ -318,26 +319,71 @@ class TestMatview:
         assert [v for v, _ in vs] == [0]
 
     def test_rebuild_crash_between_renames_restores(self, spark, mv):
-        """Whole-dir swap window: old store renamed aside, crash before
-        the staged store moved in. Every entry point must restore the
-        old store instead of reading a missing view."""
+        """Whole-dir swap window: the live store is dropped, then the
+        crash hits before the staged store is renamed in. The swap's
+        journal landed first, so every entry point finishes the swap
+        instead of reading a missing view."""
+        from imitation_learning_data_pipeline_spark.pipeline import fsio
         from imitation_learning_data_pipeline_spark.pipeline import matview as m
 
         base, path = mv
         expected = _got(spark, path)
         fs, _ = m._fs(spark, path)
         jvm_path = m._jvm_path(spark)
-        # simulate the crash: live dir renamed aside, nothing moved in
-        assert fs.rename(jvm_path(path), jvm_path(m._rebuild_old(path)))
+        pending = jvm_path(m._rebuild_pending(path))
+
+        def drop_then_crash(fs_, jvm_path_, live, tmp):
+            fsio._rm(fs_, jvm_path_, live)
+            raise RuntimeError("injected crash")
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(fsio, "_swap_in", drop_then_crash)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                rebuild_matview(spark, path)
         assert not fs.exists(jvm_path(path))
+        assert fs.exists(pending)
         # read path repairs lock-free (no writer is live)
         assert _got(spark, path) == expected
         assert fs.exists(jvm_path(path))
-        assert not fs.exists(jvm_path(m._rebuild_old(path)))
-        # post-swap window: BOTH exist → the old dir is garbage
-        fs.mkdirs(jvm_path(m._rebuild_old(path)))
+        assert not fs.exists(pending)
+        assert not fs.exists(jvm_path(m._rebuild_tmp(path)))
+        # post-swap window: journal present, staged dir gone → the swap
+        # completed and recovery only clears the journal
+        stream = fs.create(pending, True)
+        stream.write(bytearray(b"{}"))
+        stream.close()
         assert refresh_matview(spark, path)["files_new"] == 0
-        assert not fs.exists(jvm_path(m._rebuild_old(path)))
+        assert not fs.exists(pending)
+
+    def test_rebuild_crash_after_journal_before_swap(self, spark, mv):
+        """Crash after the rebuild's swap journal landed (the commit
+        point) but before the live store was touched: the next entry
+        point finishes the swap, so the rebuilt store and its state —
+        not the pre-rebuild ones — are what the view serves."""
+        from imitation_learning_data_pipeline_spark.pipeline import fsio
+        from imitation_learning_data_pipeline_spark.pipeline import matview as m
+
+        base, path = mv
+        expected = _got(spark, path)
+        seq = int(m._read_state(spark, path)["refresh_seq"])
+        fs, _ = m._fs(spark, path)
+        jvm_path = m._jvm_path(spark)
+
+        def boom(*a, **k):
+            raise RuntimeError("injected crash")
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(fsio, "_swap_in", boom)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                rebuild_matview(spark, path)
+        # the live store is untouched and still names the old sequence
+        assert int(m._read_state(spark, path)["refresh_seq"]) == seq
+        assert fs.exists(jvm_path(m._rebuild_pending(path)))
+        r = refresh_matview(spark, path)
+        assert r["files_new"] == 0 and r["refresh_seq"] == seq + 1
+        assert not fs.exists(jvm_path(m._rebuild_pending(path)))
+        assert not fs.exists(jvm_path(m._rebuild_tmp(path)))
+        assert _got(spark, path) == expected
 
     def test_concurrent_refresh_refused(self, spark, mv):
         """Two refreshes must serialize on the view-level lock; a held

@@ -94,8 +94,11 @@ def main() -> None:
         res["table_bytes"] = _du(arms["cow"])
 
         # 50 scattered point deletes (hash-scattered doc_ids → distinct
-        # files with high probability) issued as ONE predicate.
-        keys = [f"doc-{i * 79_999}" for i in range(50)]
+        # files with high probability) issued as ONE predicate. The
+        # stride spreads them over the whole id range, so every key
+        # exists at any n_rows (79,999 at the 4M default).
+        stride = max(1, (n_rows - 1) // 50)
+        keys = [f"doc-{i * stride}" for i in range(min(50, n_rows))]
         pred = "doc_id IN (" + ",".join(f"'{k}'" for k in keys) + ")"
 
         snap = _files(arms["cow"])
