@@ -34,6 +34,8 @@ import sys
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from .pipeline.fsio import _fs, _write_json, commit_frame, recover_frame
+
 
 def _spark(app: str) -> SparkSession:
     from .session import get_spark
@@ -46,20 +48,15 @@ def _spark(app: str) -> SparkSession:
 
 def cmd_discover(args: argparse.Namespace) -> int:
     from .pipeline.discover import discover, discover_delta
-    from .pipeline.fsio import _fs, _recover_staged_swap, _staged_swap
 
     spark = _spark("discover")
-    # Crash-safe manifest swap (discover_refactored.py:23-27 writes tmp +
-    # rename): stage to a sibling dir, land a journal as the commit
-    # point, then swap. A run that crashed mid-swap is finished here
-    # (journal present) or its staging discarded, before the manifest is
-    # read as this run's prior state.
+    # Crash-safe manifest commit (discover_refactored.py:23-27 writes
+    # tmp + rename). A run that crashed mid-swap is finished here, or
+    # its staging discarded, before the manifest is read as this run's
+    # prior state.
+    recover_frame(spark, args.manifest)
     fs, jmanifest = _fs(spark, args.manifest)
-    tmp, pending = args.manifest + ".tmp", args.manifest + ".pending"
-    _recover_staged_swap(spark, fs, args.manifest, tmp, pending)
-    prev = None
-    if fs.exists(jmanifest):
-        prev = spark.read.parquet(args.manifest)
+    prev = spark.read.parquet(args.manifest) if fs.exists(jmanifest) else None
 
     manifest = discover(
         spark,
@@ -77,10 +74,7 @@ def cmd_discover(args: argparse.Namespace) -> int:
     manifest = manifest.orderBy(
         "chunk", "episode_index", F.col("status") == "ORPHAN_VIDEO"
     )
-    manifest.write.mode("overwrite").parquet(tmp)
-    _staged_swap(spark, fs, args.manifest, tmp, pending)
-
-    done = spark.read.parquet(args.manifest)
+    done = commit_frame(manifest, args.manifest)
     delta = done if args.print_all else discover_delta(done)
     if args.stdout_jsonl:
         for line in delta.toJSON().collect():  # K9 (scripts/neura.py:66-74)
@@ -161,9 +155,8 @@ def cmd_stats(args: argparse.Namespace) -> int:
             "min": list(r.min),
             "max": list(r.max),
         }
-    os.makedirs(os.path.dirname(args.out_path) or ".", exist_ok=True)
-    with open(args.out_path, "w") as f:  # K7 JSON document sink
-        json.dump(doc, f, indent=2)
+    fs, _ = _fs(spark, args.out_path)
+    _write_json(spark, fs, args.out_path, doc)  # K7 JSON document sink
     print(json.dumps({"out": args.out_path, "features": len(rows)}))
     return 0
 
@@ -184,10 +177,7 @@ def cmd_align_transform(args: argparse.Namespace) -> int:
             k: v for k, v in raw.items() if isinstance(v, dict) and "mean" in v
         }
     aligned = align_transform(frames, stats_doc)
-    aligned.write.mode("overwrite").option("compression", "zstd").parquet(
-        f"{args.out_dir}/data"
-    )
-    n = spark.read.parquet(f"{args.out_dir}/data").count()
+    n = commit_frame(aligned, f"{args.out_dir}/data", compression="zstd").count()
     print(json.dumps({"out": args.out_dir, "rows": n}))
     return 0
 
@@ -278,7 +268,6 @@ def cmd_dedup(args: argparse.Namespace) -> int:
         import hashlib
 
         from . import cache
-        from .pipeline.fsio import _fs
         from .plans.dedup import dedup_against_store, minhash_signatures
 
         # Hadoop FileSystem existence check — os.path would declare any
@@ -343,8 +332,7 @@ def cmd_dedup(args: argparse.Namespace) -> int:
         )
     else:
         pairs = ngram_jaccard_pairs(docs, threshold=threshold)
-    pairs.write.mode("overwrite").parquet(f"{args.out_dir}/pairs")
-    pairs = spark.read.parquet(f"{args.out_dir}/pairs")  # reuse, don't recompute
+    pairs = commit_frame(pairs, f"{args.out_dir}/pairs")
 
     if args.fold_into_store:
         from .plans.dedup import write_minhash_store
@@ -365,8 +353,7 @@ def cmd_dedup(args: argparse.Namespace) -> int:
             )
 
     clusters = connected_components(pairs.select("doc_a", "doc_b"))
-    clusters.write.mode("overwrite").parquet(f"{args.out_dir}/clusters")
-    clusters = spark.read.parquet(f"{args.out_dir}/clusters")
+    clusters = commit_frame(clusters, f"{args.out_dir}/clusters")
 
     batch_ids = docs.select("doc_id")
     if args.store is not None:
@@ -395,8 +382,7 @@ def cmd_dedup(args: argparse.Namespace) -> int:
             "doc_id"
         )
     keep = batch_ids.join(drop, "doc_id", "left_anti")
-    keep.write.mode("overwrite").parquet(f"{args.out_dir}/keep")
-    keep = spark.read.parquet(f"{args.out_dir}/keep")
+    keep = commit_frame(keep, f"{args.out_dir}/keep")
 
     n_docs = docs.count()
     n_pairs = pairs.count()
@@ -477,10 +463,7 @@ def cmd_split(args: argparse.Namespace) -> int:
         docs, train=fr[0], val=fr[1], test=fr[2], seed=args.seed,
         threshold=args.threshold,
     )
-    out.write.mode("overwrite").parquet(args.out)
-    # summarize from the WRITTEN files — re-running the lazy plan would
-    # recompute the whole minhash+components pipeline a second time
-    written = spark.read.parquet(args.out)
+    written = commit_frame(out, args.out)
     counts = {
         r["split"]: r["n"]
         for r in written.groupBy("split").agg(F.count("*").alias("n")).collect()
@@ -505,10 +488,8 @@ def cmd_trajectory(args: argparse.Namespace) -> int:
         stride=args.stride,
         carry_cols=[c for c in events.columns if c != args.episode_col],
     )
-    wins.write.mode("overwrite").parquet(f"{args.out}/windows")
-    # count from the written files, not a second run of the lazy plan
     summary = {
-        "windows": spark.read.parquet(f"{args.out}/windows")
+        "windows": commit_frame(wins, f"{args.out}/windows")
         .select(args.episode_col, "window_id")
         .distinct()
         .count()
@@ -530,7 +511,7 @@ def cmd_trajectory(args: argparse.Namespace) -> int:
                 f"span_ms, but {ts_col!r} is {ts_type.simpleString()}; "
                 "pass --ts-col naming the event-time column"
             )
-        window_features(
+        feats = window_features(
             events,
             episode_col=args.episode_col,
             order_cols=args.order_by.split(","),
@@ -539,7 +520,8 @@ def cmd_trajectory(args: argparse.Namespace) -> int:
             type_col=args.type_col,
             length=args.length,
             stride=args.stride,
-        ).write.mode("overwrite").parquet(f"{args.out}/features")
+        )
+        commit_frame(feats, f"{args.out}/features")
         summary["features"] = True
     print(json.dumps(summary))
     return 0
@@ -601,8 +583,8 @@ def cmd_decontam(args: argparse.Namespace) -> int:
         )
         report = decontam_fuzzy(docs, probe, threshold=args.threshold)
         if args.out:
-            report.write.mode("overwrite").parquet(args.out)
-            print(json.dumps({"out": args.out, "n_pairs": report.count()}))
+            n = commit_frame(report, args.out).count()
+            print(json.dumps({"out": args.out, "n_pairs": n}))
         else:
             for r in report.collect():
                 print(json.dumps(r.asDict()))
@@ -623,8 +605,8 @@ def cmd_decontam(args: argparse.Namespace) -> int:
     )
     report = decontam_overlap_against_store(docs, args.store, n=args.n)
     if args.out:
-        report.write.mode("overwrite").parquet(args.out)
-        print(json.dumps({"out": args.out, "n_contaminated": report.count()}))
+        n = commit_frame(report, args.out).count()
+        print(json.dumps({"out": args.out, "n_contaminated": n}))
     else:
         for r in report.collect():
             print(json.dumps(r.asDict()))
@@ -769,9 +751,7 @@ def cmd_snapshot(args: argparse.Namespace) -> int:
     if args.read:
         if not args.out:
             raise SystemExit("snapshot: --read needs --out")
-        read_snapshot(spark, args.path, args.read).write.mode(
-            "overwrite"
-        ).parquet(args.out)
+        commit_frame(read_snapshot(spark, args.path, args.read), args.out)
         print(json.dumps({"tag": args.read, "exported": args.out}))
         return 0
     for s in list_snapshots(spark, args.path):
@@ -866,8 +846,8 @@ def cmd_graph(args: argparse.Namespace) -> int:
         seeds=seeds,
     )
     if args.out:
-        pr.write.mode("overwrite").parquet(args.out)
-        print(json.dumps({"out": args.out, "nodes": pr.count()}))
+        n = commit_frame(pr, args.out).count()
+        print(json.dumps({"out": args.out, "nodes": n}))
         return 0
     for r in pr.orderBy(F.col("rank").desc()).limit(args.top).collect():
         print(json.dumps(r.asDict()))
@@ -885,8 +865,8 @@ def cmd_hitters(args: argparse.Namespace) -> int:
         df, text_col=args.text_col, n=args.n, min_frac=args.min_frac
     )
     if args.out:
-        out.write.mode("overwrite").parquet(args.out)
-        print(json.dumps({"out": args.out, "hitters": out.count()}))
+        n = commit_frame(out, args.out).count()
+        print(json.dumps({"out": args.out, "hitters": n}))
         return 0
     for r in (
         out.orderBy(F.col("n_occurrences").desc(), "gram")
@@ -918,7 +898,7 @@ def cmd_novelty(args: argparse.Namespace) -> int:
             F.sum("n_dup").alias("dup_occurrences"),
         ).collect()[0]
         kept = out.filter(F.col("is_novel")) if args.drop_dupey else out
-        kept.write.mode("overwrite").parquet(args.out)
+        commit_frame(kept, args.out)
     finally:
         out.unpersist()
     print(json.dumps({"out": args.out, **stats.asDict()}))
@@ -953,9 +933,7 @@ def cmd_unimax(args: argparse.Namespace) -> int:
     # aggregate a second time
     rows = plan.orderBy(args.group_col).collect()
     if args.out:
-        spark.createDataFrame(rows, plan.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(args.out)
+        commit_frame(spark.createDataFrame(rows, plan.schema).coalesce(1), args.out)
     for r in rows:
         print(json.dumps(r.asDict()))
     return 0
@@ -1054,7 +1032,7 @@ def cmd_privacy(args: argparse.Namespace) -> int:
     quasi = [c.strip() for c in args.quasi.split(",") if c.strip()]
     audit = k_anonymity_audit(df, quasi, args.sensitive, k=args.k, l_div=args.l)
     if args.audit_out:
-        audit.write.mode("overwrite").parquet(args.audit_out)
+        audit = commit_frame(audit, args.audit_out)
     summary = audit.agg(
         F.count("*").alias("classes"),
         F.sum("k_violation").alias("k_violations"),
@@ -1064,9 +1042,7 @@ def cmd_privacy(args: argparse.Namespace) -> int:
     if args.suppress:
         if not args.out:
             raise SystemExit("privacy: --suppress needs --out")
-        suppress_small_classes(df, quasi, k=args.k).write.mode(
-            "overwrite"
-        ).parquet(args.out)
+        commit_frame(suppress_small_classes(df, quasi, k=args.k), args.out)
     print(json.dumps({"k": args.k, "l": args.l, **summary.asDict(),
                       **({"out": args.out} if args.suppress else {})}))
     return 0
@@ -1113,8 +1089,8 @@ def cmd_doremi(args: argparse.Namespace) -> int:
         docs, domain_col=args.domain_col, eta=args.eta, smoothing=args.smoothing
     )
     if args.out:
-        out.write.mode("overwrite").parquet(args.out)
-        print(json.dumps({"out": args.out, "domains": out.count()}))
+        n = commit_frame(out, args.out).count()
+        print(json.dumps({"out": args.out, "domains": n}))
     else:
         for r in out.orderBy("domain").collect():
             print(json.dumps(r.asDict()))
@@ -1160,8 +1136,8 @@ def cmd_ivf(args: argparse.Namespace) -> int:
         exclude_self=args.exclude_self,
     )
     if args.out:
-        out.write.mode("overwrite").parquet(args.out)
-        print(json.dumps({"out": args.out, "rows": out.count()}))
+        n = commit_frame(out, args.out).count()
+        print(json.dumps({"out": args.out, "rows": n}))
     else:
         for r in out.orderBy("qid", "rnk").collect():
             print(json.dumps(r.asDict()))
@@ -1218,12 +1194,13 @@ def cmd_bpe(args: argparse.Namespace) -> int:
         [(i, l, r, c) for i, (l, r, c) in enumerate(merges)],
         "rank long, left string, right string, pair_count long",
     )
-    mdf.coalesce(1).write.mode("overwrite").parquet(args.merges_out)
+    commit_frame(mdf.coalesce(1), args.merges_out)
     stats = {"merges_out": args.merges_out, "merges": len(merges)}
     if args.counts_out:
-        bpe_token_counts(
+        counts = bpe_token_counts(
             df, merges, text_col=args.text_col, id_col=args.id_col
-        ).write.mode("overwrite").parquet(args.counts_out)
+        )
+        commit_frame(counts, args.counts_out)
         stats["counts_out"] = args.counts_out
     print(json.dumps(stats))
     return 0
@@ -1250,8 +1227,8 @@ def cmd_lm_score(args: argparse.Namespace) -> int:
         out = score_bigram_nll(
             df, big, ctx, v, text_col=args.text_col, id_col=args.id_col
         )
-    out.write.mode("overwrite").parquet(args.out)
-    print(json.dumps({"out": args.out, "rows": out.count()}))
+    n = commit_frame(out, args.out).count()
+    print(json.dumps({"out": args.out, "rows": n}))
     return 0
 
 
@@ -1274,8 +1251,7 @@ def cmd_rewrite_dups(args: argparse.Namespace) -> int:
     out = remove_dup_spans(docs, n=args.ngram)
     if args.drop_empty:
         out = out.filter(F.col("kept_text") != "")
-    out.write.mode("overwrite").parquet(args.out)
-    stats = out.agg(
+    stats = commit_frame(out, args.out).agg(
         F.count("*").alias("docs_out"),
         F.sum("n_words").alias("words_in"),
         F.sum("n_removed").alias("words_removed"),
@@ -1309,8 +1285,7 @@ def cmd_line_dedup(args: argparse.Namespace) -> int:
     )
     if args.drop_empty:
         out = out.filter(F.col("clean_text") != "")
-    out.write.mode("overwrite").parquet(args.out)
-    stats = out.agg(
+    stats = commit_frame(out, args.out).agg(
         F.count("*").alias("docs_out"),
         F.sum("n_lines").alias("lines_in"),
         F.sum("n_kept_lines").alias("lines_kept"),
@@ -1344,8 +1319,8 @@ def cmd_dsir(args: argparse.Namespace) -> int:
 
         w = read_dsir_weights(spark, args.weights)
         picked = dsir_select_batch(raw, w, k=args.k, seed=args.seed)
-        picked.write.mode("overwrite").parquet(args.out)
-        print(json.dumps({"out": args.out, "selected": picked.count(), "k": args.k}))
+        n = commit_frame(picked, args.out).count()
+        print(json.dumps({"out": args.out, "selected": n, "k": args.k}))
         return 0
     cache.begin_plan()
     if args.target:
@@ -1385,8 +1360,8 @@ def cmd_dsir(args: argparse.Namespace) -> int:
     # foreign/paired weight table lacks score as ~0 (unbiased).
     scored = dsir_scores(raw, weights, feats=feats)
     picked = dsir_resample_topk(scored, k=args.k, seed=args.seed)
-    picked.write.mode("overwrite").parquet(args.out)
-    stats = {"out": args.out, "selected": picked.count(), "k": args.k}
+    n = commit_frame(picked, args.out).count()
+    stats = {"out": args.out, "selected": n, "k": args.k}
     if args.weights_out:
         stats["weights_out"] = args.weights_out
     print(json.dumps(stats))
@@ -1436,9 +1411,8 @@ def cmd_quality_model(args: argparse.Namespace) -> int:
         out = scored.filter("kept").drop("kept") if args.keep_only else scored
     else:
         out = scored
-    out.write.mode("overwrite").parquet(args.out)
-    stats = {"out": args.out, "rows": out.count()}
-    print(json.dumps(stats))
+    n = commit_frame(out, args.out).count()
+    print(json.dumps({"out": args.out, "rows": n}))
     return 0
 
 
@@ -1467,8 +1441,7 @@ def cmd_embed_filter(args: argparse.Namespace) -> int:
     )
     if args.keep_only:
         out = out.filter("NOT is_outlier")
-    out.write.mode("overwrite").parquet(args.out)
-    stats = out.agg(
+    stats = commit_frame(out, args.out).agg(
         F.count("*").alias("rows"),
         F.sum(F.col("is_outlier").cast("int")).alias("outliers"),
     ).collect()[0]
@@ -1499,8 +1472,8 @@ def cmd_phash(args: argparse.Namespace) -> int:
     pairs = phash_pairs(
         hashes, max_hamming=args.max_hamming, bucket_cap=args.bucket_cap
     )
-    pairs.write.mode("overwrite").parquet(args.out)
-    print(json.dumps({"out": args.out, "pairs": pairs.count()}))
+    n = commit_frame(pairs, args.out).count()
+    print(json.dumps({"out": args.out, "pairs": n}))
     return 0
 
 
@@ -1558,8 +1531,7 @@ def cmd_ingest_warc(args: argparse.Namespace) -> int:
         out = ingest_records(records, **kw)
     else:
         out = ingest_warc_plan(spark, args.input, **kw)
-    out.write.mode("overwrite").parquet(args.out)
-    n = spark.read.parquet(args.out).count()
+    n = commit_frame(out, args.out).count()
     print(json.dumps({"out": args.out, "docs": n}))
     return 0
 
@@ -1583,8 +1555,7 @@ def cmd_domain_stats(args: argparse.Namespace) -> int:
         )
     census = domain_census(df, url_col=args.url_col)
     if args.out:
-        census.write.mode("overwrite").parquet(args.out)
-        census = spark.read.parquet(args.out)  # reuse, don't recompute
+        census = commit_frame(census, args.out)
     top = census.orderBy(
         F.desc("n_docs"), F.desc("total_chars"), "domain"
     ).limit(args.top).collect()
@@ -1696,9 +1667,7 @@ def cmd_cdx_plan(args: argparse.Namespace) -> int:
                 F.col("k.digest").alias("digest"),
             )
         )
-    plan.write.mode("overwrite").parquet(args.out)
-    back = spark.read.parquet(args.out)
-    agg = back.agg(
+    agg = commit_frame(plan, args.out).agg(
         F.count("*").alias("n"),
         F.countDistinct("filename").alias("nf"),
         F.sum("length").alias("b"),
@@ -1743,8 +1712,7 @@ def cmd_wat_links(args: argparse.Namespace) -> int:
             .groupBy("src_domain", "dst_domain")
             .agg(F.count("*").cast("long").alias("n_links"))
         )
-    edges.write.mode("overwrite").parquet(args.out)
-    n = spark.read.parquet(args.out).count()
+    n = commit_frame(edges, args.out).count()
     print(json.dumps({"out": args.out, "edges": n}))
     return 0
 
@@ -1774,8 +1742,7 @@ def cmd_robots_filter(args: argparse.Namespace) -> int:
         out = out.filter(~F.col("robots_disallowed")).drop(
             "robots_disallowed"
         )
-    out.write.mode("overwrite").parquet(args.out)
-    back = spark.read.parquet(args.out)
+    back = commit_frame(out, args.out)
     n_out = back.count()
     n_dis = (
         0
@@ -2102,8 +2069,7 @@ def cmd_curriculum(args: argparse.Namespace) -> int:
         F.col(args.id_col).alias("doc_id"),
         F.col(args.level_col).cast("long").alias("level"),
     )
-    out = curriculum_plan(leveled, seed=args.seed).persist()
-    out.write.mode("overwrite").parquet(args.out)
+    out = commit_frame(curriculum_plan(leveled, seed=args.seed), args.out)
     spans = (
         out.groupBy("level")
         .agg(
@@ -2114,7 +2080,6 @@ def cmd_curriculum(args: argparse.Namespace) -> int:
         .orderBy("level")
         .collect()
     )
-    out.unpersist()
     for r in spans:
         print(json.dumps(r.asDict()))
     return 0
@@ -2140,18 +2105,15 @@ def cmd_semdedup(args: argparse.Namespace) -> int:
         F.col(args.id_col).alias("vec_id"),
         as_double(args.vec_col).alias("v"),
     )
-    out = semdedup(
-        corpus, k=args.k, threshold=args.threshold
-    ).persist()
+    out = semdedup(corpus, k=args.k, threshold=args.threshold)
     if args.out:
-        out.write.mode("overwrite").parquet(args.out)
+        out = commit_frame(out, args.out)
     row = out.agg(
         F.count("*").alias("n_vectors"),
         F.sum(F.col("keep").cast("int")).alias("n_kept"),
         F.count("cluster_id").alias("n_clustered"),
         F.countDistinct("cluster_id").alias("n_groups"),
     ).collect()[0]
-    out.unpersist()
     print(json.dumps({k: (int(v) if v is not None else 0) for k, v in row.asDict().items()}))
     return 0
 
@@ -2173,14 +2135,11 @@ def cmd_diff(args: argparse.Namespace) -> int:
                 raise SystemExit(f"diff: {side} dataset lacks column '{c}'")
     d = corpus_diff(old, new, key=args.key, content_col=args.content_col)
     if args.out:
-        d = d.persist()
-        d.write.mode("overwrite").parquet(args.out)
+        d = commit_frame(d, args.out)
     counts = {
         r["status"]: r["n"]
         for r in d.groupBy("status").agg(F.count("*").alias("n")).collect()
     }
-    if args.out:
-        d.unpersist()
     print(
         json.dumps(
             {
@@ -2231,7 +2190,7 @@ def cmd_quality(args: argparse.Namespace) -> int:
         )
         out = perplexity_bucket_sample(scored)
     if args.out:
-        out.write.mode("overwrite").parquet(args.out)
+        commit_frame(out, args.out)
     rules.unpersist()
     print(json.dumps(summary.asDict()))
     return 0
@@ -2318,7 +2277,7 @@ def cmd_curate(args: argparse.Namespace) -> int:
         line_dedup_min_docs=args.line_dedup_min_docs,
     )
     if args.out:
-        curated.write.mode("overwrite").parquet(args.out)
+        commit_frame(curated, args.out)
     curated.unpersist()
     print(json.dumps({"path": args.path, "funnel": report, "out": args.out}))
     return 0

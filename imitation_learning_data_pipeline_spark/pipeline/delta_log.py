@@ -37,7 +37,7 @@ from urllib.parse import quote, unquote
 
 from pyspark.sql import SparkSession
 
-from .fsio import _fs, _jvm_path, _read_bytes, _rm
+from .fsio import _fs, _jvm_path, _read_bytes, _read_json, _rm, _write_json
 
 
 def _log_dir(path: str) -> str:
@@ -85,12 +85,12 @@ def read_delta_snapshot(spark: SparkSession, path: str) -> dict:
     # just because the hint file is stale or absent.
     v = parts = None
     if "_last_checkpoint" in names:
-        meta = json.loads(
-            _read_bytes(spark, fs, f"{log}/_last_checkpoint").decode("utf-8")
-        )
-        v = int(meta["version"])
-        parts = int(meta.get("parts") or 1)
-    else:
+        try:
+            meta = _read_json(spark, fs, f"{log}/_last_checkpoint")
+            v, parts = int(meta["version"]), int(meta.get("parts") or 1)
+        except (ValueError, KeyError, TypeError):
+            pass  # a torn hint: fall back to the listing
+    if v is None:
         classic = [
             int(n.split(".")[0])
             for n in names
@@ -725,14 +725,5 @@ def _write_delta_checkpoint(
     if not fs.rename(jpath(f"{tmp}/{part}"), dst):
         raise IOError(f"could not move checkpoint part to {dst}")
     _rm(fs, jpath, tmp)
-    stream = fs.create(jpath(f"{log}/_last_checkpoint"), True)
-    try:
-        stream.write(
-            bytearray(
-                json.dumps(
-                    {"version": version, "size": len(rows), "parts": 1}
-                ).encode()
-            )
-        )
-    finally:
-        stream.close()
+    hint = {"version": version, "size": len(rows), "parts": 1}
+    _write_json(spark, fs, f"{log}/_last_checkpoint", hint)

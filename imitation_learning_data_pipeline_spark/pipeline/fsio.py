@@ -2,7 +2,7 @@
 
 A reproducible pipeline recovers from a crash by re-running the task,
 so every store this package persists must survive a crash in the
-middle of a commit. This module owns the five pieces of that protocol;
+middle of a commit. This module owns the six pieces of that protocol;
 it imports nothing else from the package:
 
 - the Hadoop ``FileSystem`` / ``Path`` handle (:func:`_fs`,
@@ -24,12 +24,22 @@ it imports nothing else from the package:
   to the caller, which does its own drop of the replaced files;
 - the whole-directory staged swap (:func:`_staged_swap`,
   :func:`_recover_staged_swap`) for stores rewritten whole on every
-  commit (cli/streaming discover manifests, HLL registers, the PSI
-  baseline, matview rebuilds): stage to a sibling dir, land a sibling
+  commit (HLL registers, the PSI baseline, matview rebuilds and every
+  output frame below): stage to a sibling dir, land a sibling
   journal (the commit point), drop the old dir, rename the staged dir
-  in, clear the journal.
+  in, clear the journal;
+- the output-frame commit (:func:`commit_frame`, :func:`recover_frame`)
+  that every CLI verb, the validate and materialize stages and the
+  streaming discover manifest write through: the staged swap around a
+  Spark write, because ``mode("overwrite")`` deletes the live output
+  before its write job runs, so a write that fails leaves an empty
+  directory.
+  It returns a read of the committed files, so a verb's summary counts
+  what was written and never re-runs the plan that wrote it.
 
-Callers run every commit under the table maintenance lock
+A crashed swap is finished (journal present) or its staging discarded
+by the next write to the same path, not by readers. Table-store
+callers run every commit under the table maintenance lock
 (``pipeline/compact.py``).
 """
 
@@ -221,3 +231,36 @@ def _recover_staged_swap(spark, fs, path: str, tmp: str, pending: str) -> bool:
         )
     fs.delete(jpend, False)
     return True
+
+
+# --- output-frame commit -----------------------------------------------------
+
+
+def recover_frame(spark, path: str) -> None:
+    """Finish or discard a crashed :func:`commit_frame` of ``path`` —
+    for a caller that reads the previous output before writing anew."""
+    path = path.rstrip("/")
+    fs, _ = _fs(spark, path)
+    _recover_staged_swap(spark, fs, path, path + ".tmp", path + ".pending")
+
+
+def commit_frame(df, path: str, fmt: str = "parquet", partition_by=(), **options):
+    """Write ``df`` to ``path`` whole or not at all: stage it in the
+    sibling ``path.tmp``, then swap it in under the ``path.pending``
+    journal. The previous output survives a failed write. Returns a
+    lazy read of the committed files; the schema is ``df``'s, so an
+    empty partitioned write reads back empty."""
+    spark = df.sparkSession
+    path = path.rstrip("/")
+    tmp, pending = path + ".tmp", path + ".pending"
+    fs, _ = _fs(spark, path)
+    _recover_staged_swap(spark, fs, path, tmp, pending)
+    (
+        df.write.mode("overwrite")
+        .format(fmt)
+        .options(**options)
+        .partitionBy(*partition_by)
+        .save(tmp)
+    )
+    _staged_swap(spark, fs, path, tmp, pending)
+    return spark.read.schema(df.schema).format(fmt).load(path)

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import split_assign
+from .fsio import commit_frame
 
 DEFAULT_FRACS = (0.8, 0.1, 0.1)  # scripts/neura.py:167-171
 DEFAULT_SEED = "42"
@@ -62,38 +63,23 @@ def materialize(
                 "chunk-%03d", (F.col("episode_index") / 1000).cast("int")
             ),
         )
-    (
-        assigned.repartition("split", "chunk")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy("split", "chunk")
-        .parquet(f"{out_dir}/data")
+    data = commit_frame(
+        assigned.repartition("split", "chunk"),
+        f"{out_dir}/data",
+        partition_by=("split", "chunk"),
+        compression="zstd",
     )
     # Index from the WRITTEN dataset, not a second run of the upstream
-    # plan (optimization r16): `assigned` is lazy, so aggregating it
-    # here re-executed the entire upstream chain (align transform +
-    # scan) once for the index write — and a caller aggregating the
-    # returned index paid a THIRD run. Reading back what the write just
-    # materialized is a partition-pruned, column-pruned scan of
-    # episode_index only (per-file metadata-ish at any scale) and makes
-    # the index stronger, not weaker: it now counts the rows actually
-    # on disk. Returning a read of the written index parquet keeps the
-    # returned frame O(episodes) to recompute however often callers
+    # plan: `assigned` is lazy, so aggregating it re-executes the whole
+    # upstream chain (align transform + scan). The read-back is a
+    # partition-pruned scan of episode_index only, and it counts the
+    # rows actually on disk. Returning a read of the written index keeps
+    # the returned frame O(episodes) to recompute however often callers
     # aggregate it.
-    # The read-back takes its schema from `assigned`: a partitioned write
-    # of zero rows leaves no data file to infer one from, and an empty
-    # input must still yield an empty index.
-    spark = frames.sparkSession
-    index = (
-        spark.read.schema(assigned.schema)
-        .parquet(f"{out_dir}/data")
-        .groupBy("split", "chunk", "episode_index")
-        .agg(F.count("*").alias("rows"))
+    index = data.groupBy("split", "chunk", "episode_index").agg(
+        F.count("*").alias("rows")
     )
-    index.write.mode("overwrite").parquet(f"{out_dir}/index")
-    return spark.read.parquet(f"{out_dir}/index").select(
-        "split", "chunk", "episode_index", "rows"
-    )
+    return commit_frame(index, f"{out_dir}/index")
 
 
 def link_pairs(index: DataFrame, video_root: str, out_dir: str) -> DataFrame:

@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .fsio import commit_frame
 from .validate import validation_summary
 
 
@@ -26,24 +27,17 @@ def write_validation_outputs(report: DataFrame, out_dir: str) -> dict:
     episode).
     """
     os.makedirs(out_dir, exist_ok=True)
-
-    report.write.mode("overwrite").parquet(f"{out_dir}/episodes.parquet")
-    written = report.sparkSession.read.parquet(f"{out_dir}/episodes.parquet")
+    written = commit_frame(report, f"{out_dir}/episodes.parquet")
 
     # failures.jsonl — failed episodes with their check flags (K5).
-    (
-        written.filter(~F.col("ok"))
-        .write.mode("overwrite")
-        .json(f"{out_dir}/failures.jsonl")
-    )
+    commit_frame(written.filter(~F.col("ok")), f"{out_dir}/failures.jsonl", "json")
 
     # validated_episodes.jsonl — projected pass list (K5, the projection
     # at validate_from_manifest_refactored.py:101-107).
-    (
-        written.filter(F.col("ok"))
-        .select("episode_index", "n_rows")
-        .write.mode("overwrite")
-        .json(f"{out_dir}/validated_episodes.jsonl")
+    commit_frame(
+        written.filter(F.col("ok")).select("episode_index", "n_rows"),
+        f"{out_dir}/validated_episodes.jsonl",
+        "json",
     )
 
     # summary.yaml — one-row aggregate formatted driver-side (K6).

@@ -204,8 +204,9 @@ def write_drift_baseline(
     r12): a bare overwrite racing a concurrent ``fold_drift_baseline``
     would clobber a mid-swap store or last-writer-wins away a folded
     batch. A crashed fold's journaled swap is completed FIRST, then the
-    rebuild overwrites — which legitimately resets the batch-id fence
-    (a rebuild founds a new baseline epoch)."""
+    rebuild is staged and swapped in the same way, so a rebuild that
+    fails leaves the previous baseline. A rebuild legitimately resets
+    the batch-id fence (it founds a new baseline epoch)."""
     spark = ref.sparkSession
     path = path.rstrip("/")
     fs, _ = _fs(spark, path)
@@ -216,7 +217,8 @@ def write_drift_baseline(
         _recover_staged_swap(spark, fs, path, tmp, pending)
         drift_bucket_counts(ref, score_col, n_buckets).coalesce(
             1
-        ).write.mode("overwrite").parquet(path)
+        ).write.mode("overwrite").parquet(tmp)
+        _staged_swap(spark, fs, path, tmp, pending)
     finally:
         _release_table_lock(fs, jvm_path, path)
 

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline.discover import SAMPLE_BYTES, _parse_path
-from ..pipeline.fsio import _fs, _recover_staged_swap, _staged_swap
+from ..pipeline.fsio import _fs, commit_frame, recover_frame
 
 
 def episode_file_stream(spark: SparkSession, root: str) -> DataFrame:
@@ -69,9 +69,11 @@ def run_discover_stream(
     merging each micro-batch by key with keep-latest-fingerprint semantics;
     returns the resulting manifest DataFrame.
 
-    Statuses: first sighting → NEW; a batch re-run may land as CHANGED if
-    a path re-enters the stream. NOTE the file source tracks seen files
-    BY PATH — an in-place rewrite is never re-emitted, so in-place
+    Statuses: first sighting → NEW; a key seen again with a different
+    fingerprint → CHANGED. A key seen again with the same fingerprint
+    keeps its prior row, so a replayed batch (one whose swap the next
+    run's recovery committed) is a no-op. NOTE the file source tracks
+    seen files BY PATH — an in-place rewrite is never re-emitted, so in-place
     CHANGED detection stays with the batch `pipeline.discover` diff: the
     deployment shape is this stream for continuous exactly-once NEW
     ingest plus a periodic batch reconciliation pass that feeds the
@@ -79,13 +81,12 @@ def run_discover_stream(
     tests/test_discover_stream.py).
     """
     keys = ["chunk", "episode_index"]
-    # The crash-safe manifest swap `cli discover` uses. A batch that
+    # The crash-safe manifest commit `cli discover` uses. A batch that
     # crashed mid-swap ended its run, so finishing it (journal present)
     # or discarding its staging here comes before any batch reads the
     # prior manifest.
+    recover_frame(spark, manifest_dir)
     fs, jmanifest = _fs(spark, manifest_dir)
-    tmp, pending = manifest_dir + ".tmp", manifest_dir + ".pending"
-    _recover_staged_swap(spark, fs, manifest_dir, tmp, pending)
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
@@ -95,18 +96,18 @@ def run_discover_stream(
             prev_fp = prev.select(*keys, F.col("fingerprint").alias("prev_fp"))
             merged_new = (
                 new.join(prev_fp, keys, "left")
+                .filter(~F.col("fingerprint").eqNullSafe(F.col("prev_fp")))
                 .withColumn(
                     "status",
                     F.when(F.col("prev_fp").isNull(), "NEW").otherwise("CHANGED"),
                 )
                 .drop("prev_fp")
             )
-            keep_prev = prev.join(new.select(*keys), keys, "left_anti")
+            keep_prev = prev.join(merged_new.select(*keys), keys, "left_anti")
             out = keep_prev.unionByName(merged_new)
         else:
             out = new
-        out.write.mode("overwrite").parquet(tmp)
-        _staged_swap(s, fs, manifest_dir, tmp, pending)
+        commit_frame(out, manifest_dir)
 
     q = (
         episode_file_stream(spark, root)

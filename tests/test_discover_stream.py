@@ -92,7 +92,8 @@ def test_streaming_manifest_survives_a_crashed_swap(spark, tree, tmp_path):
     already dropped, the new one not yet moved in — must not lose the
     manifest: the swap's journal landed first, so the next run finishes
     the swap before any batch reads the prior manifest, and every
-    episode seen before the crash keeps its row."""
+    episode seen before the crash keeps its row. The replay of the
+    crashed batch is a no-op: its episode stays NEW."""
     from imitation_learning_data_pipeline_spark.pipeline import fsio
     from imitation_learning_data_pipeline_spark.streaming.discover_stream import (
         run_discover_stream,
@@ -119,3 +120,4 @@ def test_streaming_manifest_survives_a_crashed_swap(spark, tree, tmp_path):
     rows = {r.episode_index: r.status for r in m2.collect()}
     assert set(rows) == seen | {42}
     assert {rows[ep] for ep in seen} == {"NEW"}
+    assert rows[42] == "NEW"

@@ -1,6 +1,7 @@
 """The table layer's commit protocol lives in one module
-(``pipeline/fsio.py``): a source-level guard that it stays there, and
-the atomic JSON write on both of its arms."""
+(``pipeline/fsio.py``): a source-level guard that it stays there, the
+atomic JSON write on both of its arms, and the output-frame commit that
+keeps a verb's previous output when its write fails."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import re
 from pathlib import Path
 
 import pytest
+from conftest import run_cli
 
 from imitation_learning_data_pipeline_spark.pipeline import fsio
 
@@ -45,6 +47,59 @@ def test_commit_protocol_is_defined_only_in_fsio():
     bind = re.compile(r"""^\s*\w+\s*(?::[^=]+)?=\s*["']__merge_pending\.json["']""", re.M)
     where = [(_rel(p), len(bind.findall(s))) for p, s in srcs.items() if bind.search(s)]
     assert where == [("pipeline/fsio.py", 1)], where
+
+
+def test_output_writes_go_through_commit_frame():
+    """No verb or stage output is overwritten in place: each commits
+    through ``fsio.commit_frame``, and the CLI never drives the staged
+    swap itself."""
+    srcs = _sources()
+    for rel in (
+        "cli.py", "pipeline/outputs.py", "pipeline/materialize.py",
+        "streaming/discover_stream.py",
+    ):
+        src = srcs[PKG / rel]
+        assert not re.search(r'\.write\s*\.mode\(\s*"overwrite"', src), rel
+        assert "commit_frame(" in src, rel
+    assert not re.search(r"\b_staged_swap\(", srcs[PKG / "cli.py"])
+
+
+def test_a_failed_write_keeps_the_previous_output(spark, lerobot_fixture, tmp_path):
+    """A verb whose write fails mid-job leaves the previous output
+    readable, and the next clean run leaves no staging behind."""
+    from pyspark.sql import functions as F
+
+    from imitation_learning_data_pipeline_spark.pipeline import align
+
+    out = tmp_path / "norm"
+    argv = ["align-transform", "--data-root", str(lerobot_fixture),
+            "--out", str(out), "--no-normalize"]
+    assert run_cli(argv).returncode == 0
+    rows = spark.read.parquet(f"{out}/data").count()
+    assert rows > 0
+
+    real = align.align_transform
+
+    def failing(frames, stats_doc):
+        @F.udf("long")
+        def boom(ep):
+            if ep == 12:
+                raise ValueError("injected write failure")
+            return ep
+
+        return real(frames, stats_doc).withColumn(
+            "episode_index", boom("episode_index")
+        )
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(align, "align_transform", failing)
+        res = run_cli(argv)
+    assert res.returncode != 0
+    assert "injected write failure" in res.stderr
+    assert spark.read.parquet(f"{out}/data").count() == rows
+
+    assert run_cli(argv).returncode == 0
+    assert sorted(os.listdir(out)) == ["data"]
 
 
 def test_fsio_imports_nothing_from_the_package():

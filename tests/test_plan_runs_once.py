@@ -85,3 +85,28 @@ def test_discover_reads_each_source_once(spark, lerobot_fixture, tmp_path):
     # A plan that reads the parquets twice, the videos three times and
     # the manifest twice runs 23 jobs here; this one runs 12.
     assert measured(spark, _cli(argv)).jobs <= 12
+
+
+def test_rewrite_dups_summarizes_what_it_wrote(spark, tmp_path):
+    """cli rewrite-dups runs its span-removal plan once: the summary
+    aggregates the committed output (two narrow columns), not a second
+    run of the plan over the corpus."""
+    from imitation_learning_data_pipeline_spark.plans.dedup import remove_dup_spans
+
+    src = str(tmp_path / "docs")
+    shared = " ".join(f"w{i}" for i in range(40))
+    spark.createDataFrame(
+        [(i, f"doc {i} {shared} tail {i % 7} end{i}") for i in range(300)],
+        "doc_id long, text string",
+    ).coalesce(2).write.parquet(src)
+
+    def one_pass():
+        docs = spark.read.parquet(src).select("doc_id", "text")
+        remove_dup_spans(docs, n=8).write.format("noop").mode("overwrite").save()
+
+    once = measured(spark, one_pass)
+    verb = measured(
+        spark, _cli(["rewrite-dups", "--input", src, "--out", str(tmp_path / "out")])
+    )
+    assert once.input_bytes > 0
+    assert verb.input_bytes < 1.5 * once.input_bytes

@@ -716,6 +716,37 @@ class TestPsiBaselineGrowthGate:
         total = read_drift_baseline(spark, base).agg({"n": "sum"}).collect()[0][0]
         assert total == 150  # folded exactly once
 
+    def test_failed_rebuild_keeps_the_previous_baseline(self, spark, tmp_path):
+        """A rebuild whose frame fails mid-write is staged, never swapped
+        in: the previous baseline still reads back whole."""
+        from pyspark.sql import functions as F
+
+        from imitation_learning_data_pipeline_spark.plans import monitor
+
+        base = str(tmp_path / "b4")
+        ref = spark.createDataFrame(
+            [(i, (i % 10) / 10 + 0.05) for i in range(100)],
+            "doc_id long, score double",
+        )
+        monitor.write_drift_baseline(ref.select("score"), base)
+        real = monitor.drift_bucket_counts
+
+        def failing(*args):
+            @F.udf("long")
+            def boom(n):
+                if n > 0:
+                    raise ValueError("injected write failure")
+                return n
+
+            return real(*args).withColumn("n", boom("n"))
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(monitor, "drift_bucket_counts", failing)
+            with pytest.raises(Exception, match="injected write failure"):
+                monitor.write_drift_baseline(ref.select("score"), base)
+        baseline = monitor.read_drift_baseline(spark, base)
+        assert baseline.agg({"n": "sum"}).collect()[0][0] == 100
+
     def test_concurrent_fold_raises(self, spark, tmp_path):
         from imitation_learning_data_pipeline_spark.pipeline.compact import (
             ConcurrentMaintenanceError,

@@ -695,7 +695,8 @@ class TestAutoDeltaSync:
 
     def test_checkpoint_written_and_replayed(self, spark, tmp_path):
         """r13 review #6: every 10th sync writes a classic checkpoint +
-        _last_checkpoint so replay is O(interval), not O(history)."""
+        _last_checkpoint so replay is O(interval), not O(history); a
+        torn hint reads as absent."""
         from imitation_learning_data_pipeline_spark.pipeline.delta_log import (
             read_delta_snapshot,
             sync_delta_log_from_manifest,
@@ -728,7 +729,12 @@ class TestAutoDeltaSync:
         df.coalesce(1).write.mode("append").parquet(p)
         write_manifest(spark, p)
         assert sync_delta_log_from_manifest(spark, p)["version"] == 11
-        assert len(read_delta_snapshot(spark, p)["files"]) == 12
+        intact = read_delta_snapshot(spark, p)
+        assert len(intact["files"]) == 12
+        # the hint is best-effort: a torn one falls back to the listing
+        with open(os.path.join(log, "_last_checkpoint"), "w") as fh:
+            fh.write('{"version": 1')
+        assert read_delta_snapshot(spark, p) == intact
 
     def test_enable_requires_manifest(self, spark, tmp_path):
         from imitation_learning_data_pipeline_spark.pipeline.delta_log import (
