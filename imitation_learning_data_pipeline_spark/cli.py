@@ -5,23 +5,19 @@ Reference: scripts/neura.py:16-211 — a click CLI with `discover`,
 DockerOperator task in the Airflow DAG. Same subcommands and options
 here (argparse: zero extra dependencies), each mapping to the
 ``pipeline`` stage functions; the per-episode Python loops of the
-reference are Spark jobs.
+reference are Spark jobs. The other verbs expose the curation, table
+and web-ingest layers: ``--help`` lists every verb, ``VERB --help`` its
+options.
 
-Usage:
-  python -m imitation_learning_data_pipeline_spark.cli discover --data-root DIR --manifest OUT \
-      [--since ISO] [--only-chunks chunk-000,chunk-001] [--stdout] [--all]
-  python -m imitation_learning_data_pipeline_spark.cli validate --manifest FILE --data-root DIR \
-      [--meta-dir DIR] [--out DIR] [--tolerance N]
-  python -m imitation_learning_data_pipeline_spark.cli stats --data-root DIR [--episodes-stats F]
-      [--validated-ids F] [--features a,b] [--out F]
-  python -m imitation_learning_data_pipeline_spark.cli align-transform --data-root DIR --out DIR
-      [--stats F] [--no-normalize]
-  python -m imitation_learning_data_pipeline_spark.cli materialize --norm-dir DIR --out DIR
-      [--seed N] [--train F] [--val F] [--test F] [--videos-root DIR]
-      [--link-videos MODE]
-  python -m imitation_learning_data_pipeline_spark.cli dedup --input DOCS.parquet --out DIR
-      [--method minhash|simhash|jaccard] [--threshold F | --hamming-k N]
-      [--id-col C] [--text-col C]
+Runner contract: each verb is a subparser whose ``set_defaults`` names
+``fn(spark, args)`` and, where a flag combination can be refused without
+a session, ``check(args)``. :func:`main` parses argv, runs ``check``,
+starts the one session, calls ``fn`` and prints what it returns as the
+last JSON line. ``fn`` returns its summary dict; ``None`` when it printed
+only rows (:func:`_print_rows`); a gate verb returns ``(summary,
+exit_code)``. Library calls are imported inside each verb, so a wrapper
+set on a library module after this module is imported is the one a verb
+runs.
 """
 
 from __future__ import annotations
@@ -31,25 +27,71 @@ import json
 import os
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .pipeline.fsio import _fs, _write_json, commit_frame, recover_frame
 
+# --- shared verb pieces ------------------------------------------------------
 
-def _spark(app: str) -> SparkSession:
-    from .session import get_spark
 
-    return get_spark(f"neura-{app}")
+def _print_rows(rows) -> None:
+    """Print rows (``Row`` objects or dicts) to stdout, one JSON line each."""
+    for r in rows:
+        print(json.dumps(r if isinstance(r, dict) else r.asDict(), default=str))
+
+
+def _require(df, cols, verb: str, what: str) -> None:
+    """Refuse ``df`` (named ``what`` in the message) unless it has every
+    column in ``cols``."""
+    missing = [c for c in cols if c not in df.columns]
+    if missing:
+        raise SystemExit(
+            f"{verb}: {what} has no {missing[0]!r} column (have {df.columns})"
+        )
+
+
+def _docs(spark, path: str, args: argparse.Namespace, verb: str):
+    """The ``(doc_id, text)`` frame of a documents parquet, read through
+    the verb's ``--id-col``/``--text-col``."""
+    df = spark.read.parquet(path)
+    _require(df, (args.id_col, args.text_col), verb, path)
+    return df.select(
+        F.col(args.id_col).alias("doc_id"), F.col(args.text_col).alias("text")
+    )
+
+
+def _written(df, path: str, key: str) -> dict:
+    """Commit ``df`` to ``path``; summarize it by the committed row count."""
+    return {"out": path, key: commit_frame(df, path).count()}
+
+
+def _csv(value: str | None) -> list[str] | None:
+    """``"a,b"`` → ``["a", "b"]``; an empty or absent value → ``None``."""
+    return value.split(",") if value else None
+
+
+def _atomic_columns(df) -> list[str]:
+    """The default profile columns: arrays, maps, structs and binary have
+    no meaningful min/max and belong to explicit --columns requests."""
+    complex_types = (T.ArrayType, T.MapType, T.StructType, T.BinaryType)
+    return [f.name for f in df.schema.fields if not isinstance(f.dataType, complex_types)]
+
+
+def _quantiles(spec: str | None) -> dict | None:
+    """``COL:LO:HI[,...]`` (e.g. ``value:0:500``) → ``{col: (lo, hi)}``."""
+    if not spec:
+        return None
+    parts = (s.rsplit(":", 2) for s in spec.split(","))
+    return {col: (float(lo), float(hi)) for col, lo, hi in parts}
 
 
 # --- discover ----------------------------------------------------------------
 
 
-def cmd_discover(args: argparse.Namespace) -> int:
+def cmd_discover(spark, args: argparse.Namespace):
     from .pipeline.discover import discover, discover_delta
 
-    spark = _spark("discover")
     # Crash-safe manifest commit (discover_refactored.py:23-27 writes
     # tmp + rename). A run that crashed mid-swap is finished here, or
     # its staging discarded, before the manifest is read as this run's
@@ -79,23 +121,21 @@ def cmd_discover(args: argparse.Namespace) -> int:
     if args.stdout_jsonl:
         for line in delta.toJSON().collect():  # K9 (scripts/neura.py:66-74)
             print(line)
-    else:
-        counts = {
-            r.status: r.n
-            for r in delta.groupBy("status").agg(F.count("*").alias("n")).collect()
-        }
-        print(json.dumps({"manifest": args.manifest, "delta_counts": counts}))
-    return 0
+        return None
+    counts = {
+        r.status: r.n
+        for r in delta.groupBy("status").agg(F.count("*").alias("n")).collect()
+    }
+    return {"manifest": args.manifest, "delta_counts": counts}
 
 
 # --- validate ----------------------------------------------------------------
 
 
-def cmd_validate(args: argparse.Namespace) -> int:
+def cmd_validate(spark, args: argparse.Namespace):
     from .pipeline.outputs import write_validation_outputs
     from .pipeline.validate import validate_episodes
 
-    spark = _spark("validate")
     frames = spark.read.parquet(f"{args.data_root}/data/*")
     meta = None
     meta_path = os.path.join(args.meta_dir, "episodes.jsonl")
@@ -118,18 +158,16 @@ def cmd_validate(args: argparse.Namespace) -> int:
         fps_expected=args.fps_expected,
     )
     summary = write_validation_outputs(report, args.out_dir)
-    print(json.dumps(summary))
-    return 0 if summary["fail"] == 0 else 1
+    return summary, 0 if summary["fail"] == 0 else 1
 
 
 # --- stats -------------------------------------------------------------------
 
 
-def cmd_stats(args: argparse.Namespace) -> int:
+def cmd_stats(spark, args: argparse.Namespace):
     from .pipeline.stats_ingest import read_episode_stats_jsonl
     from .pipeline.stats_stage import combine_global_stats, episode_feature_stats
 
-    spark = _spark("stats")
     features = [f.strip() for f in args.features.split(",") if f.strip()]
 
     if args.episodes_stats and os.path.exists(args.episodes_stats):
@@ -157,17 +195,15 @@ def cmd_stats(args: argparse.Namespace) -> int:
         }
     fs, _ = _fs(spark, args.out_path)
     _write_json(spark, fs, args.out_path, doc)  # K7 JSON document sink
-    print(json.dumps({"out": args.out_path, "features": len(rows)}))
-    return 0
+    return {"out": args.out_path, "features": len(rows)}
 
 
 # --- align-transform ---------------------------------------------------------
 
 
-def cmd_align_transform(args: argparse.Namespace) -> int:
+def cmd_align_transform(spark, args: argparse.Namespace):
     from .pipeline.align import align_transform
 
-    spark = _spark("align")
     frames = spark.read.parquet(f"{args.data_root}/data/*")
     stats_doc = None
     if not args.no_normalize and os.path.exists(args.stats_path):
@@ -178,21 +214,19 @@ def cmd_align_transform(args: argparse.Namespace) -> int:
         }
     aligned = align_transform(frames, stats_doc)
     n = commit_frame(aligned, f"{args.out_dir}/data", compression="zstd").count()
-    print(json.dumps({"out": args.out_dir, "rows": n}))
-    return 0
+    return {"out": args.out_dir, "rows": n}
 
 
 # --- materialize -------------------------------------------------------------
 
 
-def cmd_materialize(args: argparse.Namespace) -> int:
+def cmd_materialize(spark, args: argparse.Namespace):
     # No full-index collect anywhere: split counts are an aggregation
     # (3 rows to the driver) and video placement runs per-partition on
     # executors (pipeline.materialize.place_videos) — at 100× episode
     # counts the driver traffic is unchanged.
     from .pipeline.materialize import materialize, place_videos
 
-    spark = _spark("materialize")
     frames = spark.read.parquet(f"{args.norm_dir}/data")
     index = materialize(
         frames, args.out_dir, fracs=(args.train, args.val, args.test), seed=str(args.seed)
@@ -209,33 +243,13 @@ def cmd_materialize(args: argparse.Namespace) -> int:
         placed_n = place_videos(
             index, args.videos_root, f"{args.out_dir}/videos", mode
         )
-    print(
-        json.dumps(
-            {"out": args.out_dir, "split_counts": counts, "videos_placed": placed_n}
-        )
-    )
-    return 0
+    return {"out": args.out_dir, "split_counts": counts, "videos_placed": placed_n}
 
 
 # --- dedup (extension: the LLM-corpus dedup family from the CLI) -------------
 
 
-def cmd_dedup(args: argparse.Namespace) -> int:
-    """Corpus dedup end-to-end from the shell: pairs (chosen method) →
-    connected components → canonical keep-list + reduction stats.
-
-    Extension beyond the reference CLI (its pipeline has no text dedup;
-    README.md:164-187 future-work scope) exposing plans/dedup.py's
-    caller-frame APIs. Writes ``pairs/``, ``clusters/`` and ``keep/``
-    parquet under --out and prints one JSON stats line.
-    """
-    from .plans.dedup import (
-        connected_components,
-        minhash_pairs,
-        ngram_jaccard_pairs,
-        simhash_pairs,
-    )
-
+def check_dedup(args: argparse.Namespace) -> None:
     # each method takes exactly one tuning knob; a silently-ignored flag
     # is worse than an error (ADVICE r5: --threshold was dropped on the
     # floor for simhash)
@@ -249,7 +263,6 @@ def cmd_dedup(args: argparse.Namespace) -> int:
             f"dedup: --hamming-k does not apply to --method {args.method}; "
             "use --threshold F"
         )
-    threshold = 0.5 if args.threshold is None else args.threshold
     if args.store is not None and args.method != "minhash":
         raise SystemExit(
             "dedup: --store is minhash-only (the persisted signature "
@@ -258,10 +271,26 @@ def cmd_dedup(args: argparse.Namespace) -> int:
     if args.fold_into_store and args.store is None:
         raise SystemExit("dedup: --fold-into-store requires --store PATH")
 
-    spark = _spark("dedup")
-    docs = spark.read.parquet(args.input).select(
-        F.col(args.id_col).cast("long").alias("doc_id"),
-        F.col(args.text_col).alias("text"),
+
+def cmd_dedup(spark, args: argparse.Namespace):
+    """Corpus dedup end-to-end from the shell: pairs (chosen method) →
+    connected components → canonical keep-list + reduction stats.
+
+    Extension beyond the reference CLI (its pipeline has no text dedup;
+    README.md:164-187 future-work scope) exposing plans/dedup.py's
+    caller-frame APIs. Writes ``pairs/``, ``clusters/`` and ``keep/``
+    parquet under --out and returns the stats summary.
+    """
+    from .plans.dedup import (
+        connected_components,
+        minhash_pairs,
+        ngram_jaccard_pairs,
+        simhash_pairs,
+    )
+
+    threshold = 0.5 if args.threshold is None else args.threshold
+    docs = _docs(spark, args.input, args, "dedup").withColumn(
+        "doc_id", F.col("doc_id").cast("long")
     )
     sigs = None
     if args.store is not None:
@@ -392,32 +421,26 @@ def cmd_dedup(args: argparse.Namespace) -> int:
     # the dataset even in incremental mode (store members are cluster
     # rows but never keep/drop candidates)
     n_kept = keep.count()
-    print(
-        json.dumps(
-            {
-                "out": args.out_dir,
-                "method": args.method,
-                "n_docs": n_docs,
-                "n_pairs": n_pairs,
-                "n_dup_members": n_members,
-                "n_clusters": n_clusters,
-                "n_dropped": n_docs - n_kept,
-                "n_kept": n_kept,
-            }
-        )
-    )
-    return 0
+    return {
+        "out": args.out_dir,
+        "method": args.method,
+        "n_docs": n_docs,
+        "n_pairs": n_pairs,
+        "n_dup_members": n_members,
+        "n_clusters": n_clusters,
+        "n_dropped": n_docs - n_kept,
+        "n_kept": n_kept,
+    }
 
 
-def cmd_compact(args: argparse.Namespace) -> int:
+def cmd_compact(spark, args: argparse.Namespace):
     """Small-file compaction from the shell (pipeline/compact.py):
     whole-dataset rewrite by default, or maintenance mode
     (--sprawling-only) that rewrites just the partitions whose file
     count exceeds the sprawl threshold."""
     from .pipeline.compact import compact, compact_sprawling
 
-    spark = _spark("compact")
-    part_cols = args.partition_col.split(",") if args.partition_col else None
+    part_cols = _csv(args.partition_col)
     if args.sprawling_only and (args.cluster_by or args.zorder_by):
         raise SystemExit(
             "compact: --cluster-by/--zorder-by apply to the full rewrite, "
@@ -437,25 +460,19 @@ def cmd_compact(args: argparse.Namespace) -> int:
             args.path,
             target_bytes=args.target_mb * 1024 * 1024,
             partition_col=part_cols,
-            cluster_by=args.cluster_by.split(",") if args.cluster_by else None,
-            zorder_by=args.zorder_by.split(",") if args.zorder_by else None,
+            cluster_by=_csv(args.cluster_by),
+            zorder_by=_csv(args.zorder_by),
         )
-    print(json.dumps({"path": args.path, **stats}))
-    return 0
+    return {"path": args.path, **stats}
 
 
-def cmd_split(args: argparse.Namespace) -> int:
+def cmd_split(spark, args: argparse.Namespace):
     """Leakage-safe train/val/test assignment over a document parquet
     (plans/sampling.py::leakage_safe_splits): near-dup clusters pin to
     one split."""
-    from pyspark.sql import functions as F
-
     from .plans.sampling import leakage_safe_splits
 
-    spark = _spark("split")
-    docs = spark.read.parquet(args.path).select(
-        F.col(args.id_col).alias("doc_id"), F.col(args.text_col).alias("text")
-    )
+    docs = _docs(spark, args.path, args, "split")
     fr = [float(x) for x in args.fractions.split(",")]
     if len(fr) != 3:
         raise SystemExit("--fractions must be train,val,test")
@@ -468,17 +485,15 @@ def cmd_split(args: argparse.Namespace) -> int:
         r["split"]: r["n"]
         for r in written.groupBy("split").agg(F.count("*").alias("n")).collect()
     }
-    print(json.dumps({"out": args.out, "counts": counts}))
-    return 0
+    return {"out": args.out, "counts": counts}
 
 
-def cmd_trajectory(args: argparse.Namespace) -> int:
+def cmd_trajectory(spark, args: argparse.Namespace):
     """Slice episode event streams into fixed-length training windows
     (plans/trajectory.py) and write them as parquet, optionally with the
     per-window feature summary."""
     from .plans.trajectory import slice_windows, window_features
 
-    spark = _spark("trajectory")
     events = spark.read.parquet(args.events)
     wins = slice_windows(
         events,
@@ -495,15 +510,12 @@ def cmd_trajectory(args: argparse.Namespace) -> int:
         .count()
     }
     if args.features:
-        from pyspark.sql import types as T
-
         # span_ms needs a real timestamp column; the leading --order-by
         # column is only a heuristic default (a non-timestamp leader
         # would make unix_millis fail or emit garbage span_ms) — validate
         # the type up front and point at --ts-col
         ts_col = args.ts_col or args.order_by.split(",")[0]
-        if ts_col not in events.columns:
-            raise SystemExit(f"trajectory: --ts-col {ts_col!r} not in events")
+        _require(events, [ts_col], "trajectory --ts-col", args.events)
         ts_type = events.schema[ts_col].dataType
         if not isinstance(ts_type, (T.TimestampType, T.TimestampNTZType)):
             raise SystemExit(
@@ -523,43 +535,25 @@ def cmd_trajectory(args: argparse.Namespace) -> int:
         )
         commit_frame(feats, f"{args.out}/features")
         summary["features"] = True
-    print(json.dumps(summary))
-    return 0
+    return summary
 
 
-def cmd_profile(args: argparse.Namespace) -> int:
+def cmd_profile(spark, args: argparse.Namespace):
     """One-pass column profile of a parquet dataset (plans/profile.py),
     one JSON line per column to stdout."""
     from .plans.profile import profile_frame
 
-    spark = _spark("profile")
     df = spark.read.parquet(args.path)
-    if args.columns:
-        cols = args.columns.split(",")
-    else:
-        # default to atomic columns: arrays/maps/structs have no
-        # meaningful min/max and belong to explicit --columns requests
-        from pyspark.sql import types as T
-
-        cols = [
-            f.name
-            for f in df.schema.fields
-            if not isinstance(
-                f.dataType, (T.ArrayType, T.MapType, T.StructType, T.BinaryType)
-            )
-        ]
-        if not cols:
-            raise SystemExit(
-                "profile: dataset has no atomic columns; name complex ones "
-                "explicitly with --columns"
-            )
-    rows = profile_frame(df, cols, exact_distinct=not args.approx).collect()
-    for r in rows:
-        print(json.dumps(r.asDict()))
-    return 0
+    cols = args.columns.split(",") if args.columns else _atomic_columns(df)
+    if not cols:
+        raise SystemExit(
+            "profile: dataset has no atomic columns; name complex ones "
+            "explicitly with --columns"
+        )
+    _print_rows(profile_frame(df, cols, exact_distinct=not args.approx).collect())
 
 
-def cmd_decontam(args: argparse.Namespace) -> int:
+def cmd_decontam(spark, args: argparse.Namespace):
     """Benchmark decontamination from the shell: build a persisted
     probe store from an eval suite, then report per-doc shingle overlap
     for any corpus batch against it (plans/dedup.py)."""
@@ -569,56 +563,38 @@ def cmd_decontam(args: argparse.Namespace) -> int:
         write_probe_store,
     )
 
-    spark = _spark("decontam")
     if args.fuzzy:
         # one-shot fuzzy mode: MinHash-LSH Jaccard vs the probe suite
         # (no store — the probe side broadcasts whole).
         if not args.probe or not args.input:
             raise SystemExit("decontam: --fuzzy needs --probe and --input")
-        probe = spark.read.parquet(args.probe).selectExpr(
-            f"{args.id_col} AS doc_id", f"{args.text_col} AS text"
-        )
-        docs = spark.read.parquet(args.input).selectExpr(
-            f"{args.id_col} AS doc_id", f"{args.text_col} AS text"
-        )
+        probe = _docs(spark, args.probe, args, "decontam")
+        docs = _docs(spark, args.input, args, "decontam")
         report = decontam_fuzzy(docs, probe, threshold=args.threshold)
         if args.out:
-            n = commit_frame(report, args.out).count()
-            print(json.dumps({"out": args.out, "n_pairs": n}))
-        else:
-            for r in report.collect():
-                print(json.dumps(r.asDict()))
-        return 0
+            return _written(report, args.out, "n_pairs")
+        _print_rows(report.collect())
+        return None
     if args.probe:
         if not args.store:
             raise SystemExit("decontam: --probe needs --store")
-        probe = spark.read.parquet(args.probe).selectExpr(
-            f"{args.id_col} AS doc_id", f"{args.text_col} AS text"
-        )
+        probe = _docs(spark, args.probe, args, "decontam")
         stats = write_probe_store(probe, args.store, n=args.n, fpp=args.fpp)
-        print(json.dumps({"store": args.store, **stats}))
-        return 0
+        return {"store": args.store, **stats}
     if not args.input or not args.store:
         raise SystemExit("decontam: need --probe --store (build) or --input --store (check)")
-    docs = spark.read.parquet(args.input).selectExpr(
-        f"{args.id_col} AS doc_id", f"{args.text_col} AS text"
-    )
+    docs = _docs(spark, args.input, args, "decontam")
     report = decontam_overlap_against_store(docs, args.store, n=args.n)
     if args.out:
-        n = commit_frame(report, args.out).count()
-        print(json.dumps({"out": args.out, "n_contaminated": n}))
-    else:
-        for r in report.collect():
-            print(json.dumps(r.asDict()))
-    return 0
+        return _written(report, args.out, "n_contaminated")
+    _print_rows(report.collect())
 
 
-def cmd_update(args: argparse.Namespace) -> int:
+def cmd_update(spark, args: argparse.Namespace):
     """Row-level UPDATE via file-level copy-on-write (pipeline/merge.py):
     apply SET expressions to matching rows, rewriting only their files."""
     from .pipeline.merge import update_where
 
-    spark = _spark("update")
     assignments = {}
     for a in args.set:
         if "=" not in a:
@@ -630,21 +606,19 @@ def cmd_update(args: argparse.Namespace) -> int:
         args.path,
         args.where,
         assignments,
-        partition_by=args.partition_by.split(",") if args.partition_by else None,
+        partition_by=args.partition_by,
         stale_lock_s=args.stale_lock_s,
     )
-    print(json.dumps({"path": args.path, **stats}))
-    return 0
+    return {"path": args.path, **stats}
 
 
-def cmd_card(args: argparse.Namespace) -> int:
+def cmd_card(spark, args: argparse.Namespace):
     """Data card (pipeline/card.py): one JSON datasheet per table —
     counts, schema, column profile, source mixture, snapshots, history."""
     from .pipeline.card import data_card, write_data_card
 
-    spark = _spark("card")
     kwargs = dict(
-        columns=args.columns.split(",") if args.columns else None,
+        columns=_csv(args.columns),
         source_col=args.source_col,
         snapshot_tag=args.snapshot_tag,
         privacy_quasi=(
@@ -655,30 +629,23 @@ def cmd_card(args: argparse.Namespace) -> int:
         privacy_sensitive=args.privacy_sensitive,
     )
     if args.out:
-        card = write_data_card(spark, args.path, args.out, **kwargs)
-    else:
-        card = data_card(spark, args.path, **kwargs)
-    print(json.dumps(card, sort_keys=True, default=str))
-    return 0
+        return write_data_card(spark, args.path, args.out, **kwargs)
+    return data_card(spark, args.path, **kwargs)
 
 
-def cmd_history(args: argparse.Namespace) -> int:
+def cmd_history(spark, args: argparse.Namespace):
     """Print a table's maintenance audit log (pipeline/history.py) as
     JSON lines, oldest-first."""
     from .pipeline.history import history
 
-    spark = _spark("history")
-    for ev in history(spark, args.path):
-        print(json.dumps(ev))
-    return 0
+    _print_rows(history(spark, args.path))
 
 
-def cmd_delete(args: argparse.Namespace) -> int:
+def cmd_delete(spark, args: argparse.Namespace):
     """Row-level DELETE: copy-on-write by default (rewrite only the
     files holding matching rows, pipeline/merge.py), or merge-on-read
     with ``--mor`` (write only the matched positions as a deletion
     vector, pipeline/deletes.py — O(rows matched), purge later)."""
-    spark = _spark("delete")
     if args.keys is not None:
         if not args.key_col:
             raise SystemExit("delete: --keys needs --key-col")
@@ -708,30 +675,27 @@ def cmd_delete(args: argparse.Namespace) -> int:
             spark,
             args.path,
             args.where,
-            partition_by=args.partition_by.split(",") if args.partition_by else None,
+            partition_by=args.partition_by,
             stale_lock_s=args.stale_lock_s,
         )
-    print(json.dumps({"path": args.path, **stats}))
-    return 0
+    return {"path": args.path, **stats}
 
 
-def cmd_purge_deletes(args: argparse.Namespace) -> int:
+def cmd_purge_deletes(spark, args: argparse.Namespace):
     """Fold live deletion vectors back into the data files (the
     deferred copy-on-write bill), reopening file-rewriting maintenance."""
     from .pipeline.deletes import purge_deletes
 
-    spark = _spark("purge-deletes")
     stats = purge_deletes(
         spark,
         args.path,
-        partition_by=args.partition_by.split(",") if args.partition_by else None,
+        partition_by=args.partition_by,
         stale_lock_s=args.stale_lock_s,
     )
-    print(json.dumps({"path": args.path, **stats}))
-    return 0
+    return {"path": args.path, **stats}
 
 
-def cmd_snapshot(args: argparse.Namespace) -> int:
+def cmd_snapshot(spark, args: argparse.Namespace):
     """Snapshot isolation for plain-parquet tables (pipeline/snapshot.py):
     pin, list, time-travel-read (export), and vacuum."""
     from .pipeline.snapshot import (
@@ -741,25 +705,19 @@ def cmd_snapshot(args: argparse.Namespace) -> int:
         read_snapshot,
     )
 
-    spark = _spark("snapshot")
     if args.create:
-        print(json.dumps(create_snapshot(spark, args.path, args.create)))
-        return 0
+        return create_snapshot(spark, args.path, args.create)
     if args.drop:
-        print(json.dumps({"tag": args.drop, **drop_snapshot(spark, args.path, args.drop)}))
-        return 0
+        return {"tag": args.drop, **drop_snapshot(spark, args.path, args.drop)}
     if args.read:
         if not args.out:
             raise SystemExit("snapshot: --read needs --out")
         commit_frame(read_snapshot(spark, args.path, args.read), args.out)
-        print(json.dumps({"tag": args.read, "exported": args.out}))
-        return 0
-    for s in list_snapshots(spark, args.path):
-        print(json.dumps(s))
-    return 0
+        return {"tag": args.read, "exported": args.out}
+    _print_rows(list_snapshots(spark, args.path))
 
 
-def cmd_rollup(args: argparse.Namespace) -> int:
+def cmd_rollup(spark, args: argparse.Namespace):
     """Continuous aggregates (plans/rollup.py): one-shot rollup to
     stdout, or maintain an incremental store — bootstrap, O(batch)
     fold, read, compact."""
@@ -773,64 +731,48 @@ def cmd_rollup(args: argparse.Namespace) -> int:
         write_rollup_store,
     )
 
-    spark = _spark("rollup")
     if args.store and args.read:
-        rows = read_rollup(spark, args.store).collect()
-        for r in rows:
-            print(json.dumps(r.asDict(), default=str))
-        return 0
+        _print_rows(read_rollup(spark, args.store).collect())
+        return None
     if args.store and args.compact:
         stats = compact_rollup_store(
             spark,
             args.store,
             to_layout="batch" if args.keep_batch_layout else "plain",
         )
-        print(json.dumps({"store": args.store, **stats}))
-        return 0
+        return {"store": args.store, **stats}
     if not args.input or not args.group or not args.metrics:
         raise SystemExit("rollup: --input/--group/--metrics required")
-    quantile_cols = None
-    if args.quantiles:
-        # COL:LO:HI per entry, e.g. --quantiles value:0:500
-        quantile_cols = {}
-        for spec in args.quantiles.split(","):
-            col, lo, hi = spec.rsplit(":", 2)
-            quantile_cols[col] = (float(lo), float(hi))
-    df = spark.read.parquet(args.input)
     parts = rollup_partials(
-        df,
+        spark.read.parquet(args.input),
         args.group.split(","),
         args.metrics.split(","),
         time_col=args.time_col,
         grain=args.grain,
-        distinct_cols=args.distinct.split(",") if args.distinct else None,
-        quantile_cols=quantile_cols,
+        distinct_cols=_csv(args.distinct),
+        quantile_cols=_quantiles(args.quantiles),
         n_bins=args.n_bins,
     )
     if not args.store:
-        for r in finalize_rollup(merge_rollup(parts)).collect():
-            print(json.dumps(r.asDict(), default=str))
-        return 0
+        _print_rows(finalize_rollup(merge_rollup(parts)).collect())
+        return None
     if args.fold:
         stats = fold_rollup_into_store(
             spark, args.store, parts, batch_id=args.batch_id
         )
-        print(json.dumps({"store": args.store, **stats}))
-    else:
-        write_rollup_store(
-            parts, args.store, n_buckets=args.n_buckets,
-            ingest_batch=args.ingest_batch,
-        )
-        print(json.dumps({"store": args.store, "bootstrapped": True}))
-    return 0
+        return {"store": args.store, **stats}
+    write_rollup_store(
+        parts, args.store, n_buckets=args.n_buckets,
+        ingest_batch=args.ingest_batch,
+    )
+    return {"store": args.store, "bootstrapped": True}
 
 
-def cmd_graph(args: argparse.Namespace) -> int:
+def cmd_graph(spark, args: argparse.Namespace):
     """Iterative graph algorithms (plans/graph.py): PageRank over any
     parquet edge list."""
     from .plans.graph import pagerank
 
-    spark = _spark("graph")
     edges = spark.read.parquet(args.edges)
     seeds = None
     if args.seeds:
@@ -846,47 +788,35 @@ def cmd_graph(args: argparse.Namespace) -> int:
         seeds=seeds,
     )
     if args.out:
-        n = commit_frame(pr, args.out).count()
-        print(json.dumps({"out": args.out, "nodes": n}))
-        return 0
-    for r in pr.orderBy(F.col("rank").desc()).limit(args.top).collect():
-        print(json.dumps(r.asDict()))
-    return 0
+        return _written(pr, args.out, "nodes")
+    _print_rows(pr.orderBy(F.col("rank").desc()).limit(args.top).collect())
 
 
-def cmd_hitters(args: argparse.Namespace) -> int:
+def cmd_hitters(spark, args: argparse.Namespace):
     """Exact heavy-hitter n-grams (plans/text.py) over any parquet
     table with a text column — the boilerplate census."""
     from .plans.text import heavy_hitter_ngrams
 
-    spark = _spark("hitters")
     df = spark.read.parquet(args.input)
     out = heavy_hitter_ngrams(
         df, text_col=args.text_col, n=args.n, min_frac=args.min_frac
     )
     if args.out:
-        n = commit_frame(out, args.out).count()
-        print(json.dumps({"out": args.out, "hitters": n}))
-        return 0
-    for r in (
+        return _written(out, args.out, "hitters")
+    _print_rows(
         out.orderBy(F.col("n_occurrences").desc(), "gram")
         .limit(args.top)
         .collect()
-    ):
-        print(json.dumps(r.asDict()))
-    return 0
+    )
 
 
-def cmd_novelty(args: argparse.Namespace) -> int:
+def cmd_novelty(spark, args: argparse.Namespace):
     """Per-doc n-gram novelty (plans/dedup.py::ngram_novelty): the
     duplicated-occurrence census behind 'how much of this doc is copied
     from elsewhere in the corpus'."""
     from .plans.dedup import ngram_novelty
 
-    spark = _spark("novelty")
-    docs = spark.read.parquet(args.input).select(
-        F.col(args.id_col).alias("doc_id"), F.col(args.text_col).alias("text")
-    )
+    docs = _docs(spark, args.input, args, "novelty")
     out = ngram_novelty(docs, n=args.ngram).persist()
     try:
         # census over the FULL frame — under --drop-dupey the filtered
@@ -901,17 +831,14 @@ def cmd_novelty(args: argparse.Namespace) -> int:
         commit_frame(kept, args.out)
     finally:
         out.unpersist()
-    print(json.dumps({"out": args.out, **stats.asDict()}))
-    return 0
+    return {"out": args.out, **stats.asDict()}
 
 
-def cmd_unimax(args: argparse.Namespace) -> int:
+def cmd_unimax(spark, args: argparse.Namespace):
     """UniMax budget allocation (plans/sampling.py::unimax_allocation):
     water-fill a token budget across languages under an epoch cap."""
-    from .plans.sampling import unimax_allocation
-
-    spark = _spark("unimax")
     from .functions.text import clean_words
+    from .plans.sampling import unimax_allocation
 
     docs = spark.read.parquet(args.input).select(
         F.col(args.group_col).alias("grp"), F.col(args.text_col).alias("text")
@@ -934,12 +861,10 @@ def cmd_unimax(args: argparse.Namespace) -> int:
     rows = plan.orderBy(args.group_col).collect()
     if args.out:
         commit_frame(spark.createDataFrame(rows, plan.schema).coalesce(1), args.out)
-    for r in rows:
-        print(json.dumps(r.asDict()))
-    return 0
+    _print_rows(rows)
 
 
-def cmd_psi(args: argparse.Namespace) -> int:
+def cmd_psi(spark, args: argparse.Namespace):
     """PSI score-drift monitor (plans/monitor.py): compare a current
     corpus slice against a reference on a score column (or the
     deterministic text-proxy score) and print per-bucket contributions
@@ -951,8 +876,6 @@ def cmd_psi(args: argparse.Namespace) -> int:
         score_drift_psi,
         write_drift_baseline,
     )
-
-    spark = _spark("psi")
 
     def load(path: str):
         df = spark.read.parquet(path)
@@ -993,14 +916,12 @@ def cmd_psi(args: argparse.Namespace) -> int:
             out = fold_drift_baseline(
                 load(args.input), args.baseline_out, batch_id=args.batch_id
             )
-            print(json.dumps({"baseline": args.baseline_out, **out}))
-            return 0
+            return {"baseline": args.baseline_out, **out}
         # build mode: persist the reference population once
         write_drift_baseline(
             load(args.input), args.baseline_out, n_buckets=args.buckets
         )
-        print(json.dumps({"baseline": args.baseline_out, "buckets": args.buckets}))
-        return 0
+        return {"baseline": args.baseline_out, "buckets": args.buckets}
     if args.grow:
         raise SystemExit("psi: --grow needs --baseline-out (the store to fold into)")
     if args.baseline:
@@ -1014,20 +935,17 @@ def cmd_psi(args: argparse.Namespace) -> int:
             load(args.input), load(args.against), n_buckets=args.buckets
         ).collect()
     psi = sum(r.psi_int for r in out) / 1e6
-    for r in out:
-        print(json.dumps(r.asDict()))
+    _print_rows(out)
     verdict = "stable" if psi < 0.1 else ("moderate" if psi <= 0.25 else "ALERT")
-    print(json.dumps({"psi": round(psi, 6), "verdict": verdict}))
-    return 0
+    return {"psi": round(psi, 6), "verdict": verdict}
 
 
-def cmd_privacy(args: argparse.Namespace) -> int:
+def cmd_privacy(spark, args: argparse.Namespace):
     """k-anonymity / l-diversity audit (plans/privacy.py): report
     per-equivalence-class sizes and violation counts; --suppress writes
     a release with quasi-identifiers NULLed for sub-k classes."""
     from .plans.privacy import k_anonymity_audit, suppress_small_classes
 
-    spark = _spark("privacy")
     df = spark.read.parquet(args.input)
     quasi = [c.strip() for c in args.quasi.split(",") if c.strip()]
     audit = k_anonymity_audit(df, quasi, args.sensitive, k=args.k, l_div=args.l)
@@ -1043,12 +961,11 @@ def cmd_privacy(args: argparse.Namespace) -> int:
         if not args.out:
             raise SystemExit("privacy: --suppress needs --out")
         commit_frame(suppress_small_classes(df, quasi, k=args.k), args.out)
-    print(json.dumps({"k": args.k, "l": args.l, **summary.asDict(),
-                      **({"out": args.out} if args.suppress else {})}))
-    return 0
+    return {"k": args.k, "l": args.l, **summary.asDict(),
+            **({"out": args.out} if args.suppress else {})}
 
 
-def cmd_hll(args: argparse.Namespace) -> int:
+def cmd_hll(spark, args: argparse.Namespace):
     """Mergeable HLL distinct tracker (plans/hll.py): fold a batch's
     registers into a persisted store and print the running estimate —
     O(256) per batch, never a corpus rescan."""
@@ -1059,7 +976,6 @@ def cmd_hll(args: argparse.Namespace) -> int:
         read_hll_store,
     )
 
-    spark = _spark("hll")
     if args.input:
         df = spark.read.parquet(args.input).select(
             F.col(args.col).alias("item")
@@ -1070,17 +986,15 @@ def cmd_hll(args: argparse.Namespace) -> int:
             df = df.select(F.explode(clean_words("item")).alias("item"))
         fold_into_hll_store(spark, hll_registers(df, "item"), args.store)
     est = hll_estimate(read_hll_store(spark, args.store))
-    print(json.dumps({"store": args.store, "distinct_estimate": int(round(est))}))
-    return 0
+    return {"store": args.store, "distinct_estimate": int(round(est))}
 
 
-def cmd_doremi(args: argparse.Namespace) -> int:
+def cmd_doremi(spark, args: argparse.Namespace):
     """DoReMi-style domain mixture weights (plans/doremi.py): one-shot
     excess-loss reweighting; writes/prints (domain, weight) rows that
     feed `cli curate` / apply_mixture_plan."""
     from .plans.doremi import doremi_domain_weights
 
-    spark = _spark("doremi")
     docs = spark.read.parquet(args.input).select(
         F.col(args.domain_col).alias(args.domain_col),
         F.col(args.text_col).alias("text"),
@@ -1089,15 +1003,11 @@ def cmd_doremi(args: argparse.Namespace) -> int:
         docs, domain_col=args.domain_col, eta=args.eta, smoothing=args.smoothing
     )
     if args.out:
-        n = commit_frame(out, args.out).count()
-        print(json.dumps({"out": args.out, "domains": n}))
-    else:
-        for r in out.orderBy("domain").collect():
-            print(json.dumps(r.asDict()))
-    return 0
+        return _written(out, args.out, "domains")
+    _print_rows(out.orderBy("domain").collect())
 
 
-def cmd_ivf(args: argparse.Namespace) -> int:
+def cmd_ivf(spark, args: argparse.Namespace):
     """Persisted IVF ANN index (plans/mllib_ops.py): --build fits the
     quantizer and writes the cell-partitioned layout, --append assigns
     a batch to the fixed centroids at O(batch), --query searches the
@@ -1110,48 +1020,36 @@ def cmd_ivf(args: argparse.Namespace) -> int:
         write_ivf_index,
     )
 
-    spark = _spark("ivf")
-    if args.build:
-        emb = spark.read.parquet(args.build).selectExpr(
+    if args.build or args.append:
+        emb = spark.read.parquet(args.build or args.append).selectExpr(
             f"{args.id_col} AS vec_id", f"{args.vec_col} AS embedding"
         )
-        print(json.dumps({"path": args.path, **write_ivf_index(emb, args.path, k=args.k)}))
-        return 0
-    if args.append:
-        emb = spark.read.parquet(args.append).selectExpr(
-            f"{args.id_col} AS vec_id", f"{args.vec_col} AS embedding"
-        )
-        print(json.dumps({"path": args.path, **append_ivf_index(emb, args.path)}))
-        return 0
+        if args.build:
+            return {"path": args.path, **write_ivf_index(emb, args.path, k=args.k)}
+        return {"path": args.path, **append_ivf_index(emb, args.path)}
     if not args.query:
         raise SystemExit("ivf: need --build, --append, or --query")
     queries = spark.read.parquet(args.query).selectExpr(
         f"{args.id_col} AS qid", f"CAST({args.vec_col} AS array<double>) AS v"
     )
     if args.fraction:
-        print(json.dumps(ivf_scan_fraction(spark, args.path, queries, args.nprobe)))
-        return 0
+        return ivf_scan_fraction(spark, args.path, queries, args.nprobe)
     out = search_ivf_index(
         spark, args.path, queries, nprobe=args.nprobe, k_neighbors=args.topk,
         exclude_self=args.exclude_self,
     )
     if args.out:
-        n = commit_frame(out, args.out).count()
-        print(json.dumps({"out": args.out, "rows": n}))
-    else:
-        for r in out.orderBy("qid", "rnk").collect():
-            print(json.dumps(r.asDict()))
-    return 0
+        return _written(out, args.out, "rows")
+    _print_rows(out.orderBy("qid", "rnk").collect())
 
 
-def cmd_release_gate(args: argparse.Namespace) -> int:
+def cmd_release_gate(spark, args: argparse.Namespace):
     """Release gate (pipeline/release.py): run the configured audits —
     split leakage, benchmark decontamination, k-anonymity, PSI drift —
     over a release candidate and exit nonzero on ANY failure (the
     CI-able export guard)."""
     from .pipeline.release import release_gate
 
-    spark = _spark("release-gate")
     docs = spark.read.parquet(args.input)
     report = release_gate(
         spark,
@@ -1172,17 +1070,15 @@ def cmd_release_gate(args: argparse.Namespace) -> int:
         score_col=args.score_col,
         psi_threshold=args.psi_threshold,
     )
-    print(json.dumps(report))
-    return 0 if report["pass"] else 1
+    return report, 0 if report["pass"] else 1
 
 
-def cmd_bpe(args: argparse.Namespace) -> int:
+def cmd_bpe(spark, args: argparse.Namespace):
     """BPE tokenizer training (plans/tokenize.py): learn merges from a
     corpus; optionally write per-document token counts under the
     trained tokenizer."""
     from .plans.tokenize import bpe_token_counts, bpe_train
 
-    spark = _spark("bpe")
     df = spark.read.parquet(args.input)
     merges, _words = bpe_train(
         df,
@@ -1202,16 +1098,14 @@ def cmd_bpe(args: argparse.Namespace) -> int:
         )
         commit_frame(counts, args.counts_out)
         stats["counts_out"] = args.counts_out
-    print(json.dumps(stats))
-    return 0
+    return stats
 
 
-def cmd_lm_score(args: argparse.Namespace) -> int:
+def cmd_lm_score(spark, args: argparse.Namespace):
     """Bigram-LM perplexity scoring (plans/lm.py): train on the corpus,
     score every document; optionally bucket-sample (CCNet shape)."""
     from .plans.lm import lm_perplexity_buckets, score_bigram_nll, train_bigram_lm
 
-    spark = _spark("lm-score")
     df = spark.read.parquet(args.input)
     if args.keep_rates:
         rates = [float(r) for r in args.keep_rates.split(",")]
@@ -1227,28 +1121,16 @@ def cmd_lm_score(args: argparse.Namespace) -> int:
         out = score_bigram_nll(
             df, big, ctx, v, text_col=args.text_col, id_col=args.id_col
         )
-    n = commit_frame(out, args.out).count()
-    print(json.dumps({"out": args.out, "rows": n}))
-    return 0
+    return _written(out, args.out, "rows")
 
 
-def cmd_rewrite_dups(args: argparse.Namespace) -> int:
+def cmd_rewrite_dups(spark, args: argparse.Namespace):
     """Exact-substring dedup REMOVAL (plans/dedup.py::remove_dup_spans,
     the Lee et al. rewrite step): excise corpus-duplicated word n-gram
     occurrences from every document, keeping one canonical copy."""
-    from pyspark.sql import functions as F
-
     from .plans.dedup import remove_dup_spans
 
-    spark = _spark("rewrite-dups")
-    docs = spark.read.parquet(args.input)
-    for c in (args.id_col, args.text_col):
-        if c not in docs.columns:
-            raise SystemExit(f"rewrite-dups: input must have a '{c}' column")
-    docs = docs.select(
-        F.col(args.id_col).alias("doc_id"), F.col(args.text_col).alias("text")
-    )
-    out = remove_dup_spans(docs, n=args.ngram)
+    out = remove_dup_spans(_docs(spark, args.input, args, "rewrite-dups"), n=args.ngram)
     if args.drop_empty:
         out = out.filter(F.col("kept_text") != "")
     stats = commit_frame(out, args.out).agg(
@@ -1256,30 +1138,19 @@ def cmd_rewrite_dups(args: argparse.Namespace) -> int:
         F.sum("n_words").alias("words_in"),
         F.sum("n_removed").alias("words_removed"),
     ).collect()[0]
-    print(json.dumps({"out": args.out, **stats.asDict()}))
-    return 0
+    return {"out": args.out, **stats.asDict()}
 
 
-def cmd_line_dedup(args: argparse.Namespace) -> int:
+def cmd_line_dedup(spark, args: argparse.Namespace):
     """CCNet cross-document line dedup (plans/dedup.py::line_dedup):
     keep one corpus-wide occurrence per normalized line (Wenzek et al.
     2020), or purge every occurrence of lines shared by >= --min-docs
     documents (RefinedWeb-style boilerplate removal)."""
-    from pyspark.sql import functions as F
-
     from .plans.dedup import line_dedup
 
-    spark = _spark("line-dedup")
-    docs = spark.read.parquet(args.input)
-    for c in (args.id_col, args.text_col):
-        if c not in docs.columns:
-            raise SystemExit(f"line-dedup: input must have a '{c}' column")
     mode = "frequent" if args.min_docs else "keep_first"
     out = line_dedup(
-        docs.select(
-            F.col(args.id_col).alias("doc_id"),
-            F.col(args.text_col).alias("text"),
-        ),
+        _docs(spark, args.input, args, "line-dedup"),
         mode=mode,
         min_docs=args.min_docs,
     )
@@ -1290,16 +1161,13 @@ def cmd_line_dedup(args: argparse.Namespace) -> int:
         F.sum("n_lines").alias("lines_in"),
         F.sum("n_kept_lines").alias("lines_kept"),
     ).collect()[0]
-    print(json.dumps({"out": args.out, "mode": mode, **stats.asDict()}))
-    return 0
+    return {"out": args.out, "mode": mode, **stats.asDict()}
 
 
-def cmd_dsir(args: argparse.Namespace) -> int:
+def cmd_dsir(spark, args: argparse.Namespace):
     """DSIR importance resampling (plans/dsir.py): select the raw
     documents most like a target domain via hashed-ngram log-ratio
     weights + seeded Gumbel-top-k."""
-    from pyspark.sql import functions as F
-
     from . import cache
     from .plans.dsir import (
         doc_features,
@@ -1308,10 +1176,7 @@ def cmd_dsir(args: argparse.Namespace) -> int:
         dsir_weights,
     )
 
-    spark = _spark("dsir")
-    raw = spark.read.parquet(args.input).select(
-        F.col(args.id_col).alias("doc_id"), F.col(args.text_col).alias("text")
-    )
+    raw = _docs(spark, args.input, args, "dsir")
     if args.weights:
         # Stored-weights fast path: score + select this batch at
         # O(batch); the reference corpora are never touched.
@@ -1319,9 +1184,7 @@ def cmd_dsir(args: argparse.Namespace) -> int:
 
         w = read_dsir_weights(spark, args.weights)
         picked = dsir_select_batch(raw, w, k=args.k, seed=args.seed)
-        n = commit_frame(picked, args.out).count()
-        print(json.dumps({"out": args.out, "selected": n, "k": args.k}))
-        return 0
+        return {**_written(picked, args.out, "selected"), "k": args.k}
     cache.begin_plan()
     if args.target:
         # Separate target corpus: the paper's q is the RAW distribution
@@ -1332,9 +1195,7 @@ def cmd_dsir(args: argparse.Namespace) -> int:
         # its own featurization (see dsir_weights_paired docstring).
         from .plans.dsir import dsir_weights_paired
 
-        tgt = spark.read.parquet(args.target).select(
-            F.col(args.id_col).alias("doc_id"), F.col(args.text_col).alias("text")
-        )
+        tgt = _docs(spark, args.target, args, "dsir")
         feats = cache.pin(doc_features(raw))
         weights = dsir_weights_paired(feats, doc_features(tgt))
     elif args.target_where:
@@ -1353,34 +1214,28 @@ def cmd_dsir(args: argparse.Namespace) -> int:
     if args.weights_out:
         from .plans.dsir import write_dsir_weights
 
-        write_dsir_weights(weights, args.weights_out)
-        weights = spark.read.parquet(args.weights_out)
+        weights = write_dsir_weights(weights, args.weights_out)
     # feats is the raw featurization in both estimation paths; the
     # weight join inside dsir_scores is left+0-fill, so raw buckets a
     # foreign/paired weight table lacks score as ~0 (unbiased).
     scored = dsir_scores(raw, weights, feats=feats)
     picked = dsir_resample_topk(scored, k=args.k, seed=args.seed)
-    n = commit_frame(picked, args.out).count()
-    stats = {"out": args.out, "selected": n, "k": args.k}
+    stats = {**_written(picked, args.out, "selected"), "k": args.k}
     if args.weights_out:
         stats["weights_out"] = args.weights_out
-    print(json.dumps(stats))
-    return 0
+    return stats
 
 
-def cmd_quality_model(args: argparse.Namespace) -> int:
+def cmd_quality_model(spark, args: argparse.Namespace):
     """Classifier-based quality filtering (plans/quality_model.py, the
     GPT-3 recipe): train an MLlib LR on a labeled parquet, score the
     input corpus, optionally apply the seeded Pareto acceptance filter."""
-    from pyspark.sql import functions as F
-
     from .plans.quality_model import (
         pareto_keep,
         score_quality,
         train_quality_classifier,
     )
 
-    spark = _spark("quality-model")
     if args.model:
         from .plans.quality_model import load_quality_model
 
@@ -1389,9 +1244,7 @@ def cmd_quality_model(args: argparse.Namespace) -> int:
         if not args.labeled:
             raise SystemExit("quality-model: pass --labeled to train or --model to reload")
         labeled = spark.read.parquet(args.labeled)
-        for c in (args.label_col, args.text_col):
-            if c not in labeled.columns:
-                raise SystemExit(f"quality-model: labeled set needs a '{c}' column")
+        _require(labeled, (args.label_col, args.text_col), "quality-model", args.labeled)
         model = train_quality_classifier(
             labeled, label_col=args.label_col, text_col=args.text_col
         )
@@ -1411,24 +1264,17 @@ def cmd_quality_model(args: argparse.Namespace) -> int:
         out = scored.filter("kept").drop("kept") if args.keep_only else scored
     else:
         out = scored
-    n = commit_frame(out, args.out).count()
-    print(json.dumps({"out": args.out, "rows": n}))
-    return 0
+    return _written(out, args.out, "rows")
 
 
-def cmd_embed_filter(args: argparse.Namespace) -> int:
+def cmd_embed_filter(spark, args: argparse.Namespace):
     """Embedding outlier filtering (plans/embedding_quality.py): flag or
     drop vectors outside the corpus distribution before they poison ANN
     indexes / SemDeDup cells."""
-    from pyspark.sql import functions as F
-
     from .plans.embedding_quality import embedding_outliers
 
-    spark = _spark("embed-filter")
     emb = spark.read.parquet(args.input)
-    for c in (args.id_col, args.vec_col):
-        if c not in emb.columns:
-            raise SystemExit(f"embed-filter: input must have a '{c}' column")
+    _require(emb, (args.id_col, args.vec_col), "embed-filter", args.input)
     vecs = emb.select(
         F.col(args.id_col).alias("vec_id"),
         F.col(args.vec_col).cast("array<double>").alias("v"),
@@ -1445,25 +1291,19 @@ def cmd_embed_filter(args: argparse.Namespace) -> int:
         F.count("*").alias("rows"),
         F.sum(F.col("is_outlier").cast("int")).alias("outliers"),
     ).collect()[0]
-    print(json.dumps({"out": args.out, **stats.asDict()}))
-    return 0
+    return {"out": args.out, **stats.asDict()}
 
 
-def cmd_phash(args: argparse.Namespace) -> int:
+def cmd_phash(spark, args: argparse.Namespace):
     """Perceptual-hash near-dup pairs over a binary-payload parquet
     (operators/multimodal.py::perceptual_hash + plans/multimodal_queries
     .phash_pairs). --fake-decode drives the deterministic stand-in; the
     real arm needs PIL on executors."""
-    from pyspark.sql import functions as F
-
     from .operators.multimodal import perceptual_hash
     from .plans.multimodal_queries import phash_pairs
 
-    spark = _spark("phash")
     media = spark.read.parquet(args.input)
-    for c in (args.id_col, args.payload_col):
-        if c not in media.columns:
-            raise SystemExit(f"phash: input must have a '{c}' column")
+    _require(media, (args.id_col, args.payload_col), "phash", args.input)
     media = media.select(
         F.col(args.id_col).alias("doc_id"),
         F.col(args.payload_col).cast("binary").alias("payload"),
@@ -1472,23 +1312,11 @@ def cmd_phash(args: argparse.Namespace) -> int:
     pairs = phash_pairs(
         hashes, max_hamming=args.max_hamming, bucket_cap=args.bucket_cap
     )
-    n = commit_frame(pairs, args.out).count()
-    print(json.dumps({"out": args.out, "pairs": n}))
-    return 0
+    return _written(pairs, args.out, "pairs")
 
 
-def cmd_ingest_warc(args: argparse.Namespace) -> int:
-    """Web-corpus front door (sources/warc.py + operators/html_text.py):
-    WARC(.gz) responses → extracted text → documents-shaped parquet
-    (doc_id, url, title, text, n_links, link_density, text_chars) ready
-    for the curation funnel. --max-link-density drops boilerplate-heavy
-    pages (nav/menu/link farms) at ingest. The plan itself lives in
-    plans/web.py::ingest_warc_plan, shared with the web_ingest_warc
-    bench row so the measured path IS the shipped path."""
-    from .plans.web import ingest_warc_plan
-
+def check_ingest_warc(args: argparse.Namespace) -> None:
     if args.main_content and args.max_link_density is not None:
-        # reject at the CLI layer, before a Spark session spins up —
         # the plan-level refusal stays as the API guard
         raise SystemExit(
             "ingest-warc: --max-link-density is a page-level gate; "
@@ -1510,7 +1338,18 @@ def cmd_ingest_warc(args: argparse.Namespace) -> int:
             "ingest-warc: pass exactly one of --input (whole files) or "
             "--ranges (cdx-plan fetch manifest)"
         )
-    spark = _spark("ingest-warc")
+
+
+def cmd_ingest_warc(spark, args: argparse.Namespace):
+    """Web-corpus front door (sources/warc.py + operators/html_text.py):
+    WARC(.gz) responses → extracted text → documents-shaped parquet
+    (doc_id, url, title, text, n_links, link_density, text_chars) ready
+    for the curation funnel. --max-link-density drops boilerplate-heavy
+    pages (nav/menu/link farms) at ingest. The plan itself lives in
+    plans/web.py::ingest_warc_plan, shared with the web_ingest_warc
+    bench row so the measured path IS the shipped path."""
+    from .plans.web import ingest_warc_plan
+
     kw = dict(
         content_type=args.content_type or None,
         max_link_density=args.max_link_density,
@@ -1531,12 +1370,10 @@ def cmd_ingest_warc(args: argparse.Namespace) -> int:
         out = ingest_records(records, **kw)
     else:
         out = ingest_warc_plan(spark, args.input, **kw)
-    n = commit_frame(out, args.out).count()
-    print(json.dumps({"out": args.out, "docs": n}))
-    return 0
+    return _written(out, args.out, "docs")
 
 
-def cmd_domain_stats(args: argparse.Namespace) -> int:
+def cmd_domain_stats(spark, args: argparse.Namespace):
     """Per-domain census over an INGESTED corpus (r14, VERDICT r13 #5):
     the same host/registrable-domain expressions `web_domain_stats`
     hash-checks on synthesized URLs, run over real `ingest-warc` output
@@ -1546,37 +1383,25 @@ def cmd_domain_stats(args: argparse.Namespace) -> int:
     writes the full census parquet."""
     from .plans.web import domain_census
 
-    spark = _spark("domain-stats")
     df = spark.read.parquet(args.path)
-    if args.url_col not in df.columns:
-        raise SystemExit(
-            f"domain-stats: {args.path} has no '{args.url_col}' column "
-            f"(have {df.columns}); pass --url-col"
-        )
+    _require(df, [args.url_col], "domain-stats", args.path)
     census = domain_census(df, url_col=args.url_col)
     if args.out:
         census = commit_frame(census, args.out)
-    top = census.orderBy(
-        F.desc("n_docs"), F.desc("total_chars"), "domain"
-    ).limit(args.top).collect()
-    for r in top:
-        print(json.dumps(r.asDict()))
-    print(
-        json.dumps(
-            {
-                "path": args.path,
-                "out": args.out,
-                "n_domains": census.count(),
-                "n_docs": int(
-                    (census.agg(F.sum("n_docs")).collect()[0][0]) or 0
-                ),
-            }
-        )
+    _print_rows(
+        census.orderBy(F.desc("n_docs"), F.desc("total_chars"), "domain")
+        .limit(args.top)
+        .collect()
     )
-    return 0
+    return {
+        "path": args.path,
+        "out": args.out,
+        "n_domains": census.count(),
+        "n_docs": int((census.agg(F.sum("n_docs")).collect()[0][0]) or 0),
+    }
 
 
-def cmd_cdx_plan(args: argparse.Namespace) -> int:
+def cmd_cdx_plan(spark, args: argparse.Namespace):
     """Ingestion PLANNING over a CDX(J) capture index (r14): filter the
     index (status/mime/registrable domains), optionally keep only the
     LATEST capture per URL, and write the fetch manifest — (url, host,
@@ -1589,7 +1414,6 @@ def cmd_cdx_plan(args: argparse.Namespace) -> int:
     from .functions.url import url_registrable_domain
     from .sources.cdx import read_cdxj
 
-    spark = _spark("cdx-plan")
     idx = read_cdxj(spark, args.input)
     if args.status is not None and args.status >= 0:  # -1 keeps all
         idx = idx.filter(F.col("status") == args.status)
@@ -1672,20 +1496,15 @@ def cmd_cdx_plan(args: argparse.Namespace) -> int:
         F.countDistinct("filename").alias("nf"),
         F.sum("length").alias("b"),
     ).collect()[0]
-    print(
-        json.dumps(
-            {
-                "out": args.out,
-                "captures": int(agg["n"]),
-                "warc_files": int(agg["nf"]),
-                "bytes_to_fetch": int(agg["b"] or 0),
-            }
-        )
-    )
-    return 0
+    return {
+        "out": args.out,
+        "captures": int(agg["n"]),
+        "warc_files": int(agg["nf"]),
+        "bytes_to_fetch": int(agg["b"] or 0),
+    }
 
 
-def cmd_wat_links(args: argparse.Namespace) -> int:
+def cmd_wat_links(spark, args: argparse.Namespace):
     """Outlink extraction from WAT metadata sidecars (r14): WARC
     metadata records → (src, dst) edges via `plans/web.py::
     wat_outlinks` (pure JVM JSON-path extraction — no HTML re-parse),
@@ -1696,7 +1515,6 @@ def cmd_wat_links(args: argparse.Namespace) -> int:
     from .plans.web import wat_outlinks
     from .sources.warc import read_warc
 
-    spark = _spark("wat-links")
     records = read_warc(spark, args.input, record_types=("metadata",))
     edges = wat_outlinks(records, normalize_urls=not args.no_normalize)
     if args.domain_graph:
@@ -1712,12 +1530,10 @@ def cmd_wat_links(args: argparse.Namespace) -> int:
             .groupBy("src_domain", "dst_domain")
             .agg(F.count("*").cast("long").alias("n_links"))
         )
-    n = commit_frame(edges, args.out).count()
-    print(json.dumps({"out": args.out, "edges": n}))
-    return 0
+    return _written(edges, args.out, "edges")
 
 
-def cmd_robots_filter(args: argparse.Namespace) -> int:
+def cmd_robots_filter(spark, args: argparse.Namespace):
     """Crawl-compliance annotation (r14): parse a robots.txt WARC
     subset (Common Crawl ships one per crawl) into rules, then annotate
     an ingested documents corpus with `robots_disallowed` verdicts for
@@ -1726,13 +1542,8 @@ def cmd_robots_filter(args: argparse.Namespace) -> int:
     from .operators.robots import parse_robots_rules, robots_filter
     from .sources.warc import read_warc
 
-    spark = _spark("robots-filter")
     docs = spark.read.parquet(args.docs)
-    if "url" not in docs.columns:
-        raise SystemExit(
-            f"robots-filter: {args.docs} has no 'url' column "
-            f"(have {docs.columns})"
-        )
+    _require(docs, ["url"], "robots-filter", args.docs)
     recs = read_warc(spark, args.robots).filter(
         (F.col("http_status") == 200) & F.col("undecoded_coding").isNull()
     )
@@ -1749,20 +1560,15 @@ def cmd_robots_filter(args: argparse.Namespace) -> int:
         if args.drop
         else back.filter(F.col("robots_disallowed")).count()
     )
-    print(
-        json.dumps(
-            {
-                "out": args.out,
-                "docs": n_out,
-                "disallowed": (docs.count() - n_out) if args.drop else n_dis,
-                "dropped": bool(args.drop),
-            }
-        )
-    )
-    return 0
+    return {
+        "out": args.out,
+        "docs": n_out,
+        "disallowed": (docs.count() - n_out) if args.drop else n_dis,
+        "dropped": bool(args.drop),
+    }
 
 
-def cmd_delta_log(args: argparse.Namespace) -> int:
+def cmd_delta_log(spark, args: argparse.Namespace):
     """Delta transaction-log bridge (pipeline/delta_log.py): --sync
     converges the table's _delta_log to the repo manifest's live file
     set (one add/remove commit, so external Delta readers consume
@@ -1774,32 +1580,23 @@ def cmd_delta_log(args: argparse.Namespace) -> int:
         sync_delta_log_from_manifest,
     )
 
-    spark = _spark("delta-log")
     if args.enable_auto_sync:
         out = enable_auto_delta_sync(spark, args.path)
-        print(json.dumps({"path": args.path, "auto_sync": True, **out}))
-        return 0
+        return {"path": args.path, "auto_sync": True, **out}
     if args.sync:
-        out = sync_delta_log_from_manifest(spark, args.path)
-        print(json.dumps({"path": args.path, **out}))
-        return 0
+        return {"path": args.path, **sync_delta_log_from_manifest(spark, args.path)}
     snap = read_delta_snapshot(spark, args.path)
-    print(
-        json.dumps(
-            {
-                "path": args.path,
-                "version": snap["version"],
-                "n_files": len(snap["files"]),
-                "bytes": sum(m["size"] for m in snap["files"].values()),
-                "any_dv": any(m["dv"] for m in snap["files"].values()),
-                "configuration": snap["configuration"],
-            }
-        )
-    )
-    return 0
+    return {
+        "path": args.path,
+        "version": snap["version"],
+        "n_files": len(snap["files"]),
+        "bytes": sum(m["size"] for m in snap["files"].values()),
+        "any_dv": any(m["dv"] for m in snap["files"].values()),
+        "configuration": snap["configuration"],
+    }
 
 
-def cmd_matview(args: argparse.Namespace) -> int:
+def cmd_matview(spark, args: argparse.Namespace):
     """Incremental materialized views (pipeline/matview.py): create,
     refresh (cost ∝ new base files), rebuild, read."""
     from .pipeline.matview import (
@@ -1809,16 +1606,9 @@ def cmd_matview(args: argparse.Namespace) -> int:
         refresh_matview,
     )
 
-    spark = _spark("matview")
     if args.create:
         if not args.base or not args.group or not args.metrics:
             raise SystemExit("matview: --create needs --base/--group/--metrics")
-        quantile_cols = None
-        if args.quantiles:
-            quantile_cols = {}
-            for spec in args.quantiles.split(","):
-                col, lo, hi = spec.rsplit(":", 2)
-                quantile_cols[col] = (float(lo), float(hi))
         stats = create_matview(
             spark,
             args.base,
@@ -1827,174 +1617,124 @@ def cmd_matview(args: argparse.Namespace) -> int:
             args.metrics.split(","),
             time_col=args.time_col,
             grain=args.grain,
-            distinct_cols=args.distinct.split(",") if args.distinct else None,
-            quantile_cols=quantile_cols,
+            distinct_cols=_csv(args.distinct),
+            quantile_cols=_quantiles(args.quantiles),
             n_bins=args.n_bins,
         )
-        print(json.dumps({"path": args.path, **stats}))
-        return 0
-    if args.refresh:
+    elif args.refresh:
         stats = refresh_matview(
             spark, args.path, on_base_mutation=args.on_base_mutation
         )
-        print(json.dumps({"path": args.path, **stats}))
-        return 0
-    if args.rebuild:
+    elif args.rebuild:
         stats = rebuild_matview(spark, args.path)
-        print(json.dumps({"path": args.path, **stats}))
-        return 0
-    for r in read_matview(spark, args.path).collect():
-        print(json.dumps(r.asDict(), default=str))
-    return 0
+    else:
+        _print_rows(read_matview(spark, args.path).collect())
+        return None
+    return {"path": args.path, **stats}
 
 
-def cmd_merge(args: argparse.Namespace) -> int:
+def cmd_merge(spark, args: argparse.Namespace):
     """File-level copy-on-write MERGE INTO (pipeline/merge.py): replace
     matched keys, insert unmatched, rewriting only touched data files."""
     from .pipeline.merge import merge_into
 
-    spark = _spark("merge")
     updates = spark.read.parquet(args.updates)
     stats = merge_into(
         spark,
         args.path,
         updates,
         key=args.key.split(","),
-        partition_by=args.partition_by.split(",") if args.partition_by else None,
+        partition_by=args.partition_by,
         allow_new_columns=args.allow_new_columns,
         stale_lock_s=args.stale_lock_s,
     )
-    print(json.dumps({"path": args.path, **stats}))
-    return 0
+    return {"path": args.path, **stats}
 
 
-def cmd_insert(args: argparse.Namespace) -> int:
+def cmd_insert(spark, args: argparse.Namespace):
     """Journaled INSERT (pipeline/merge.py::insert_into): append rows
     as new files through the same crash-safe commit as merge/delete/
     update — manifest delta, stats, and history included."""
     from .pipeline.merge import insert_into
 
-    spark = _spark("insert")
     rows = spark.read.parquet(args.rows)
     stats = insert_into(
         spark,
         args.path,
         rows,
-        partition_by=args.partition_by.split(",") if args.partition_by else None,
+        partition_by=args.partition_by,
         stale_lock_s=args.stale_lock_s,
     )
-    print(json.dumps({"path": args.path, **stats}))
-    return 0
+    return {"path": args.path, **stats}
 
 
-def cmd_shards(args: argparse.Namespace) -> int:
+def cmd_shards(spark, args: argparse.Namespace):
     """Deterministic shuffled shard export (plans/sampling.py): seeded
     md5 permutation, shard=N Hive dirs, one file per shard, byte-stable
     re-exports."""
     from .plans.sampling import export_shards
 
-    spark = _spark("shards")
     df = spark.read.parquet(args.input)
-    if args.id_col not in df.columns:
-        raise SystemExit(f"shards: --id-col {args.id_col!r} not in input")
-    if args.format == "webdataset":
-        from .pipeline.webdataset import export_webdataset
-
-        meta = [c for c in (args.meta_cols or "").split(",") if c]
-        report = export_webdataset(
-            df,
-            args.out,
-            n_shards=args.n_shards,
-            id_col=args.id_col,
-            text_col=args.text_col,
-            meta_cols=meta,
-            shard_seed=args.seed,
-            order_seed=args.seed + ":order",
-        )
-        print(
-            json.dumps(
-                {
-                    "out": args.out,
-                    "format": "webdataset",
-                    "n_shards": args.n_shards,
-                    "rows": sum(r["n_samples"] for r in report),
-                    "bytes": sum(r["bytes"] for r in report),
-                }
-            )
-        )
-        return 0
-    if args.format == "tfrecord":
-        from .pipeline.tfrecord import export_tfrecord
-
-        feats = [c for c in (args.feature_cols or "").split(",") if c] or None
-        report = export_tfrecord(
-            df,
-            args.out,
-            n_shards=args.n_shards,
-            id_col=args.id_col,
-            feature_cols=feats,
-            shard_seed=args.seed,
-            order_seed=args.seed + ":order",
-        )
-        print(
-            json.dumps(
-                {
-                    "out": args.out,
-                    "format": "tfrecord",
-                    "n_shards": args.n_shards,
-                    "rows": sum(r["n_records"] for r in report),
-                    "bytes": sum(r["bytes"] for r in report),
-                }
-            )
-        )
-        return 0
-    export_shards(
-        df,
-        args.out,
+    _require(df, [args.id_col], "shards --id-col", args.input)
+    layout = dict(
         n_shards=args.n_shards,
         id_col=args.id_col,
         shard_seed=args.seed,
         order_seed=args.seed + ":order",
     )
-    n = spark.read.parquet(args.out).count()
-    print(json.dumps({"out": args.out, "n_shards": args.n_shards, "rows": n}))
-    return 0
+    if args.format == "parquet":
+        written = export_shards(df, args.out, **layout)
+        return {"out": args.out, "n_shards": args.n_shards, "rows": written.count()}
+    if args.format == "webdataset":
+        from .pipeline.webdataset import export_webdataset
+
+        meta = [c for c in (args.meta_cols or "").split(",") if c]
+        report = export_webdataset(
+            df, args.out, text_col=args.text_col, meta_cols=meta, **layout
+        )
+        n_key = "n_samples"
+    else:
+        from .pipeline.tfrecord import export_tfrecord
+
+        feats = [c for c in (args.feature_cols or "").split(",") if c] or None
+        report = export_tfrecord(df, args.out, feature_cols=feats, **layout)
+        n_key = "n_records"
+    return {
+        "out": args.out,
+        "format": args.format,
+        "n_shards": args.n_shards,
+        "rows": sum(r[n_key] for r in report),
+        "bytes": sum(r["bytes"] for r in report),
+    }
 
 
-def cmd_expect(args: argparse.Namespace) -> int:
+def check_expect(args: argparse.Namespace) -> None:
+    with open(args.rules) as fh:
+        args.rules_doc = json.load(fh)
+    if not isinstance(args.rules_doc, dict) or not all(
+        isinstance(v, str) for v in args.rules_doc.values()
+    ):
+        raise SystemExit(
+            'expect: --rules must be a JSON object {"rule_name": "sql predicate"}'
+        )
+
+
+def cmd_expect(spark, args: argparse.Namespace):
     """Declarative data-quality gate (plans/profile.py): named boolean
     rules from a JSON file ({"rule_name": "sql predicate", ...}),
     evaluated in ONE scan; --fail-on-violation makes a failing rule set
     exit non-zero — the Airflow ingest-gate shape."""
     from .plans.profile import check_expectations
 
-    with open(args.rules) as fh:
-        rules_doc = json.load(fh)
-    if not isinstance(rules_doc, dict) or not all(
-        isinstance(v, str) for v in rules_doc.values()
-    ):
-        raise SystemExit(
-            'expect: --rules must be a JSON object {"rule_name": "sql predicate"}'
-        )
-    spark = _spark("expect")
     df = spark.read.parquet(args.path)
-    rows = check_expectations(df, list(rules_doc.items())).collect()
-    n_failed = 0
-    for r in rows:
-        print(json.dumps(r.asDict()))
-        if not r["pass"]:
-            n_failed += 1
-    print(
-        json.dumps(
-            {"path": args.path, "rules": len(rows), "failed": n_failed}
-        )
-    )
-    if args.fail_on_violation and n_failed:
-        return 1
-    return 0
+    rows = check_expectations(df, list(args.rules_doc.items())).collect()
+    _print_rows(rows)
+    n_failed = sum(1 for r in rows if not r["pass"])
+    summary = {"path": args.path, "rules": len(rows), "failed": n_failed}
+    return summary, 1 if args.fail_on_violation and n_failed else 0
 
 
-def cmd_drift(args: argparse.Namespace) -> int:
+def cmd_drift(spark, args: argparse.Namespace):
     """Distribution-drift gate between two parquet datasets (or a
     dataset and yesterday's): sketch-profile both sides, compare with
     plans/profile.py::profile_drift, one JSON line per column;
@@ -2006,26 +1746,10 @@ def cmd_drift(args: argparse.Namespace) -> int:
         profile_frame_sketch,
     )
 
-    spark = _spark("drift")
-
     def _estimates(path: str):
         df = spark.read.parquet(path)
-        if args.columns:
-            cols = args.columns.split(",")
-            missing = [c for c in cols if c not in df.columns]
-            if missing:
-                raise SystemExit(f"drift: {path} lacks columns {missing}")
-        else:
-            from pyspark.sql import types as T
-
-            cols = [
-                f.name
-                for f in df.schema.fields
-                if not isinstance(
-                    f.dataType,
-                    (T.ArrayType, T.MapType, T.StructType, T.BinaryType),
-                )
-            ]
+        cols = args.columns.split(",") if args.columns else _atomic_columns(df)
+        _require(df, cols, "drift", path)
         if not cols:
             raise SystemExit(f"drift: no profilable columns in {path}")
         return profile_estimates(merge_profiles(profile_frame_sketch(df, cols)))
@@ -2036,41 +1760,28 @@ def cmd_drift(args: argparse.Namespace) -> int:
         null_rate_tol=args.null_rate_tol,
         distinct_ratio_tol=args.distinct_ratio_tol,
     ).collect()
-    n_drifted = 0
-    for r in sorted(report, key=lambda x: x["column_name"]):
-        print(json.dumps(r.asDict()))
-        if r["drifted"]:
-            n_drifted += 1
-    print(
-        json.dumps(
-            {"base": args.base, "current": args.current, "drifted": n_drifted}
-        )
-    )
-    if args.fail_on_drift and n_drifted:
-        return 1
-    return 0
+    report.sort(key=lambda x: x["column_name"])
+    _print_rows(report)
+    n_drifted = sum(1 for r in report if r["drifted"])
+    summary = {"base": args.base, "current": args.current, "drifted": n_drifted}
+    return summary, 1 if args.fail_on_drift and n_drifted else 0
 
 
-def cmd_curriculum(args: argparse.Namespace) -> int:
+def cmd_curriculum(spark, args: argparse.Namespace):
     """Curriculum ordering from the shell (plans/sampling.py::
     curriculum_plan): global easy→hard rank over a parquet dataset with
     an integer difficulty column; writes (doc_id, level,
     curriculum_rank) parquet and prints per-level rank spans."""
-    from pyspark.sql import functions as F
-
     from .plans.sampling import curriculum_plan
 
-    spark = _spark("curriculum")
     df = spark.read.parquet(args.path)
-    for c in (args.id_col, args.level_col):
-        if c not in df.columns:
-            raise SystemExit(f"curriculum: input lacks column '{c}'")
+    _require(df, (args.id_col, args.level_col), "curriculum", args.path)
     leveled = df.select(
         F.col(args.id_col).alias("doc_id"),
         F.col(args.level_col).cast("long").alias("level"),
     )
     out = commit_frame(curriculum_plan(leveled, seed=args.seed), args.out)
-    spans = (
+    _print_rows(
         out.groupBy("level")
         .agg(
             F.count("*").alias("n"),
@@ -2080,27 +1791,19 @@ def cmd_curriculum(args: argparse.Namespace) -> int:
         .orderBy("level")
         .collect()
     )
-    for r in spans:
-        print(json.dumps(r.asDict()))
-    return 0
 
 
-def cmd_semdedup(args: argparse.Namespace) -> int:
+def cmd_semdedup(spark, args: argparse.Namespace):
     """Semantic dedup over an embeddings parquet (plans/mllib_ops.py::
     semdedup): k-means cluster blocking + within-cell cosine pairs +
     keep-farthest-from-centroid representatives. Prints summary counts;
     --out writes the per-vector (cell_id, centroid_sim, cluster_id,
     keep) assignment parquet."""
-    from pyspark.sql import functions as F
-
     from .functions.vector import as_double
     from .plans.mllib_ops import semdedup
 
-    spark = _spark("semdedup")
     emb = spark.read.parquet(args.path)
-    for c in (args.id_col, args.vec_col):
-        if c not in emb.columns:
-            raise SystemExit(f"semdedup: input lacks column '{c}'")
+    _require(emb, (args.id_col, args.vec_col), "semdedup", args.path)
     corpus = emb.select(
         F.col(args.id_col).alias("vec_id"),
         as_double(args.vec_col).alias("v"),
@@ -2114,25 +1817,19 @@ def cmd_semdedup(args: argparse.Namespace) -> int:
         F.count("cluster_id").alias("n_clustered"),
         F.countDistinct("cluster_id").alias("n_groups"),
     ).collect()[0]
-    print(json.dumps({k: (int(v) if v is not None else 0) for k, v in row.asDict().items()}))
-    return 0
+    return {k: (int(v) if v is not None else 0) for k, v in row.asDict().items()}
 
 
-def cmd_diff(args: argparse.Namespace) -> int:
+def cmd_diff(spark, args: argparse.Namespace):
     """Corpus version diff (plans/curation.py::corpus_diff): per-status
     counts between two parquet corpus versions as one JSON line;
     --out writes the per-key status parquet."""
-    from pyspark.sql import functions as F
-
     from .plans.curation import corpus_diff
 
-    spark = _spark("diff")
     old = spark.read.parquet(args.old)
     new = spark.read.parquet(args.new)
     for side, df in (("--old", old), ("--new", new)):
-        for c in (args.key, args.content_col):
-            if c not in df.columns:
-                raise SystemExit(f"diff: {side} dataset lacks column '{c}'")
+        _require(df, (args.key, args.content_col), "diff", side)
     d = corpus_diff(old, new, key=args.key, content_col=args.content_col)
     if args.out:
         d = commit_frame(d, args.out)
@@ -2140,36 +1837,23 @@ def cmd_diff(args: argparse.Namespace) -> int:
         r["status"]: r["n"]
         for r in d.groupBy("status").agg(F.count("*").alias("n")).collect()
     }
-    print(
-        json.dumps(
-            {
-                s: counts.get(s, 0)
-                for s in ("ADDED", "REMOVED", "CHANGED", "UNCHANGED")
-            }
-        )
-    )
-    return 0
+    return {s: counts.get(s, 0) for s in ("ADDED", "REMOVED", "CHANGED", "UNCHANGED")}
 
 
-def cmd_quality(args: argparse.Namespace) -> int:
+def cmd_quality(spark, args: argparse.Namespace):
     """Gopher quality-rule gate over a (doc_id, text) parquet dataset
     (plans/text.py::gopher_rules): write per-document rule booleans (or
     only the keepers with --keep-only), print the per-rule pass-rate
     summary. Optionally chain the perplexity bucket sampler
     (--ppl-sample) on the kept set using the deterministic proxy score."""
-    from pyspark.sql import functions as F
-
     from .plans.sampling import (
         perplexity_bucket_sample,
         proxy_perplexity_score,
     )
     from .plans.text import gopher_rules
 
-    spark = _spark("quality")
     docs = spark.read.parquet(args.path)
-    for c in ("doc_id", "text"):
-        if c not in docs.columns:
-            raise SystemExit(f"quality: input must have a '{c}' column")
+    _require(docs, ("doc_id", "text"), "quality", args.path)
     rules = gopher_rules(
         docs, min_required_stopwords=args.min_stopwords
     ).persist()
@@ -2192,21 +1876,18 @@ def cmd_quality(args: argparse.Namespace) -> int:
     if args.out:
         commit_frame(out, args.out)
     rules.unpersist()
-    print(json.dumps(summary.asDict()))
-    return 0
+    return summary.asDict()
 
 
-def cmd_manifest(args: argparse.Namespace) -> int:
+def cmd_manifest(spark, args: argparse.Namespace):
     """Bootstrap / refresh / verify a table's live-file manifest
     (pipeline/manifest.py) — the list-free read index maintained
     incrementally by merge/delete/update commits."""
     from .pipeline import manifest as man
 
-    spark = _spark("manifest")
     if args.verify:
         diff = man.verify_manifest(spark, args.path)
-        print(json.dumps({"path": args.path, **diff}))
-        return 0 if not diff["missing"] and not diff["extra"] else 1
+        return {"path": args.path, **diff}, 1 if diff["missing"] or diff["extra"] else 0
     if args.vacuum_orphans:
         out = man.vacuum_orphans(
             spark,
@@ -2214,48 +1895,35 @@ def cmd_manifest(args: argparse.Namespace) -> int:
             older_than_s=args.older_than_s,
             dry_run=args.dry_run,
         )
-        print(
-            json.dumps(
-                {
-                    "path": args.path,
-                    "n_removed": len(out["removed"]),
-                    **{k: v for k, v in out.items() if k != "removed"},
-                    "dry_run": args.dry_run,
-                }
-            )
-        )
-        return 0
+        return {
+            "path": args.path,
+            "n_removed": len(out["removed"]),
+            **{k: v for k, v in out.items() if k != "removed"},
+            "dry_run": args.dry_run,
+        }
     stats_cols = (
         [c for c in args.stats_cols.split(",") if c]
         if args.stats_cols is not None
         else None
     )
     payload = man.write_manifest(spark, args.path, stats_cols=stats_cols)
-    print(
-        json.dumps(
-            {
-                "path": args.path,
-                "n_files": len(payload["files"]),
-                "stats_cols": payload.get("stats_cols") or [],
-                "row_count": man.manifest_row_count(spark, args.path),
-            }
-        )
-    )
-    return 0
+    return {
+        "path": args.path,
+        "n_files": len(payload["files"]),
+        "stats_cols": payload.get("stats_cols") or [],
+        "row_count": man.manifest_row_count(spark, args.path),
+    }
 
 
-def cmd_curate(args: argparse.Namespace) -> int:
+def cmd_curate(spark, args: argparse.Namespace):
     """Operational curation funnel (plans/curation.py::curation_funnel):
     gopher quality gate → PII redaction → exact dedup → perplexity
     bucket sampling over any (doc_id, text) parquet, with a per-stage
     funnel report and the curated corpus as parquet output."""
     from .plans.curation import curation_funnel
 
-    spark = _spark("curate")
     docs = spark.read.parquet(args.path)
-    for c in ("doc_id", "text"):
-        if c not in docs.columns:
-            raise SystemExit(f"curate: input needs a {c!r} column")
+    _require(docs, ("doc_id", "text"), "curate", args.path)
     stages = tuple(s for s in args.stages.split(",") if s)
     curated, report = curation_funnel(
         docs,
@@ -2279,21 +1947,18 @@ def cmd_curate(args: argparse.Namespace) -> int:
     if args.out:
         commit_frame(curated, args.out)
     curated.unpersist()
-    print(json.dumps({"path": args.path, "funnel": report, "out": args.out}))
-    return 0
+    return {"path": args.path, "funnel": report, "out": args.out}
 
 
-def cmd_recover(args: argparse.Namespace) -> int:
+def cmd_recover(spark, args: argparse.Namespace):
     """Complete a crashed merge commit's journal (pipeline/merge.py
     recover()) without running another merge — for one-shot pipelines
     whose failure would otherwise leave duplicate-visible keys until
     the next merge happens to run."""
     from .pipeline.merge import recover
 
-    spark = _spark("recover")
     completed = recover(spark, args.path)
-    print(json.dumps({"path": args.path, "journal_completed": completed}))
-    return 0
+    return {"path": args.path, "journal_completed": completed}
 
 
 # --- parser ------------------------------------------------------------------
@@ -2303,7 +1968,57 @@ def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="neura-spark", description="Spark-native five-stage pipeline CLI"
     )
+    p.set_defaults(check=None)
     sub = p.add_subparsers(dest="command", required=True)
+
+    # Argument groups shared by several verbs (argparse parents).
+    docs_args = argparse.ArgumentParser(add_help=False)
+    docs_args.add_argument("--id-col", default="doc_id")
+    docs_args.add_argument("--text-col", default="text")
+
+    table_args = argparse.ArgumentParser(add_help=False)
+    table_args.add_argument(
+        "--partition-by",
+        type=_csv,
+        default=None,
+        help="comma-separated Hive partition columns of the target layout",
+    )
+    table_args.add_argument(
+        "--stale-lock-s",
+        type=float,
+        default=None,
+        help="take over a crashed holder's maintenance lock older than "
+        "this many seconds (default: never)",
+    )
+
+    agg_args = argparse.ArgumentParser(add_help=False)
+    agg_args.add_argument("--group", default=None, help="comma-separated group columns")
+    agg_args.add_argument(
+        "--metrics", default=None, help="comma-separated numeric metric columns"
+    )
+    agg_args.add_argument(
+        "--distinct",
+        default=None,
+        help="comma-separated columns to track per-group approx distinct "
+        "counts for (mergeable HLL sketches)",
+    )
+    agg_args.add_argument(
+        "--time-col", default=None, help="add a date_trunc time-bucket group key"
+    )
+    agg_args.add_argument("--grain", default="day", help="time bucket grain (default day)")
+    agg_args.add_argument(
+        "--quantiles",
+        default=None,
+        metavar="COL:LO:HI[,...]",
+        help="mergeable fixed-bin histogram quantiles per column over a "
+        "declared [LO, HI) domain; reads render p50/p95/p99",
+    )
+    agg_args.add_argument(
+        "--n-bins",
+        type=int,
+        default=64,
+        help="histogram bins for --quantiles (error ≤ (HI-LO)/n_bins)",
+    )
 
     d = sub.add_parser("discover", help="scan + fingerprint + manifest diff")
     d.add_argument("--data-root", required=True)
@@ -2359,7 +2074,9 @@ def build_parser() -> argparse.ArgumentParser:
     m.set_defaults(fn=cmd_materialize)
 
     dd = sub.add_parser(
-        "dedup", help="corpus near-dup pairs + clusters + canonical keep-list"
+        "dedup",
+        parents=[docs_args],
+        help="corpus near-dup pairs + clusters + canonical keep-list",
     )
     dd.add_argument("--input", required=True, help="parquet of documents")
     dd.add_argument("--out", dest="out_dir", required=True)
@@ -2380,8 +2097,6 @@ def build_parser() -> argparse.ArgumentParser:
         help="max Hamming distance for simhash (default 3); "
         "rejected for minhash/jaccard — use --threshold",
     )
-    dd.add_argument("--id-col", default="doc_id")
-    dd.add_argument("--text-col", default="text")
     dd.add_argument(
         "--store",
         default=None,
@@ -2414,7 +2129,7 @@ def build_parser() -> argparse.ArgumentParser:
         "assignment store (incremental connected components: only merged "
         "clusters rewrite)",
     )
-    dd.set_defaults(fn=cmd_dedup)
+    dd.set_defaults(fn=cmd_dedup, check=check_dedup)
 
     c = sub.add_parser("compact", help="rewrite a parquet dataset into target-sized files")
     c.add_argument("--path", required=True)
@@ -2443,50 +2158,29 @@ def build_parser() -> argparse.ArgumentParser:
     c.set_defaults(fn=cmd_compact)
 
     mg = sub.add_parser(
-        "merge", help="copy-on-write MERGE INTO a parquet dataset (upsert by key)"
+        "merge",
+        parents=[table_args],
+        help="copy-on-write MERGE INTO a parquet dataset (upsert by key)",
     )
     mg.add_argument("--path", required=True, help="target parquet dataset")
     mg.add_argument("--updates", required=True, help="parquet dir of update rows")
     mg.add_argument("--key", required=True, help="comma-separated merge key columns")
-    mg.add_argument(
-        "--partition-by",
-        default=None,
-        help="comma-separated Hive partition columns of the target layout",
-    )
     mg.add_argument(
         "--allow-new-columns",
         action="store_true",
         help="widen the target schema with columns only the updates "
         "carry (default: raise; evolved tables need mergeSchema reads)",
     )
-    mg.add_argument(
-        "--stale-lock-s",
-        type=float,
-        default=None,
-        help="take over a crashed holder's maintenance lock older than "
-        "this many seconds (default: never)",
-    )
     mg.set_defaults(fn=cmd_merge)
 
     ins = sub.add_parser(
         "insert",
+        parents=[table_args],
         help="journaled INSERT: append rows through the same crash-safe "
         "commit as merge/delete/update (manifest + history included)",
     )
     ins.add_argument("--path", required=True, help="target parquet dataset")
     ins.add_argument("--rows", required=True, help="parquet dir of rows to append")
-    ins.add_argument(
-        "--partition-by",
-        default=None,
-        help="comma-separated Hive partition columns of the target layout",
-    )
-    ins.add_argument(
-        "--stale-lock-s",
-        type=float,
-        default=None,
-        help="take over a crashed holder's maintenance lock older than "
-        "this many seconds (default: never)",
-    )
     ins.set_defaults(fn=cmd_insert)
 
     rc = sub.add_parser(
@@ -2545,7 +2239,7 @@ def build_parser() -> argparse.ArgumentParser:
         action="store_true",
         help="exit 1 if any rule has violations (ingest-gate mode)",
     )
-    ex.set_defaults(fn=cmd_expect)
+    ex.set_defaults(fn=cmd_expect, check=check_expect)
 
     dr = sub.add_parser(
         "drift",
@@ -2609,12 +2303,11 @@ def build_parser() -> argparse.ArgumentParser:
 
     sp = sub.add_parser(
         "split",
+        parents=[docs_args],
         help="leakage-safe train/val/test assignment (near-dup clusters share a split)",
     )
     sp.add_argument("--path", required=True, help="document parquet")
     sp.add_argument("--out", required=True)
-    sp.add_argument("--id-col", default="doc_id")
-    sp.add_argument("--text-col", default="text")
     sp.add_argument("--fractions", default="0.8,0.1,0.1")
     sp.add_argument("--seed", default="split6")
     sp.add_argument("--threshold", type=float, default=0.5)
@@ -2622,33 +2315,11 @@ def build_parser() -> argparse.ArgumentParser:
 
     ru = sub.add_parser(
         "rollup",
+        parents=[agg_args],
         help="continuous aggregates: one-shot group rollup, or an "
         "incremental store with O(batch) folds",
     )
     ru.add_argument("--input", default=None, help="parquet dir/file to aggregate")
-    ru.add_argument("--group", default=None, help="comma-separated group columns")
-    ru.add_argument("--metrics", default=None, help="comma-separated numeric metric columns")
-    ru.add_argument(
-        "--distinct",
-        default=None,
-        help="comma-separated columns to track per-group approx distinct "
-        "counts for (mergeable HLL sketches)",
-    )
-    ru.add_argument("--time-col", default=None, help="add a date_trunc time-bucket group key")
-    ru.add_argument("--grain", default="day", help="time bucket grain (default day)")
-    ru.add_argument(
-        "--quantiles",
-        default=None,
-        metavar="COL:LO:HI[,...]",
-        help="mergeable fixed-bin histogram quantiles per column over a "
-        "declared [LO, HI) domain; reads render p50/p95/p99",
-    )
-    ru.add_argument(
-        "--n-bins",
-        type=int,
-        default=64,
-        help="histogram bins for --quantiles (error ≤ (HI-LO)/n_bins)",
-    )
     ru.add_argument("--store", default=None, help="rollup store path")
     ru.add_argument(
         "--fold",
@@ -2695,6 +2366,7 @@ def build_parser() -> argparse.ArgumentParser:
 
     dl = sub.add_parser(
         "delete",
+        parents=[table_args],
         help="row-level DELETE: rewrite only the files holding rows "
         "matching a predicate (GDPR-delete for plain parquet)",
     )
@@ -2711,8 +2383,6 @@ def build_parser() -> argparse.ArgumentParser:
         help="comma-separated key values: scan-free equality delete "
         "(deletion vector of VALUES; purge-deletes resolves it later)",
     )
-    dl.add_argument("--partition-by", default=None)
-    dl.add_argument("--stale-lock-s", type=float, default=None)
     dl.add_argument(
         "--mor",
         action="store_true",
@@ -2755,12 +2425,11 @@ def build_parser() -> argparse.ArgumentParser:
 
     nv = sub.add_parser(
         "novelty",
+        parents=[docs_args],
         help="per-doc n-gram novelty: duplicated-occurrence counts + "
         "is_novel gate (n_dup*10 <= n_grams)",
     )
     nv.add_argument("--input", required=True)
-    nv.add_argument("--text-col", default="text")
-    nv.add_argument("--id-col", default="doc_id")
     nv.add_argument("--ngram", type=int, default=8)
     nv.add_argument(
         "--drop-dupey", action="store_true",
@@ -2982,7 +2651,7 @@ def build_parser() -> argparse.ArgumentParser:
         "pages with no stopword signal under any list are flagged "
         "(no_stopword_signal) and kept, never silently emptied",
     )
-    iw.set_defaults(fn=cmd_ingest_warc)
+    iw.set_defaults(fn=cmd_ingest_warc, check=check_ingest_warc)
 
     ds = sub.add_parser(
         "domain-stats",
@@ -3118,12 +2787,11 @@ def build_parser() -> argparse.ArgumentParser:
 
     bp = sub.add_parser(
         "bpe",
+        parents=[docs_args],
         help="train a BPE tokenizer on the corpus (merge table out; "
         "optional per-doc token counts)",
     )
     bp.add_argument("--input", required=True)
-    bp.add_argument("--text-col", default="text")
-    bp.add_argument("--id-col", default="doc_id")
     bp.add_argument("--merges", type=int, default=100)
     bp.add_argument("--min-pair-count", type=int, default=2)
     bp.add_argument("--merges-out", required=True, help="merge-table parquet")
@@ -3134,12 +2802,11 @@ def build_parser() -> argparse.ArgumentParser:
 
     lm = sub.add_parser(
         "lm-score",
+        parents=[docs_args],
         help="bigram-LM perplexity scoring (trained on the corpus); "
         "--keep-rates switches to CCNet bucket sampling",
     )
     lm.add_argument("--input", required=True)
-    lm.add_argument("--text-col", default="text")
-    lm.add_argument("--id-col", default="doc_id")
     lm.add_argument(
         "--keep-rates",
         default=None,
@@ -3151,12 +2818,11 @@ def build_parser() -> argparse.ArgumentParser:
 
     rd = sub.add_parser(
         "rewrite-dups",
+        parents=[docs_args],
         help="excise corpus-duplicated word n-gram spans from every "
         "document, keeping one canonical occurrence (Lee et al.)",
     )
     rd.add_argument("--input", required=True, help="parquet with id + text columns")
-    rd.add_argument("--text-col", default="text")
-    rd.add_argument("--id-col", default="doc_id")
     rd.add_argument("--ngram", type=int, default=8, help="span gram width")
     rd.add_argument(
         "--drop-empty", action="store_true",
@@ -3167,13 +2833,12 @@ def build_parser() -> argparse.ArgumentParser:
 
     ld = sub.add_parser(
         "line-dedup",
+        parents=[docs_args],
         help="CCNet cross-document line dedup: keep one corpus-wide "
         "occurrence per normalized line, or purge boilerplate lines "
         "shared by >= --min-docs documents",
     )
     ld.add_argument("--input", required=True, help="parquet with id + text columns")
-    ld.add_argument("--text-col", default="text")
-    ld.add_argument("--id-col", default="doc_id")
     ld.add_argument(
         "--min-docs", type=int, default=None,
         help="purge mode: drop EVERY occurrence of lines appearing in "
@@ -3188,6 +2853,7 @@ def build_parser() -> argparse.ArgumentParser:
 
     ds = sub.add_parser(
         "dsir",
+        parents=[docs_args],
         help="DSIR: select raw docs most like a target domain "
         "(hashed-ngram log-ratio weights + seeded Gumbel-top-k)",
     )
@@ -3203,8 +2869,6 @@ def build_parser() -> argparse.ArgumentParser:
         "--target-where", default=None,
         help="SQL predicate naming the target subset of --input",
     )
-    ds.add_argument("--text-col", default="text")
-    ds.add_argument("--id-col", default="doc_id")
     ds.add_argument("--k", type=int, default=1000)
     ds.add_argument("--seed", default="dsir-g")
     ds.add_argument(
@@ -3220,6 +2884,7 @@ def build_parser() -> argparse.ArgumentParser:
 
     qm = sub.add_parser(
         "quality-model",
+        parents=[docs_args],
         help="train an LR quality classifier on a labeled set, score "
         "the corpus; --filter applies the seeded Pareto keep rule",
     )
@@ -3232,8 +2897,6 @@ def build_parser() -> argparse.ArgumentParser:
         "--model", default=None, help="reload a persisted model (skips training)"
     )
     qm.add_argument("--label-col", default="label")
-    qm.add_argument("--text-col", default="text")
-    qm.add_argument("--id-col", default="doc_id")
     qm.add_argument("--filter", action="store_true")
     qm.add_argument("--keep-only", action="store_true")
     qm.add_argument("--alpha", type=float, default=9.0)
@@ -3275,6 +2938,7 @@ def build_parser() -> argparse.ArgumentParser:
 
     mv = sub.add_parser(
         "matview",
+        parents=[agg_args],
         help="incremental materialized view: create once, refresh at "
         "cost ∝ new base files, read the finalized aggregate",
     )
@@ -3283,13 +2947,6 @@ def build_parser() -> argparse.ArgumentParser:
     mv.add_argument("--refresh", action="store_true")
     mv.add_argument("--rebuild", action="store_true")
     mv.add_argument("--base", default=None, help="base table (with --create)")
-    mv.add_argument("--group", default=None, help="comma-separated group columns")
-    mv.add_argument("--metrics", default=None, help="comma-separated metric columns")
-    mv.add_argument("--distinct", default=None)
-    mv.add_argument("--time-col", default=None)
-    mv.add_argument("--grain", default="day")
-    mv.add_argument("--quantiles", default=None, metavar="COL:LO:HI[,...]")
-    mv.add_argument("--n-bins", type=int, default=64)
     mv.add_argument(
         "--on-base-mutation",
         default="error",
@@ -3301,16 +2958,16 @@ def build_parser() -> argparse.ArgumentParser:
 
     pg = sub.add_parser(
         "purge-deletes",
+        parents=[table_args],
         help="fold live deletion vectors back into the data files "
         "(rewrites only files with recorded positions)",
     )
     pg.add_argument("--path", required=True, help="table root")
-    pg.add_argument("--partition-by", default=None)
-    pg.add_argument("--stale-lock-s", type=float, default=None)
     pg.set_defaults(fn=cmd_purge_deletes)
 
     up = sub.add_parser(
         "update",
+        parents=[table_args],
         help="row-level UPDATE: apply SET col=expr to rows matching a "
         "predicate, rewriting only their files",
     )
@@ -3323,12 +2980,11 @@ def build_parser() -> argparse.ArgumentParser:
         metavar="COL=EXPR",
         help="assignment (repeatable)",
     )
-    up.add_argument("--partition-by", default=None)
-    up.add_argument("--stale-lock-s", type=float, default=None)
     up.set_defaults(fn=cmd_update)
 
     dc = sub.add_parser(
         "decontam",
+        parents=[docs_args],
         help="benchmark decontamination: build a persisted probe store, "
         "or report per-doc overlap of a corpus batch against it",
     )
@@ -3336,8 +2992,6 @@ def build_parser() -> argparse.ArgumentParser:
     dc.add_argument("--store", default=None, help="probe store path")
     dc.add_argument("--input", default=None, help="corpus batch parquet (check mode)")
     dc.add_argument("--out", default=None, help="write the report parquet here")
-    dc.add_argument("--id-col", default="doc_id")
-    dc.add_argument("--text-col", default="text")
     dc.add_argument("--n", type=int, default=5, help="shingle size")
     dc.add_argument("--fpp", type=float, default=0.01)
     dc.add_argument(
@@ -3527,8 +3181,19 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def main(argv: list[str] | None = None) -> int:
+    """Run one verb: parse ``argv``, refuse bad flags before any session
+    starts, start the session, run the verb, print its summary as the
+    last JSON line and return its exit code."""
+    from .session import get_spark
+
     args = build_parser().parse_args(argv)
-    return args.fn(args)
+    if args.check is not None:
+        args.check(args)
+    out = args.fn(get_spark(f"neura-{args.command}"), args)
+    summary, rc = out if isinstance(out, tuple) else (out, 0)
+    if summary is not None:
+        print(json.dumps(summary, default=str))
+    return rc
 
 
 if __name__ == "__main__":

@@ -24,10 +24,10 @@ it imports nothing else from the package:
   to the caller, which does its own drop of the replaced files;
 - the whole-directory staged swap (:func:`_staged_swap`,
   :func:`_recover_staged_swap`) for stores rewritten whole on every
-  commit (HLL registers, the PSI baseline, matview rebuilds and every
-  output frame below): stage to a sibling dir, land a sibling
-  journal (the commit point), drop the old dir, rename the staged dir
-  in, clear the journal;
+  commit (HLL registers, the PSI baseline, the IVF index, matview
+  rebuilds and every output frame below): stage to a sibling dir, land
+  a sibling journal (the commit point), drop the old dir, rename the
+  staged dir in, clear the journal;
 - the output-frame commit (:func:`commit_frame`, :func:`recover_frame`)
   that every CLI verb, the validate and materialize stages and the
   streaming discover manifest write through: the staged swap around a

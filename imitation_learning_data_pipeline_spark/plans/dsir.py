@@ -273,11 +273,15 @@ def dsir_resample_topk(
     )
 
 
-def write_dsir_weights(weights: DataFrame, path: str) -> None:
+def write_dsir_weights(weights: DataFrame, path: str) -> DataFrame:
     """Persist the bucket-weight table (the decontam probe-store
     pattern: estimate ONCE over the reference corpora, then select each
-    incoming batch at O(batch)). B rows — one parquet part."""
-    weights.coalesce(1).write.mode("overwrite").parquet(path)
+    incoming batch at O(batch)). B rows — one parquet part, committed
+    whole (a failed rebuild keeps the previous table). Returns a read
+    of the committed table."""
+    from ..pipeline.fsio import commit_frame
+
+    return commit_frame(weights.coalesce(1), path)
 
 
 def read_dsir_weights(spark: SparkSession, path: str) -> DataFrame:

@@ -476,10 +476,18 @@ def write_ivf_index(
 ) -> dict:
     """Fit the quantizer and persist the index: ``path/centroids``
     (k rows) + ``path/vectors`` partitioned by ``cell_id``.
-    ``emb`` is any ``(vec_id long, embedding array<float/double>)``."""
+    ``emb`` is any ``(vec_id long, embedding array<float/double>)``.
+    Both are staged under ``path.tmp`` and swapped in as one directory,
+    so a failed rebuild keeps the previous index whole."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
+    from ..pipeline.fsio import _fs, _staged_swap, recover_frame
+
+    spark = emb.sparkSession
+    path = path.rstrip("/")
+    tmp = path + ".tmp"
+    recover_frame(spark, path)
     vecs = emb.select(
         "vec_id",
         array_to_vector(F.col("embedding").cast("array<double>")).alias("features"),
@@ -487,22 +495,23 @@ def write_ivf_index(
     km = KMeans(k=k, seed=seed, maxIter=10, featuresCol="features",
                 predictionCol="cell_id")
     model = km.fit(vecs)
-    spark = emb.sparkSession
     centers = spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         ["cell_id", "center"],
     )
-    centers.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    centers.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/centroids")
     assigned = model.transform(vecs).select(
         "vec_id", "cell_id", vector_to_array("features").alias("v")
     ).persist()
     try:
         assigned.write.mode("overwrite").partitionBy("cell_id").parquet(
-            f"{path}/vectors"
+            f"{tmp}/vectors"
         )
         n = assigned.count()  # served from the persisted assignment
     finally:
         assigned.unpersist()
+    fs, _ = _fs(spark, path)
+    _staged_swap(spark, fs, path, tmp, path + ".pending")
     return {"cells": k, "vectors": n}
 
 
@@ -533,7 +542,10 @@ def append_ivf_index(emb: DataFrame, path: str) -> dict:
     centroids (broadcast, map-side — the per-vector window here spans
     k rows per vector inside one batch partition) and append under the
     cell partitions. O(batch) — the stored corpus is never rescanned."""
+    from ..pipeline.fsio import recover_frame
+
     spark = emb.sparkSession
+    recover_frame(spark, path)  # a crashed rebuild is finished first
     centers = spark.read.parquet(f"{path}/centroids")
     vecs = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")

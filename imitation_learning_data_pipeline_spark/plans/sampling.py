@@ -634,10 +634,11 @@ def export_shards(
     id_col: str = "doc_id",
     shard_seed: str = _SHARD_SEED,
     order_seed: str = _ORDER_SEED,
-) -> None:
+) -> DataFrame:
     """Write ``df`` as a deterministically shuffled, sharded training
     export: ``shard=N`` Hive partitions, one file per shard, rows inside
-    each file in the :func:`shard_plan` order.
+    each file in the :func:`shard_plan` order. The export is committed
+    whole (``fsio.commit_frame``); returns a read of it.
 
     One ``repartition(n, shard)`` shuffle + ``sortWithinPartitions`` —
     partitionBy then streams each task's (already sorted) rows into its
@@ -645,18 +646,18 @@ def export_shards(
     materialization. Deterministic end to end: same input + seeds →
     byte-stable shard membership and row order.
     """
+    from ..pipeline.fsio import commit_frame
+
     u1 = md5_unit_interval(id_col, seed=shard_seed)
     u2 = md5_unit_interval(id_col, seed=order_seed)
-    (
+    ordered = (
         df.withColumn("shard", F.floor(u1 * n_shards).cast("long"))
         .withColumn("__u2", u2)
         .repartition(n_shards, F.col("shard"))
         .sortWithinPartitions("shard", "__u2", id_col)
         .drop("__u2")
-        .write.partitionBy("shard")
-        .mode("overwrite")
-        .parquet(path)
     )
+    return commit_frame(ordered, path, partition_by=("shard",))
 
 
 @register(

@@ -451,3 +451,98 @@ def test_dedup_store_flag_validation(capsys):
     with pytest.raises(SystemExit):
         _run(capsys, ["dedup", "--input", "x", "--out", "y",
                       "--fold-into-store"])
+
+
+def test_flag_refusals_start_no_session(monkeypatch, tmp_path):
+    """dedup, ingest-warc and expect refuse a bad flag combination in
+    their pre-session ``check``: exit 1 with the message, no session."""
+    from conftest import run_cli
+
+    from imitation_learning_data_pipeline_spark import session
+    from imitation_learning_data_pipeline_spark.cli import build_parser
+
+    calls = []
+
+    def no_session(*args, **kwargs):
+        calls.append(args)
+        raise RuntimeError("session started")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    rules = tmp_path / "rules.json"
+    rules.write_text(json.dumps(["not", "an", "object"]))
+    for argv, message in (
+        (["dedup", "--input", "x", "--out", "y", "--method", "simhash",
+          "--threshold", "0.5"], "--threshold does not apply"),
+        (["ingest-warc", "--input", "x", "--out", "y", "--wet",
+          "--main-content"], "HTML gates"),
+        (["expect", "--path", "x", "--rules", str(rules)], "JSON object"),
+    ):
+        assert build_parser().parse_args(argv).check is not None, argv
+        res = run_cli(argv)
+        assert res.returncode == 1 and message in res.stderr, (argv, res.stderr)
+    assert calls == []
+    # the patch is live: a verb past its check asks for the session once
+    res = run_cli(["history", "--path", str(tmp_path)])
+    assert res.returncode == 1 and "session started" in res.stderr
+    assert calls == [("neura-history",)]
+
+
+def test_verbs_run_library_calls_wrapped_after_import(
+    spark, lerobot_fixture, tmp_path, monkeypatch
+):
+    """A wrapper set on a library module after ``cli`` is imported (how
+    perfbench/child.py traces its LIBRARY_CALLS) is the one a verb runs."""
+    from conftest import run_cli
+
+    from imitation_learning_data_pipeline_spark import cli  # noqa: F401
+    from imitation_learning_data_pipeline_spark.pipeline import align
+    from imitation_learning_data_pipeline_spark.plans import curation
+
+    called = []
+
+    def wrap(module, name):
+        fn = getattr(module, name)
+
+        def wrapper(*args, **kwargs):
+            called.append(name)
+            return fn(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, wrapper)
+
+    wrap(align, "align_transform")
+    wrap(curation, "curation_funnel")
+    res = run_cli(["align-transform", "--data-root", str(lerobot_fixture),
+                   "--out", str(tmp_path / "norm"), "--no-normalize"])
+    assert res.returncode == 0, res.stderr[-2000:]
+    docs = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(1, "the cat sat on the mat and then it went out to play")],
+        "doc_id long, text string",
+    ).write.parquet(docs)
+    res = run_cli(["curate", "--path", docs, "--stages", "pii"])
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert called == ["align_transform", "curation_funnel"]
+
+
+def test_main_is_the_only_runner():
+    """Source guard: ``main`` alone starts the session and prints the
+    summary line; verbs print rows only through ``_print_rows``."""
+    import ast
+    import inspect
+    import re
+
+    from imitation_learning_data_pipeline_spark import cli
+
+    src = inspect.getsource(cli)
+    assert not re.search(r"\b_spark\(", src)
+    where = {"get_spark": [], "json.dumps": []}
+    for top in ast.parse(src).body:
+        name = getattr(top, "name", "<module>")
+        for n in ast.walk(top):
+            if isinstance(n, ast.Call) and getattr(n.func, "id", None) == "get_spark":
+                where["get_spark"].append(name)
+            if (isinstance(n, ast.Attribute) and n.attr == "dumps"
+                    and getattr(n.value, "id", None) == "json"):
+                where["json.dumps"].append(name)
+    assert where["get_spark"] == ["main"]
+    assert sorted(where["json.dumps"]) == ["_print_rows", "main"]

@@ -113,6 +113,32 @@ class TestDsirReingestFold:
         assert [tuple(r) for r in folded] == [tuple(r) for r in single]
 
 
+class TestDsirWeightStoreCommit:
+    def test_failed_rewrite_keeps_the_previous_table(self, spark, tmp_path):
+        """A weight-table rebuild that fails in its write stage leaves
+        the previous table readable (it is committed whole)."""
+        from imitation_learning_data_pipeline_spark.plans.dsir import (
+            read_dsir_weights,
+            write_dsir_weights,
+        )
+
+        path = str(tmp_path / "w")
+        write_dsir_weights(spark.range(10).selectExpr("id AS bkt", "id * 2 AS w_int"), path)
+
+        @F.udf("long")
+        def boom(v):
+            if v == 7:
+                raise ValueError("injected write failure")
+            return v * 3
+
+        # no shuffle under coalesce(1): the UDF raises in the write stage
+        bad = spark.range(20).select(F.col("id").alias("bkt"), boom("id").alias("w_int"))
+        with pytest.raises(Exception, match="injected write failure"):
+            write_dsir_weights(bad, path)
+        rows = sorted((r.bkt, r.w_int) for r in read_dsir_weights(spark, path).collect())
+        assert rows == [(i, 2 * i) for i in range(10)]
+
+
 class TestDsirBroadcastGate:
     def test_parse_bytes(self):
         from imitation_learning_data_pipeline_spark.plans.dsir import _parse_bytes

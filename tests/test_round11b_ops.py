@@ -564,6 +564,58 @@ class TestIvfIndexStore:
         assert top[0].vec_id == 1000 and top[0].cos_sim >= 0.9999
 
 
+    def test_failed_rebuild_keeps_the_previous_index(self, spark, tmp_path):
+        """A rebuild that fails while writing its vectors leaves the
+        previous centroids AND vectors, so searches still answer from
+        the first build; the next write discards the failed staging."""
+        import os
+
+        from conftest import run_cli
+
+        from imitation_learning_data_pipeline_spark.plans.mllib_ops import (
+            append_ivf_index,
+            write_ivf_index,
+        )
+
+        emb = self._emb(spark)
+        path = str(tmp_path / "ivf")
+        write_ivf_index(emb, path, k=3)
+
+        def index():
+            centroids = spark.read.parquet(f"{path}/centroids").collect()
+            vectors = spark.read.parquet(f"{path}/vectors").collect()
+            return (sorted((r.cell_id, tuple(r.center)) for r in centroids),
+                    sorted((r.vec_id, r.cell_id) for r in vectors))
+
+        first = index()
+        emb.filter("vec_id < 3").write.parquet(str(tmp_path / "q"))
+        query = ["ivf", "--path", path, "--query", str(tmp_path / "q"),
+                 "--nprobe", "3", "--topk", "5"]
+        before = run_cli(query)
+        assert before.returncode == 0, before.stderr[-2000:]
+
+        @F.udf("long")
+        def boom(v):
+            if v == 7:
+                raise ValueError("injected write failure")
+            return v
+
+        # shifted vectors: a rebuild that landed would move the centroids
+        bad = emb.select(
+            boom("vec_id").alias("vec_id"),
+            F.transform("embedding", lambda x: x + 5.0).alias("embedding"),
+        )
+        with pytest.raises(Exception, match="injected write failure"):
+            write_ivf_index(bad, path, k=3)
+        assert index() == first
+        after = run_cli(query)
+        assert after.returncode == 0 and after.stdout == before.stdout
+
+        assert os.path.exists(path + ".tmp")
+        append_ivf_index(emb.filter("vec_id = 0").selectExpr("1000 AS vec_id", "embedding"), path)
+        assert not os.path.exists(path + ".tmp")
+
+
 class TestIvfCli:
     def test_build_append_query_fraction(self, spark, tmp_path, capsys):
         import json

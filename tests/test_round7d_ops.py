@@ -243,6 +243,28 @@ class TestManifest:
         assert cli_main(["manifest", "--path", t]) == 0
         assert cli_main(["manifest", "--path", t, "--verify"]) == 0
 
+    def test_manifest_verify_cli_fails_when_a_listed_file_is_gone(
+        self, spark, tmp_path, capsys
+    ):
+        """The gate path: --verify exits 1, and its summary names the
+        data file that vanished from under the manifest."""
+        import glob
+        import json
+        import os
+
+        from imitation_learning_data_pipeline_spark.cli import main as cli_main
+
+        t = str(tmp_path / "t")
+        self._write(spark, t)
+        assert cli_main(["manifest", "--path", t]) == 0
+        gone = os.path.basename(sorted(glob.glob(f"{t}/*.parquet"))[0])
+        os.remove(f"{t}/{gone}")
+        capsys.readouterr()
+        assert cli_main(["manifest", "--path", t, "--verify"]) == 1
+        summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert summary["missing"] == []
+        assert [os.path.basename(f) for f in summary["extra"]] == [gone]
+
 
 class TestSemDeDup:
     """SemDeDup (plans/mllib_ops.py::semdedup): cluster-blocked semantic
